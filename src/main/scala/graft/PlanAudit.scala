@@ -214,18 +214,10 @@ object PlanAudit {
 
   private def prodAudit(d: String, benchJson: String, topN: Int,
       assertPins: Boolean = false): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      // PRODUCTION knobs: AQE on, real shuffle-partition width; the
-      // bench's 8-partition/AQE-off constants are bench-only
-      // (BASELINE.md round-13 sweep)
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.sources.Tables.configure(spark)
+    // PRODUCTION knobs: AQE on (auditOne flips it per run), real
+    // shuffle-partition width; the bench's 8-partition/AQE-off constants
+    // are bench-only (BASELINE.md round-13 sweep)
+    val spark = Harness.session(Harness.auditConf, logLevel = "ERROR")
 
     val txt = try Files.readString(Paths.get(benchJson)) catch {
       case _: java.io.IOException => ""
@@ -301,15 +293,7 @@ object PlanAudit {
       // the named queries under the prod-audit session — for
       // adjudicating pin/lineage flags by eyeball.
       val d = args(1)
-      val spark = SparkSession.builder()
-        .master("local[32]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.extensions", "graft.GraftExtensions")
-        .config("spark.ui.enabled", "false").getOrCreate()
-      spark.sparkContext.setLogLevel("ERROR")
-      graft.sources.Tables.configure(spark)
+      val spark = Harness.session(Harness.auditConf, logLevel = "ERROR")
       args.drop(2).foreach { name =>
         for (aqe <- Seq(false, true)) {
           spark.conf.set("spark.sql.adaptive.enabled", aqe.toString)
@@ -336,19 +320,13 @@ object PlanAudit {
       return
     }
     val d = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "32")
-      // AQE off for the audit: a single static tree per query (codegen
-      // ids inline, each scan printed once). Bench/production run with
-      // AQE on, which further broadcast-replans joins and coalesces
-      // partitions from runtime stats on top of what is shown here.
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.sources.Tables.configure(spark)
+    // AQE off for the audit: a single static tree per query (codegen
+    // ids inline, each scan printed once). Bench/production run with
+    // AQE on, which further broadcast-replans joins and coalesces
+    // partitions from runtime stats on top of what is shown here.
+    val spark = Harness.session(
+      Harness.auditConf + ("spark.sql.adaptive.enabled" -> "false"),
+      logLevel = "ERROR")
 
     val sb = new StringBuilder
     sb.append("# Physical-plan audit\n\n")

@@ -1,34 +1,23 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
-/** Scratch profiling main (not part of the driver contract). */
+/** Profiling main, on the bench's session (`Harness.benchConf`) so its
+  * timings transfer to `Bench`.
+  * Corpus: `SPARK_GRAFT_SF_DIR` (default sf0.1). Modes:
+  *   - `time_q <name>...` — warm min-of-3 per registry query;
+  *   - `explain_q <outDir> <suffix> <name>...` — formatted physical plans;
+  *   - `gen_scale <mult> <outDir>` — key-offset near-replica corpus;
+  *   - `gen_fresh <mult> <outDir>` — fresh-key Zipf-text corpus.
+  * The one-off decomposition modes whose results BASELINE.md cites
+  * (`conf_sweep`, `q129_stages`, `q161_sub`, ...) were removed; read them
+  * at `git show 4f82cb1:src/main/scala/graft/Prof.scala`. */
 object Prof {
   def main(args: Array[String]): Unit = {
+    val modes = Seq("time_q", "explain_q", "gen_scale", "gen_fresh")
+    require(args.headOption.exists(modes.contains),
+      s"usage: Prof ${modes.mkString("|")} <args> (see the Prof scaladoc)")
     QuerySupport.singlePartitionFinals = true // harness JVM: bench-scale finals
     val d = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
-      // same knobs as graft.Bench so A/Bs here transfer to the bench
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTS", "8"))
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "false"))
-      .config("spark.sql.constraintPropagation.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_CONSTRAINTS", "false"))
-      // local[N] shuffles never cross a network and mostly hit the page
-      // cache, so block compression is pure CPU cost — A/B knob (core
-      // conf: must be set before the context starts, hence env-only)
-      .config("spark.shuffle.compress",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_COMPRESS", "true"))
-      .config("spark.shuffle.spill.compress",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_COMPRESS", "true"))
-      .config("spark.broadcast.compress",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_COMPRESS", "true"))
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.sources.Tables.configure(spark)
+    val spark = Harness.session(Harness.benchConf)
     def t(name: String)(df: => org.apache.spark.sql.DataFrame): Unit = {
       val ts = (1 to 3).map { _ =>
         val t0 = System.nanoTime()
@@ -40,20 +29,6 @@ object Prof {
     }
     spark.range(1000000L).selectExpr("sum(id)").collect()
     import org.apache.spark.sql.functions._
-    def asofPair(native: Boolean) = {
-      val left = spark.read.parquet(s"$d/events.parquet")
-        .select(col("event_id"), col("user_id").as("k"), col("ts"))
-      val right = spark.read.parquet(s"$d/orders.parquet")
-        .groupBy(col("o_custkey").as("k"), col("o_orderdate"))
-        .agg(max(col("o_totalprice")).as("price"))
-        .withColumnRenamed("o_orderdate", "od")
-      if (native)
-        graft.operators.Relational.asofJoinNative(left, right, "k", "ts",
-          "od", Seq("price"))
-      else
-        graft.operators.Relational.asofJoin(left, right, "k", "ts", "od",
-          Seq("price"))
-    }
     if (args.headOption.contains("time_q")) {
       // Generic per-query timer (round 17): `time_q <name>...` runs each
       // named SparkEntry registry query with the bench's noop-write sink
@@ -85,980 +60,6 @@ object Prof {
           java.nio.file.Paths.get(s"$outDir/${n}_$suffix.txt"), plan)
         spark.catalog.clearCache()
         println(s"wrote $outDir/${n}_$suffix.txt")
-      }
-    } else if (args.headOption.contains("q89_sub")) {
-      // q89 strict-subset decomposition (round-17 verdict item 1, the
-      // q198/q167 adjudication shape, same-JVM warm min-of-3):
-      //   (a) sets_alone  — shingle explode + one hash agg to per-shingle
-      //       sorted source sets: the input every correct cross-source
-      //       overlap audit must form;
-      //   (b) pair_agg    — (a) + the fused pair+singleton explode and
-      //       (a,b) aggregation (everything but the final size attach);
-      //   (c) whole       — the registry query (incl. ordered1 final).
-      // If (a) alone rivals the ~0.31 s oracle, the residual is
-      // stage-constant, not plan waste.
-      val docs = graft.sources.Tables.parallel(
-        spark.read.parquet(s"$d/documents.parquet"))
-      def setsAlone() = docs
-        .withColumn("__toks", graft.functions.TextFunctions.tokens(col("text")))
-        .select(col("source"), explode(array_distinct(transform(
-          sequence(lit(1), greatest(size(col("__toks")) - 2, lit(1))),
-          i => concat_ws(" ", slice(col("__toks"), i, lit(3)))))).as("__g"))
-        .groupBy(col("__g"))
-        .agg(sort_array(collect_set(col("source"))).as("__ss"))
-      def pairAgg() = setsAlone()
-        .select(explode(concat(
-          flatten(transform(col("__ss"), (x, i) =>
-            transform(slice(col("__ss"), i + lit(2), size(col("__ss")) - i - 1),
-              y => struct(x.as("a"), y.as("b"))))),
-          transform(col("__ss"),
-            x => struct(x.as("a"), lit(null).cast("string").as("b"))))).as("__pr"))
-        .groupBy(col("__pr.a").as("__a"), col("__pr.b").as("__b"))
-        .agg(count(lit(1)).as("__n"))
-      def whole() = SparkEntry.queries("q89_source_overlap")(spark, d)
-      (1 to 3).foreach { _ =>
-        t("q89_sets_alone")(setsAlone())
-        t("q89_pair_agg")(pairAgg())
-        t("q89_whole")(whole())
-        spark.catalog.clearCache()
-      }
-    } else if (args.headOption.contains("q89_mask")) {
-      // Round-18 shave candidate A/B: stock sourceOverlap (per-shingle
-      // sorted collect_set(source) sets + fused struct-pair explode +
-      // full second aggregation over the exploded pair stream) vs a
-      // BITMASK shape — sources indexed 0..s-1 (s ≤ 63, bounded by
-      // construction), the per-shingle set becomes one bit_or(1L<<i)
-      // long, the second aggregation collapses the gram-mass stream to
-      // ≤ 2^s mask-count rows map-side, and the pair expansion runs
-      // over THAT tiny frame instead of per gram. Identical algebra:
-      // n_shared(a,b) = Σ_{mask ⊇ {a,b}} count(mask).
-      val docs = graft.sources.Tables.parallel(
-        spark.read.parquet(s"$d/documents.parquet"))
-      def stock() = SparkEntry.queries("q89_source_overlap")(spark, d)
-      def maskShape() = {
-        val srcField = docs.schema("source")
-        val srcRows = docs.select(col("source")).distinct()
-          .orderBy(col("source")).collect()
-        require(srcRows.length <= 63, s"mask shape needs <=63 sources")
-        val idxRows = srcRows.zipWithIndex.map { case (r, i) =>
-          org.apache.spark.sql.Row(r.get(0), i) }
-        val idxDf = spark.createDataFrame(
-          new java.util.ArrayList(java.util.Arrays.asList(idxRows: _*)),
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("__srcv", srcField.dataType),
-            org.apache.spark.sql.types.StructField("__i",
-              org.apache.spark.sql.types.IntegerType, nullable = false))))
-        val nSrc = srcRows.length
-        val maskCounts = docs
-          .join(broadcast(idxDf), col("source") === col("__srcv"))
-          .withColumn("__toks", graft.functions.TextFunctions.tokens(col("text")))
-          .select(col("__i"), explode(array_distinct(transform(
-            sequence(lit(1), greatest(size(col("__toks")) - 2, lit(1))),
-            i => concat_ws(" ", slice(col("__toks"), i, lit(3)))))).as("__g"))
-          .groupBy(col("__g"))
-          .agg(bit_or(call_function("shiftleft", lit(1L), col("__i"))).as("__m"))
-          .groupBy(col("__m")).agg(count(lit(1)).as("__c"))
-        // bit positions of each mask, ascending == source sort order
-        val bits = filter(sequence(lit(0), lit(nSrc - 1)),
-          b => call_function("shiftright", col("__m"), b)
-            .bitwiseAND(lit(1L)) === lit(1L))
-        val agged = maskCounts
-          .select(col("__c"), explode(concat(
-            flatten(transform(bits, (x, i) =>
-              transform(slice(bits, i + lit(2), size(bits) - i - 1),
-                y => struct(x.as("a"), y.as("b"))))),
-            transform(bits,
-              x => struct(x.as("a"), lit(null).cast("int").as("b"))))).as("__pr"))
-          .groupBy(col("__pr.a").as("__ia"), col("__pr.b").as("__ib"))
-          .agg(sum(col("__c")).as("__n"))
-          .persist()
-        val nameMap = idxDf.agg(map_from_entries(
-          collect_list(struct(col("__i"), col("__srcv")))).as("__names"))
-        val sizeMap = agged.filter(col("__ib").isNull)
-          .agg(map_from_entries(collect_list(struct(col("__ia"), col("__n"))))
-            .as("__m"))
-        agged.filter(col("__ib").isNotNull)
-          .crossJoin(broadcast(sizeMap))
-          .crossJoin(broadcast(nameMap))
-          .select(element_at(col("__names"), col("__ia")).as("source_a"),
-            element_at(col("__names"), col("__ib")).as("source_b"),
-            col("__n").as("n_shared"),
-            round(col("__n").cast("double") /
-              (element_at(col("__m"), col("__ia")) +
-                element_at(col("__m"), col("__ib")) - col("__n")), 6)
-              .as("jaccard"))
-          .transform(QuerySupport.ordered1(_, col("source_a"), col("source_b")))
-      }
-      (1 to 3).foreach { _ =>
-        t("q89_stock")(stock())
-        spark.catalog.clearCache()
-        t("q89_bitmask")(maskShape())
-        spark.catalog.clearCache()
-      }
-    } else if (args.headOption.contains("q161_sub")) {
-      // q161 decomposition + sort-shape A/B (round-19 verdict item 4).
-      // Strict subsets of the standardize query:
-      //   (a) scan_project — the 5-column projection every correct
-      //       program must read;
-      //   (b) fit_agg     — the one-pass stats aggregation alone;
-      //   (c) transform   — fit + the per-row z/mm pass, NO final sort;
-      //   (d) whole       — the registry query (adds orderedWide's
-      //       range sort, whose sampling pass re-executes (c)).
-      // Plus one shave candidate: (e) persist_sort — materialize (c)
-      // once, then range-sort the cached frame (the sampler reads the
-      // cache instead of re-running the projection).
-      val li = graft.sources.Tables.parallel(
-        spark.read.parquet(s"$d/lineitem.parquet"))
-      val keyC = Seq("l_orderkey", "l_linenumber")
-      val valC = Seq("l_quantity", "l_extendedprice", "l_discount")
-      val sortKeys = Seq(col("l_orderkey"), col("l_linenumber"),
-        col("l_extendedprice_z"), col("l_quantity_z"), col("l_discount_z"),
-        col("l_extendedprice_mm"), col("l_quantity_mm"), col("l_discount_mm"))
-      def scanProject() = li.select((keyC ++ valC).map(col): _*)
-      def fitAgg() = {
-        val aggs = valC.flatMap { c =>
-          val q = graft.functions.Decimals.unscaledLong(col(c), 2)
-            .cast(org.apache.spark.sql.types.DecimalType(38, 0))
-          Seq(sum(q).as(s"__s_$c"), sum(q * q).as(s"__ss_$c"),
-            count(col(c)).as(s"__n_$c"),
-            min(col(c)).as(s"__min_$c"), max(col(c)).as(s"__max_$c"))
-        }
-        li.agg(aggs.head, aggs.tail: _*)
-      }
-      def transformNoSort() =
-        graft.operators.Features.standardize(li, keyC, valC, scale = 2)
-      def whole() = SparkEntry.queries("q161_feature_scale")(spark, d)
-      def persistSort() = {
-        val b = transformNoSort().persist()
-        b.orderBy(sortKeys: _*)
-      }
-      (1 to 3).foreach { _ =>
-        t("q161_scan_project")(scanProject())
-        t("q161_fit_agg")(fitAgg())
-        t("q161_transform")(transformNoSort())
-        t("q161_whole")(whole())
-        t("q161_persist_sort")(persistSort())
-        spark.catalog.clearCache()
-      }
-    } else if (args.headOption.contains("q161_plans")) {
-      // plans/r19 evidence for the orderedWide persist shave: before =
-      // the transform range-sorted directly (the sampler re-executes the
-      // projection), after = the registry query (sort over the persisted
-      // frame — the sort's child is an InMemoryTableScan).
-      val outDir = args(1)
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
-      def explainStr(df: org.apache.spark.sql.DataFrame): String =
-        df.asInstanceOf[org.apache.spark.sql.classic.Dataset[org.apache.spark.sql.Row]]
-          .queryExecution
-          .explainString(org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-      val li = graft.sources.Tables.parallel(
-        spark.read.parquet(s"$d/lineitem.parquet"))
-      val sortKeys = Seq(col("l_orderkey"), col("l_linenumber"),
-        col("l_extendedprice_z"), col("l_quantity_z"), col("l_discount_z"),
-        col("l_extendedprice_mm"), col("l_quantity_mm"), col("l_discount_mm"))
-      val before = graft.operators.Features.standardize(li,
-          Seq("l_orderkey", "l_linenumber"),
-          Seq("l_quantity", "l_extendedprice", "l_discount"), scale = 2)
-        .orderBy(sortKeys: _*)
-      java.nio.file.Files.writeString(java.nio.file.Paths.get(
-        s"$outDir/q161_feature_scale_before.txt"), explainStr(before))
-      spark.catalog.clearCache()
-      val after = SparkEntry.queries("q161_feature_scale")(spark, d)
-      java.nio.file.Files.writeString(java.nio.file.Paths.get(
-        s"$outDir/q161_feature_scale_after.txt"), explainStr(after))
-      spark.catalog.clearCache()
-      println(s"wrote $outDir/q161_feature_scale_{before,after}.txt")
-    } else if (args.headOption.contains("q142_skip")) {
-      // Row-group skipping evidence for the z-order write (round-19
-      // verdict item 6): write the SAME rows twice — z-ordered vs
-      // unclustered — then run one selective two-dimensional predicate
-      // over each and read the PARQUET SCAN node's numOutputRows metric.
-      // With footer-stats pruning, the z-ordered scan emits only the
-      // surviving row groups' rows; the unclustered scan emits ~all rows
-      // and the post-scan filter drops them. Also dumps the filtered
-      // scan's formatted plan (PushedFilters) for plans/r19.
-      val outDir = args.lift(1).getOrElse("plans/r19")
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
-      val rows = spark.read.parquet(s"$d/lineitem.parquet")
-        .select("l_orderkey", "l_partkey", "l_suppkey")
-      val zdir = java.nio.file.Files.createTempDirectory("q142z").toString + "/t"
-      val udir = java.nio.file.Files.createTempDirectory("q142u").toString + "/t"
-      graft.operators.Maintenance.zorderWrite(spark, rows,
-        Seq("l_partkey", "l_suppkey"), zdir, numFiles = 8, bitsPerDim = 4)
-      rows.repartition(8).write.mode("overwrite").parquet(udir)
-      def probe(dir: String, label: String): Unit = {
-        val df = spark.read.parquet(dir)
-          .filter(col("l_partkey") <= 1000 && col("l_suppkey") <= 100)
-        val qe = df
-          .asInstanceOf[org.apache.spark.sql.classic.Dataset[org.apache.spark.sql.Row]]
-          .queryExecution
-        qe.executedPlan.execute().foreach(_ => ())
-        val scans = qe.executedPlan.collect {
-          case s: org.apache.spark.sql.execution.FileSourceScanExec => s }
-        scans.foreach { s =>
-          val out = s.metrics.get("numOutputRows").map(_.value).getOrElse(-1L)
-          println(f"$label%-12s scan numOutputRows=$out " +
-            s"pushed=${s.metadata.getOrElse("PushedFilters", "?")}")
-        }
-        if (label == "zordered")
-          java.nio.file.Files.writeString(
-            java.nio.file.Paths.get(s"$outDir/q142_skipping_scan.txt"),
-            qe.explainString(
-              org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
-      }
-      val total = rows.count()
-      println(s"total rows=$total")
-      (1 to 2).foreach { _ => probe(zdir, "zordered"); probe(udir, "unclustered") }
-      org.apache.commons.io.FileUtils.deleteDirectory(
-        new java.io.File(zdir).getParentFile)
-      org.apache.commons.io.FileUtils.deleteDirectory(
-        new java.io.File(udir).getParentFile)
-    } else if (args.headOption.contains("merge_firstload_plan")) {
-      // plans/r19 evidence for the Merge first-load fast path: before =
-      // the full-outer upsert against an empty slice (SortMergeJoin +
-      // both exchanges), after = the insert-only projection the fast
-      // path now takes when the target does not exist.
-      val outDir = args(1)
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
-      def explainStr(df: org.apache.spark.sql.DataFrame): String =
-        df.asInstanceOf[org.apache.spark.sql.classic.Dataset[org.apache.spark.sql.Row]]
-          .queryExecution
-          .explainString(org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-      val now = lit("2024-06-01 10:00:00").cast("timestamp")
-      val src = spark.read.parquet(s"$d/orders.parquet")
-        .select(col("o_orderkey").as("k"), col("o_orderpriority").as("v"),
-          date_format(col("o_orderdate"), "yyyy-MM").as("day"))
-        .withColumn("ins", lit(null).cast("timestamp"))
-        .withColumn("upd", lit(null).cast("timestamp"))
-      val empty = spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], src.schema)
-      val dataCols = Seq("day", "k", "v")
-      val before = graft.operators.Merge.upsert(empty, src, "k", dataCols,
-        audit = Some(("ins", "upd", now)))
-      val after = src.select(dataCols.map(col) ++ Seq(now.as("ins"),
-        lit(null).cast("timestamp").as("upd")): _*)
-      java.nio.file.Files.writeString(java.nio.file.Paths.get(
-        s"$outDir/q129_merge1_firstload_before.txt"), explainStr(before))
-      java.nio.file.Files.writeString(java.nio.file.Paths.get(
-        s"$outDir/q129_merge1_firstload_after.txt"), explainStr(after))
-      println(s"wrote $outDir/q129_merge1_firstload_{before,after}.txt")
-    } else if (args.headOption.contains("q55_sub")) {
-      // q55 decomposition (round-19 verdict item 4): the bucketized
-      // interval join's strict subsets.
-      //   (a) sess_alone — sessionStats over events (the input every
-      //       correct program must form);
-      //   (b) join_nosort — (a) + intervalJoin, NO final sort;
-      //   (c) whole — the registry query (adds ordered1).
-      val ev = graft.sources.Tables.load(spark, d, "events")
-      def sess() = graft.operators.Sessionize.sessionStats(ev, "user_id",
-          "ts", gapSeconds = 600, measure = count(lit(1)).as("__m"),
-          tieBreak = Seq(col("event_id")))
-        .select(col("user_id"), col("s_start"), col("s_last"))
-      def joinNoSort() = graft.operators.Relational.intervalJoin(
-          ev.select("event_id", "user_id", "ts"), sess(),
-          "user_id", "ts", "s_start", "s_last", bucketSeconds = 600)
-        .select("event_id", "user_id", "ts", "s_start", "s_last")
-      def whole() = SparkEntry.queries("q55_interval_join")(spark, d)
-      (1 to 3).foreach { _ =>
-        t("q55_sess_alone")(sess())
-        t("q55_join_nosort")(joinNoSort())
-        t("q55_whole")(whole())
-      }
-    } else if (args.headOption.contains("q129_stages")) {
-      // q129 stage breakdown (round-19 verdict item 6): wall time per
-      // phase of the partition-scoped disk merge, fresh temp dir per
-      // round (no cross-run reuse). Phases: the day-1 staging batch
-      // alone (noop), each mergeIntoTargetPartitioned (disk write), the
-      // partitioned read-back + single-partition sort (noop).
-      import graft.{TradeInQueries => TQ}
-      import graft.pipeline.TradeInPipeline
-      (1 to 3).foreach { r =>
-        val base = TQ.narrowBase(spark, d)
-          .repartition(spark.sparkContext.defaultParallelism, col("k"))
-          .persist()
-        val day1 = TQ.widen(base.filter(col("k") % 3 =!= 0))
-        val day2 = TQ.widen(base.filter(col("k") % 2 === 0))
-          .withColumn("__dup", explode(
-            when(col("__k") % 10 === 0, array(lit(false), lit(true)))
-              .otherwise(array(lit(false)))))
-          .withColumn("TradeInAmount",
-            when(col("__dup"), expr(TQ.dec2("130.0", "__p")))
-              .otherwise(expr(TQ.dec2("120.0", "__p"))))
-          .withColumn("TradeInDate",
-            when(col("__dup"), concat(
-              date_format(col("__ts") + expr("INTERVAL 1 DAY"),
-                "yyyy-MM-dd'T'HH:mm:ss.SSSSSS"), lit("Z")))
-              .otherwise(col("TradeInDate")))
-        val workRoot = java.nio.file.Files.createTempDirectory("graft_q129prof")
-        val work = workRoot.toString + "/target"
-        val month = date_format(col("TradeInDate"), "yyyy-MM")
-        def ph(n: String)(f: => Unit): Unit = {
-          val t0 = System.nanoTime()
-          f
-          println(f"  r$r $n: ${(System.nanoTime() - t0) / 1e9}%.2f")
-        }
-        ph("stage_day1_noop")(
-          TradeInPipeline.stage(day1, TQ.nowLit(TQ.Now1))
-            .write.format("noop").mode("overwrite").save())
-        ph("merge1_write")(
-          TradeInPipeline.mergeIntoTargetPartitioned(spark, work,
-            TradeInPipeline.stage(day1, TQ.nowLit(TQ.Now1)),
-            TQ.nowLit(TQ.Now1), partDay = month))
-        ph("merge2_write")(
-          TradeInPipeline.mergeIntoTargetPartitioned(spark, work,
-            TradeInPipeline.stage(day2, TQ.nowLit(TQ.Now2)),
-            TQ.nowLit(TQ.Now2), partDay = month))
-        ph("readback_sort")(
-          spark.read.parquet(work)
-            .select(col("SaleInvoiceID"),
-              col("TradeInAmount").cast("double").as("TradeInAmount"),
-              col("TradeInDate"), col("TradeInDateEST"),
-              col("ETLRowInsertedEST"), col("ETLRowUpdatedEST"))
-            .transform(QuerySupport.ordered1(_, col("SaleInvoiceID")))
-            .write.format("noop").mode("overwrite").save())
-        base.unpersist()
-        org.apache.commons.io.FileUtils.deleteDirectory(workRoot.toFile)
-      }
-    } else if (args.headOption.contains("q256_ab")) {
-      // round-17 shave A/B: weightedContamination WITH vs WITHOUT the
-      // global (doc, gram) distinct — the frame is distinct by
-      // construction (array_distinct within doc × unique ids), so the
-      // .distinct() was one full-width exchange of the plan's biggest
-      // frame. Same-JVM interleaved, warm min-of-3.
-      val docs = graft.sources.Tables.parallel(
-        spark.read.parquet(s"$d/documents.parquet"))
-      val train = docs.filter(col("doc_id") % 20 =!= 7)
-      val ev = docs.filter(col("doc_id") % 20 === 7)
-      val k = 3
-      def gramSet(df: org.apache.spark.sql.DataFrame,
-          cols: Seq[org.apache.spark.sql.Column]) = {
-        val toks = graft.functions.TextFunctions.tokens(col("text"))
-        df.withColumn("__toks", toks).select(cols :+
-          explode(array_distinct(transform(
-            sequence(lit(1), greatest(size(col("__toks")) - (k - 1), lit(1))),
-            i => md5(concat_ws(" ", slice(col("__toks"), i, lit(k)))))))
-            .as("__h"): _*)
-      }
-      def scored(distinctFirst: Boolean) = {
-        val tg0 = gramSet(train, Seq(col("doc_id")))
-        val tg = if (distinctFirst) tg0.distinct() else tg0
-        val dfCounts = tg.groupBy(col("__h")).agg(count(lit(1)).as("__df"))
-        val evalGrams = gramSet(ev, Seq.empty).select(col("__h")).distinct()
-          .withColumn("__in_eval", lit(1L))
-        tg.join(dfCounts, "__h")
-          .withColumn("__w", floor(lit(1000000L) / col("__df")).cast("long"))
-          .join(broadcast(evalGrams), Seq("__h"), "left")
-          .groupBy(col("doc_id"))
-          .agg(count(lit(1)).as("n_grams"),
-            coalesce(sum(col("__in_eval")), lit(0L)).as("n_overlap"),
-            sum(col("__w")).as("__tw"),
-            coalesce(sum(when(col("__in_eval") === 1L, col("__w"))), lit(0L))
-              .as("__ow"))
-          .filter(col("n_overlap") >= 1L)
-          .select(col("doc_id"), col("n_grams"), col("n_overlap"),
-            round(col("__ow").cast("double") / col("__tw").cast("double"), 6)
-              .as("weighted_share"))
-      }
-      (1 to 3).foreach { _ =>
-        t("q256_with_distinct")(scored(distinctFirst = true))
-        t("q256_no_distinct")(scored(distinctFirst = false))
-      }
-    } else if (args.headOption.contains("q87_sub")) {
-      // q87 strict-subset decomposition (round-17 watchlist): (a) the
-      // per-key count aggregation over lineitem — the input every skew
-      // audit must form — vs (b) counts + top-k extraction vs (c) the
-      // whole query (adds the 1-row totals broadcast + derived
-      // arithmetic on topK rows). If (a) alone rivals the oracle's
-      // whole-query time, the residual is stage-constant, not plan
-      // waste (the q198/q167 adjudication shape).
-      val li = spark.read.parquet(s"$d/lineitem.parquet")
-      def counts() = li.groupBy(col("l_orderkey").as("__k"))
-        .agg(count(lit(1)).as("n_rows"))
-        .select(col("__k").cast("string").as("key"), col("n_rows"))
-      def topk() = counts().orderBy(col("n_rows").desc, col("key").asc)
-        .limit(25)
-      (1 to 3).foreach { _ =>
-        t("q87_counts_alone")(counts())
-        t("q87_counts_topk")(topk())
-        t("q87_whole")(graft.operators.Relational.skewAudit(
-          li, col("l_orderkey"), topK = 25))
-      }
-    } else if (args.headOption.contains("asof_ab")) {
-      (1 to 2).foreach { _ =>
-        t("asof_composed")(asofPair(native = false))
-        t("asof_native")(asofPair(native = true))
-      }
-    } else if (args.headOption.contains("q160_ab")) {
-      // q160 final-sort shape A/B at its 150k-row output size.
-      val base = graft.operators.Features.looTargetEncode(
-        graft.sources.Tables.parallel(
-          spark.read.parquet(s"$d/orders.parquet")),
-        "o_orderkey", "o_orderpriority", "o_totalprice",
-        scale = 2, smoothing = 10.0)
-      (1 to 3).foreach { _ =>
-        t("q160_single")(base.repartition(1)
-          .sortWithinPartitions(col("o_orderkey")))
-        t("q160_range")(base.orderBy(col("o_orderkey")))
-      }
-    } else if (args.headOption.contains("q167_ab")) {
-      // q167 structural A/B: per-group rank via the range-partitioned
-      // order-statistics machinery vs a plain window partitioned by
-      // source (groups are SOURCES — thousands at corpus scale, so the
-      // window's parallelism floor is |sources|, not 3).
-      import org.apache.spark.sql.expressions.Window
-      val v = graft.sources.Tables.parallel(
-        spark.read.parquet(s"$d/documents.parquet"))
-        .withColumn("tokens",
-          graft.functions.TextFunctions.tokenCount(col("text")).cast("double"))
-        .select(col("doc_id"), col("source"), col("tokens"))
-        .filter(col("tokens").isNotNull)
-      def viaMachinery() = graft.operators.Curation.quantileNormalize(
-        v, "doc_id", "source", "tokens")
-      def viaWindow() = {
-        val w = Window.partitionBy(col("source"))
-          .orderBy(col("tokens").asc, col("doc_id").asc)
-        val ranked = v.withColumn("__rn", row_number().over(w))
-          .withColumn("__ng", count(lit(1)).over(
-            Window.partitionBy(col("source"))))
-        val pooled = graft.operators.Relational.groupedRowNumber(
-            v.withColumn("__g", lit(0)), Seq("__g"),
-            Seq(col("tokens").asc, col("doc_id").asc), "__grn")
-          .select(col("__grn"), col("tokens").as("norm_val"))
-        val total = v.agg(count(lit(1)).as("__n"))
-        ranked.crossJoin(broadcast(total))
-          .withColumn("__tr", ceil(
-            (lit(2) * col("__rn") - lit(1)).cast("double") /
-              (lit(2.0) * col("__ng")) * col("__n")).cast("long"))
-          .join(pooled, col("__tr") === col("__grn"))
-          .select(col("doc_id"), col("source"), col("tokens"), col("norm_val"))
-      }
-      (1 to 3).foreach { _ =>
-        t("q167_machinery")(viaMachinery())
-        t("q167_window")(viaWindow())
-      }
-    } else if (args.headOption.contains("conf_ab")) {
-      // Generic single-conf A/B: args = conf_ab <key> <offValue> q.. q..
-      // Interleaves baseline vs the overridden value, min-of-3 each.
-      val key = args(1); val v = args(2)
-      val names = args.drop(3).toSeq
-      val base = spark.conf.get(key)
-      val acc = scala.collection.mutable.Map.empty[(String, String), Double]
-        .withDefaultValue(Double.MaxValue)
-      (1 to 3).foreach { _ =>
-        for ((cell, cv) <- Seq("base" -> base, "alt" -> v)) {
-          spark.conf.set(key, cv)
-          for (n <- names) {
-            val t0 = System.nanoTime()
-            SparkEntry.queries(n)(spark, d)
-              .write.format("noop").mode("overwrite").save()
-            spark.catalog.clearCache()
-            acc((n, cell)) = math.min(acc((n, cell)),
-              (System.nanoTime() - t0) / 1e9)
-          }
-        }
-      }
-      spark.conf.set(key, base)
-      for (n <- names) println(
-        f"$n%-28s base=${acc((n, "base"))}%.3f alt=${acc((n, "alt"))}%.3f")
-      println(f"TOTAL base=${names.map(n => acc((n, "base"))).sum}%.2f " +
-        f"alt=${names.map(n => acc((n, "alt"))).sum}%.2f")
-    } else if (args.headOption.contains("plan_share")) {
-      // Per-query fixed-cost split: DataFrame build + analysis + physical
-      // planning (driver CPU) vs execution (noop write) for the named
-      // queries. Run each 3x; planning re-happens each time, as in Bench.
-      val names = args.drop(1).toSeq
-      for (n <- names) {
-        val ts = (1 to 3).map { _ =>
-          val t0 = System.nanoTime()
-          val df = SparkEntry.queries(n)(spark, d)
-          df.queryExecution.executedPlan // force analysis+optimization+planning
-          val t1 = System.nanoTime()
-          df.write.format("noop").mode("overwrite").save()
-          val t2 = System.nanoTime()
-          spark.catalog.clearCache()
-          ((t1 - t0) / 1e9, (t2 - t1) / 1e9)
-        }
-        val p = ts.map(_._1).min; val e = ts.map(_._2).min
-        println(f"$n%-28s plan=$p%.3f exec=$e%.3f")
-      }
-    } else if (args.headOption.contains("pwrite_ab")) {
-      // Partitioned-write width A/B: 8 vs 32 shuffle tasks feeding a
-      // month-partitioned 44-col parquet write (the q129 write shape).
-      val src = spark.read.parquet(s"$d/orders.parquet")
-        .select((0 until 40).map(i =>
-          concat_ws("-", col("o_orderpriority"), lit(i.toString)).as(s"c$i")) ++
-          Seq(col("o_orderkey"),
-            date_format(col("o_orderdate"), "yyyy-MM").as("pmonth")): _*)
-        .persist()
-      src.count()
-      def wr(n: Int): Unit = {
-        val dir = java.nio.file.Files.createTempDirectory("pwab").toString
-        val t0 = System.nanoTime()
-        src.repartition(n, col("pmonth"))
-          .write.mode("overwrite").partitionBy("pmonth").parquet(dir)
-        println(f"write_$n%d: ${(System.nanoTime() - t0) / 1e9}%.2f")
-        org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
-      }
-      (1 to 3).foreach { _ => wr(8); wr(32) }
-      src.unpersist()
-    } else if (args.headOption.contains("q167_sub")) {
-      // q167 floor decomposition, round-13 refresh matching the CURRENT
-      // shape: (a) the tokenCount input scan alone, (b) the within-
-      // group rank window alone, (c) the pooled range-partitioned rank
-      // table alone (the lookup every correct quantile normalization
-      // must build), vs (d) the full operator. Any correct program
-      // contains (a)+(b)+(c)+a join; their sum vs the oracle IS the
-      // stage-constant floor.
-      import org.apache.spark.sql.expressions.Window
-      val v = graft.sources.Tables.parallel(
-        spark.read.parquet(s"$d/documents.parquet"))
-        .withColumn("tokens",
-          graft.functions.TextFunctions.tokenCount(col("text")).cast("double"))
-        .select(col("doc_id"), col("source"), col("tokens"))
-        .filter(col("tokens").isNotNull)
-      val wg = Window.partitionBy(col("source"))
-      def scanOnly() = v
-      def windowOnly() = v
-        .withColumn("__rn", row_number().over(
-          wg.orderBy(col("tokens").asc, col("doc_id").asc)))
-        .withColumn("__ng", count(lit(1)).over(wg))
-      def pooledOnly() = graft.operators.Relational.groupedRowNumber(
-        v.withColumn("__g", lit(0)), Seq("__g"),
-        Seq(col("tokens").asc, col("doc_id").asc), "__grn")
-      def full() = graft.operators.Curation.quantileNormalize(
-        v, "doc_id", "source", "tokens")
-      (1 to 3).foreach { _ =>
-        t("q167_scan")(scanOnly())
-        t("q167_window")(windowOnly())
-        t("q167_pooled")(pooledOnly())
-        t("q167_full")(full())
-      }
-    } else if (args.headOption.contains("q198_sub")) {
-      // q198 floor decomposition (round-15, the freeze-door evidence):
-      // strict subsets of the CURRENT single-scan bigramNll plan.
-      // (a) the corpus scan + padded-zip bigram explode + type
-      //     collapse alone — the persisted stage every correct add-k
-      //     bigram LM must build;
-      // (b) the train-side model re-aggregations alone (cb + cu + the
-      //     1-row vocab) over a prebuilt cached type table;
-      // (c) the held-side scoring join chain + final group + ordered1
-      //     over the same cached table.
-      // Any correct program contains (a) and the work of (b)+(c);
-      // (a) + (b) + (c) vs the full query is the job-floor argument.
-      val docs = graft.sources.Tables.parallel(
-        spark.read.parquet(s"$d/documents.parquet"))
-      val toks = graft.functions.TextFunctions.tokens(col("text"))
-      val held = pmod(col("doc_id"), lit(7L)) === 0
-      val zipped = arrays_zip(toks,
-        slice(toks, lit(2), greatest(size(toks) - 1, lit(0))))
-      val sentinel = array(struct(lit(null).cast("string").as("0"),
-        lit(null).cast("string").as("1")))
-      def typeTableDf() = docs
-        .filter(col("text").isNotNull)
-        .select(col("source").as("__g"), held.as("__held"),
-          explode(when(held && size(toks) >= 2, concat(zipped, sentinel))
-            .otherwise(zipped)).as("__bg"))
-        .groupBy(col("__held"), col("__g"),
-          col("__bg.0").as("__w1"), col("__bg.1").as("__w2"))
-        .agg(count(lit(1)).as("__n"))
-      def modelOnly(tt: org.apache.spark.sql.DataFrame) = {
-        val cb = tt.filter(!col("__held") && col("__w2").isNotNull)
-          .groupBy(col("__w1"), col("__w2"))
-          .agg(sum(col("__n")).as("__cb"))
-        val cu = cb.groupBy(col("__w1")).agg(sum(col("__cb")).as("__cu"))
-        val vocab = tt.filter(!col("__held"))
-          .agg(count_distinct(col("__w1")).as("__v"))
-        cu.crossJoin(broadcast(vocab))
-      }
-      def scoreOnly(tt: org.apache.spark.sql.DataFrame) = {
-        val cb = tt.filter(!col("__held") && col("__w2").isNotNull)
-          .groupBy(col("__w1"), col("__w2"))
-          .agg(sum(col("__n")).as("__cb"))
-        val cu = cb.groupBy(col("__w1")).agg(sum(col("__cb")).as("__cu"))
-        val vocab = tt.filter(!col("__held"))
-          .agg(count_distinct(col("__w1")).as("__v"))
-        val nDocs = tt.filter(col("__held") && col("__w1").isNull)
-          .select(col("__g"), col("__n").as("n_docs"))
-        tt.filter(col("__held") && col("__w2").isNotNull)
-          .select(col("__g"), col("__w1"), col("__w2"), col("__n"))
-          .join(cb, Seq("__w1", "__w2"), "left")
-          .join(cu, Seq("__w1"), "left")
-          .crossJoin(broadcast(vocab))
-          .select(col("__g"), col("__n"),
-            (-log((coalesce(col("__cb"), lit(0L)).cast("double") + lit(1.0)) /
-              (coalesce(col("__cu"), lit(0L)).cast("double") +
-                lit(1.0) * col("__v").cast("double")))).as("__nll"))
-          .groupBy(col("__g"))
-          .agg(sum(col("__n")).as("n_bigrams"),
-            round(sum(col("__nll") * col("__n").cast("double")) /
-              sum(col("__n")).cast("double"), 6).as("avg_nll"))
-          .join(nDocs, Seq("__g"))
-          .transform(QuerySupport.ordered1(_, col("__g")))
-      }
-      def full() = SparkEntry.queries("q198_bigram_nll")(spark, d)
-      // cache-preserving timer: the shared t() clears the cache after
-      // every run, which would evict the prebuilt type table the b/c
-      // subsets exist to isolate
-      def tk(name: String)(df: => org.apache.spark.sql.DataFrame): Unit = {
-        val ts = (1 to 3).map { _ =>
-          val t0 = System.nanoTime()
-          df.write.format("noop").mode("overwrite").save()
-          (System.nanoTime() - t0) / 1e9
-        }
-        println(f"$name: min ${ts.min}%.2f  runs ${ts.map(x => f"$x%.2f").mkString(" ")}")
-      }
-      (1 to 3).foreach { _ =>
-        t("q198_a_typetable")(typeTableDf())
-        val cached = typeTableDf().persist()
-        cached.write.format("noop").mode("overwrite").save()
-        tk("q198_b_model")(modelOnly(cached))
-        tk("q198_c_score")(scoreOnly(cached))
-        cached.unpersist(blocking = true)
-        t("q198_full")(full())
-        spark.catalog.clearCache()
-      }
-    } else if (args.headOption.contains("pq_ab")) {
-      // q149/q150 codebook-materialization A/B: round-14 shape (lazy
-      // codebook, broadcast legs re-run the pruned scan; refined loop
-      // localCheckpoints) vs round-15 (codebook localized to a
-      // LocalRelation at build time), interleaved one-JVM.
-      import graft.operators.Quantization
-      val emb = spark.read.parquet(s"$d/embeddings.parquet")
-      def dot(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
-        graft.functions.VectorFunctions.dot(a, b)
-      def oldSeed() = {
-        val m = 4; val ksub = 8
-        emb.filter(col("vec_id") < ksub)
-          .select(col("vec_id").as("cent"),
-            transform(col("embedding"), _.cast("double")).as("__v"))
-          .withColumn("subspace", explode(array((0 until m).map(lit): _*)))
-          .withColumn("__sd", (size(col("__v")) / m).cast("int"))
-          .select(col("cent"), col("subspace"),
-            slice(col("__v"), col("subspace") * col("__sd") + 1,
-              col("__sd")).as("cv"))
-          .withColumn("dcc", dot(col("cv"), col("cv")))
-      }
-      def q149Old() = {
-        val cb = oldSeed()
-        val codes = Quantization.pqAssign(emb, "embedding", "vec_id", cb,
-            m = 4)
-          .select(col("id"), col("subspace"), col("code"))
-        Quantization.pqSearchAdc(codes, cb, emb.filter(col("vec_id") < 5),
-            "embedding", "vec_id", m = 4, k = 3)
-          .transform(QuerySupport.ordered1(_, col("query_id"), col("rank")))
-      }
-      def q149New() = SparkEntry.queries("q149_pq_adc")(spark, d)
-      def q150New() = SparkEntry.queries("q150_pq_refined")(spark, d)
-      (1 to 3).foreach { _ =>
-        t("q149_old_lazyseed")(q149Old())
-        t("q149_new_localized")(q149New())
-        t("q150_new_localized")(q150New())
-      }
-    } else if (args.headOption.contains("pq_sub")) {
-      // Freeze-door strict-subset decompositions for the PQ/IVF chain
-      // (q149/q150/q154, round 16): every correct answer must (a) build
-      // its codebook / coarse index — an EAGER driver-side call for PQ
-      // (localized() collects at call time), a disk write for q154 —
-      // then (b) encode/assign and (c) search over it. Stage (a) times
-      // the call itself; (b)/(c) ride a cache-preserving timer over the
-      // prebuilt stage-(a) artifact, so each stage is a strict subset
-      // any correct plan must also run.
-      import graft.operators.{Quantization, Similarity, Maintenance}
-      val emb = spark.read.parquet(s"$d/embeddings.parquet")
-      def tcall(name: String)(body: => Any): Unit = {
-        val ts = (1 to 3).map { _ =>
-          val t0 = System.nanoTime(); body; (System.nanoTime() - t0) / 1e9
-        }
-        println(f"$name: min ${ts.min}%.2f  runs ${ts.map(x => f"$x%.2f").mkString(" ")}")
-      }
-      def tk(name: String)(df: => org.apache.spark.sql.DataFrame): Unit = {
-        val ts = (1 to 3).map { _ =>
-          val t0 = System.nanoTime()
-          df.write.format("noop").mode("overwrite").save()
-          (System.nanoTime() - t0) / 1e9
-        }
-        println(f"$name: min ${ts.min}%.2f  runs ${ts.map(x => f"$x%.2f").mkString(" ")}")
-      }
-      def o1(df: org.apache.spark.sql.DataFrame, c: String*) =
-        QuerySupport.ordered1(df, c.map(col): _*)
-      (1 to 3).foreach { _ =>
-        // --- q149: codebook + assign + ADC search over cached codes ---
-        tcall("q149_a_codebook")(
-          Quantization.pqCodebook(emb, "embedding", "vec_id", m = 4, ksub = 8))
-        val cb = Quantization.pqCodebook(emb, "embedding", "vec_id",
-          m = 4, ksub = 8)
-        def codes() = Quantization.pqAssign(emb, "embedding", "vec_id", cb,
-            m = 4)
-          .select(col("id"), col("subspace"), col("code"))
-        tk("q149_b_assign")(codes())
-        val cc = codes().persist()
-        cc.write.format("noop").mode("overwrite").save()
-        tk("q149_c_search")(o1(
-          Quantization.pqSearchAdc(cc, cb, emb.filter(col("vec_id") < 5),
-            "embedding", "vec_id", m = 4, k = 3), "query_id", "rank"))
-        cc.unpersist(blocking = true)
-        t("q149_full")(SparkEntry.queries("q149_pq_adc")(spark, d))
-        // --- q150: refined codebook (1 Lloyd iter, eager) + distortion ---
-        tcall("q150_a_refined_cb")(
-          Quantization.pqCodebookRefined(emb, "embedding", "vec_id",
-            m = 4, ksub = 8, iterations = 1))
-        val rcb = Quantization.pqCodebookRefined(emb, "embedding", "vec_id",
-          m = 4, ksub = 8, iterations = 1)
-        tk("q150_b_distortion")(o1(
-          Quantization.pqDistortion(
-            Quantization.pqAssign(emb, "embedding", "vec_id", rcb, m = 4)),
-          "subspace", "code"))
-        t("q150_full")(SparkEntry.queries("q150_pq_refined")(spark, d))
-        // --- q154: build+compact (the disk index) + read-back search ---
-        val dir = "/tmp/graft_q154_profidx/t"
-        tcall("q154_a_build_compact") {
-          val idx = Similarity.buildIvfIndex(emb, "embedding", "vec_id",
-            nlist = 8)
-          Maintenance.compactIvfIndex(idx.entries, dir)
-        }
-        val cents = Similarity.buildIvfIndex(emb, "embedding", "vec_id",
-          nlist = 8).centroids
-        tk("q154_b_search")(o1(
-          Similarity.ivfSearch(
-            Similarity.IvfIndex(cents, spark.read.parquet(dir)),
-            emb.filter(col("vec_id") < 5), "embedding", "vec_id",
-            k = 3, nProbe = 2), "query_id", "rank"))
-        t("q154_full")(SparkEntry.queries("q154_ivf_partitioned")(spark, d))
-        spark.catalog.clearCache()
-      }
-    } else if (args.headOption.contains("q205_ab")) {
-      // q205 old-vs-new structural A/B: the round-15 window shape (whose
-      // first/last consumer branches each re-evaluated the join+sort
-      // subtree) vs the round-16 min_by/max_by single-aggregation shape.
-      import org.apache.spark.sql.expressions.Window
-      val ev = spark.read.parquet(s"$d/events.parquet")
-      def old() = {
-        val conv = ev.filter(col("event_type") === "purchase")
-          .groupBy(col("user_id"))
-          .agg(min(struct(col("ts"), col("event_id"))).as("__fp"))
-          .select(col("user_id"), col("__fp.ts").as("__fpts"),
-            col("__fp.event_id").as("__fpid"))
-        val priors = ev.filter(col("event_type") =!= "purchase")
-          .join(conv, "user_id")
-          .filter(col("ts") < col("__fpts") ||
-            (col("ts") === col("__fpts") && col("event_id") < col("__fpid")))
-        val wAsc = Window.partitionBy(col("user_id"))
-          .orderBy(col("ts").asc, col("event_id").asc)
-        val picked = priors
-          .withColumn("__rn", row_number().over(wAsc))
-          .withColumn("__n",
-            count(lit(1)).over(Window.partitionBy(col("user_id"))))
-        val first = picked.filter(col("__rn") === 1)
-          .groupBy(col("event_type")).agg(count(lit(1)).as("first_touch"))
-        val last = picked.filter(col("__rn") === col("__n"))
-          .groupBy(col("event_type")).agg(count(lit(1)).as("last_touch"))
-        QuerySupport.ordered1(
-          first.join(last, Seq("event_type"), "full_outer")
-            .select(col("event_type"),
-              coalesce(col("first_touch"), lit(0L)).as("first_touch"),
-              coalesce(col("last_touch"), lit(0L)).as("last_touch")),
-          col("event_type"))
-      }
-      def nu() = SparkEntry.queries("q205_attribution")(spark, d)
-      (1 to 3).foreach { _ =>
-        t("q205_old_window")(old())
-        t("q205_new_minby")(nu())
-      }
-    } else if (args.headOption.contains("q123_ab")) {
-      // q123 decomposition + packed-key A/B: (a) the basket build alone
-      // (groupBy collect_set — the input every correct co-occurrence
-      // count must form), (b) the full current shape, (c) the same
-      // shape with the pair struct packed into ONE long for the count
-      // shuffle (chunkClusters' packed-key idiom), decoded after.
-      val li = spark.read.parquet(s"$d/lineitem.parquet")
-      def setsOnly() = li.groupBy(col("l_orderkey"))
-        .agg(sort_array(collect_set(col("l_partkey"))).as("__ps"))
-        .filter(size(col("__ps")) >= 2)
-      def full() = SparkEntry.queries("q123_copurchase")(spark, d)
-      def packed() = {
-        val sets = setsOnly()
-        val shift = 4194304L // 2^22 — sf0.1 partkeys < 500k
-        sets.select(explode(flatten(transform(col("__ps"), (x, i) =>
-            transform(slice(col("__ps"), i + lit(2), size(col("__ps")) - i - 1),
-              y => x * lit(shift) + y)))).as("__pk"))
-          .groupBy(col("__pk"))
-          .agg(count(lit(1)).as("n_orders"))
-          .select((col("__pk") / lit(shift)).cast("long").as("part_a"),
-            pmod(col("__pk"), lit(shift)).as("part_b"), col("n_orders"))
-          .orderBy(col("n_orders").desc, col("part_a"), col("part_b"))
-          .limit(50)
-      }
-      (1 to 3).foreach { _ =>
-        t("q123_a_sets")(setsOnly())
-        t("q123_full")(full())
-        t("q123_packed")(packed())
-      }
-    } else if (args.headOption.contains("q156_sub")) {
-      // q156 floor decomposition under the round-11 harness: the
-      // edge-build subplan alone (distinct pairs -> per-order self-join
-      // -> pair counts -> n >= 2) vs the full triangle query.
-      def edges() = {
-        val li = spark.read.parquet(s"$d/lineitem.parquet")
-          .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
-          .distinct()
-        val e = li.alias("x").join(li.alias("y"),
-            col("x.o") === col("y.o") && col("x.p") < col("y.p"))
-          .groupBy(col("x.p").as("a"), col("y.p").as("b"))
-          .agg(count(lit(1)).as("w"))
-          .filter(col("w") >= 2)
-        e
-      }
-      val q156 = SparkEntry.queries("q156_triangles")
-      (1 to 3).foreach { _ =>
-        t("q156_edges")(edges())
-        t("q156_full")(q156(spark, d))
-      }
-    } else if (args.headOption.contains("q91_sub")) {
-      // q91 floor decomposition: the exploded-lines frequency pass alone
-      // (posexplode -> md5 -> dense_rank/max windows -> filter), the
-      // strict subset every correct line-dedup must run, vs the full
-      // query (which adds per-doc reassembly + the n_lines join).
-      import org.apache.spark.sql.expressions.Window
-      val q91 = SparkEntry.queries("q91_line_dedup")
-      def subset() = {
-        val toks = split(col("text"), " ", -1)
-        val lined = graft.sources.Tables.parallel(
-          spark.read.parquet(s"$d/documents.parquet")).withColumn("__lined",
-          concat(concat_ws("\n",
-            array_join(slice(toks, 1, 10), " "),
-            array_join(slice(toks, 11, 1000000), " ")),
-            when(col("doc_id") % 4 === 0,
-              lit("\n<<boiler>>")).otherwise(lit(""))))
-        val lines = lined
-          .select(col("doc_id"), posexplode(split(col("__lined"), "\n", -1)))
-          .select(col("doc_id"), col("pos"), col("col").as("__line"),
-            md5(col("col")).as("__h"))
-        val byHash = Window.partitionBy(col("__h"))
-        lines
-          .withColumn("__dr", dense_rank().over(byHash.orderBy(col("doc_id"))))
-          .withColumn("__docs", max(col("__dr")).over(byHash))
-          .filter(col("__docs") <= 5L)
-      }
-      (1 to 3).foreach { _ =>
-        t("q91_subset")(subset())
-        t("q91_full")(q91(spark, d))
-      }
-    } else if (args.headOption.contains("sim_ab")) {
-      // q159 internal-parallelism A/B: stock similarityJoin vs the same
-      // pipeline with the verify-side joins forced to defaultParallelism.
-      val docs = graft.sources.Tables.parallel(
-        spark.read.parquet(s"$d/documents.parquet"))
-      def stock() = graft.operators.TextDedup.similarityJoin(
-        docs, "text", "doc_id", tau = 0.5, shingleSize = 3)
-      (1 to 3).foreach { _ =>
-        t("sim_stock")(stock())
-        spark.conf.set("spark.sql.shuffle.partitions", "32")
-        t("sim_parts32")(stock())
-        spark.conf.set("spark.sql.shuffle.partitions",
-          sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTS", "8"))
-      }
-    } else if (args.headOption.contains("neg_ab")) {
-      // q163 positives-subplan A/B: default plan vs explicit broadcast
-      // of the orders side of the positives join (the round-11 check
-      // the round-10 verdict asked for).
-      def posPlan(hint: Boolean) = {
-        val o = spark.read.parquet(s"$d/orders.parquet")
-          .select(col("o_custkey").as("user_id"), col("o_orderkey"))
-        val l = spark.read.parquet(s"$d/lineitem.parquet")
-          .select(col("l_orderkey").as("o_orderkey"),
-            col("l_partkey").as("item"))
-        val oSide = if (hint) broadcast(o) else o
-        oSide.join(l, "o_orderkey")
-          .select(col("user_id"), col("item")).distinct()
-      }
-      def full(hint: Boolean) = graft.operators.Curation.negativeSample(
-        posPlan(hint), "user_id", "item",
-        spark.read.parquet(s"$d/part.parquet")
-          .select(col("p_partkey").as("item")), k = 8)
-      (1 to 3).foreach { _ =>
-        t("pos_default")(posPlan(false))
-        t("pos_bcast")(posPlan(true))
-        t("full_default")(full(false))
-        t("full_bcast")(full(true))
-      }
-    } else if (args.headOption.contains("sort_ab")) {
-      // q161 final-sort shape A/B: single-task repartition(1) sort vs
-      // parallel range sort, interleaved in one JVM.
-      val base = graft.operators.Features.standardize(
-        graft.sources.Tables.parallel(
-          spark.read.parquet(s"$d/lineitem.parquet")),
-        Seq("l_orderkey", "l_linenumber"),
-        Seq("l_quantity", "l_extendedprice", "l_discount"), scale = 2)
-      val keys = Seq(col("l_orderkey"), col("l_linenumber"),
-        col("l_extendedprice_z"), col("l_quantity_z"), col("l_discount_z"),
-        col("l_extendedprice_mm"), col("l_quantity_mm"), col("l_discount_mm"))
-      (1 to 3).foreach { _ =>
-        t("single_task")(base.repartition(1).sortWithinPartitions(keys: _*))
-        t("range_sort")(base.orderBy(keys: _*))
-        t("range_sort32")(base
-          .repartitionByRange(spark.sparkContext.defaultParallelism, keys: _*)
-          .sortWithinPartitions(keys: _*))
-      }
-    } else if (args.headOption.contains("q156_ab")) {
-      // Round-12 structural A/B on the triangle query. Cells:
-      //   cur      — the shipped shape (distinct -> self-join -> pair agg)
-      //   setpairs — ONE-shuffle edge build: per-order sorted part set,
-      //              codegen'd pair explosion, then the pair agg (drops
-      //              the distinct shuffle AND the self-join)
-      //   bcast    — setpairs edge build + persisted edges with
-      //              broadcast wedge joins in the triangle stage
-      val li = () => spark.read.parquet(s"$d/lineitem.parquet")
-        .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
-      def edgesSetPairs() = {
-        val sets = li().groupBy(col("o"))
-          .agg(sort_array(collect_set(col("p"))).as("ps"))
-          .filter(size(col("ps")) >= 2)
-        sets.select(explode(flatten(transform(col("ps"), (x, i) =>
-            transform(slice(col("ps"), i + lit(2),
-              size(col("ps")) - i - 1), y => struct(x.as("x"), y.as("y"))))))
-          .as("pr"))
-          .groupBy(col("pr.x").as("x"), col("pr.y").as("y"))
-          .agg(count(lit(1)).as("n")).filter(col("n") >= 2)
-      }
-      def triBcast(e0: org.apache.spark.sql.DataFrame) = {
-        val e = e0.select(col("x").as("a"), col("y").as("b")).persist()
-        val deg = e.select(col("a").as("node"))
-          .union(e.select(col("b").as("node")))
-          .groupBy(col("node")).agg(count(lit(1)).as("degree"))
-        val tri = e.alias("e1")
-          .join(broadcast(e.alias("e2")), col("e1.b") === col("e2.a"))
-          .join(broadcast(e.alias("e3")),
-            col("e3.a") === col("e1.a") && col("e3.b") === col("e2.b"))
-          .select(col("e1.a").as("na"), col("e1.b").as("nb"),
-            col("e2.b").as("nc"))
-        val perNode = tri
-          .select(explode(array(col("na"), col("nb"), col("nc"))).as("node"))
-          .groupBy(col("node")).agg(count(lit(1)).as("n_triangles"))
-        deg.join(perNode, Seq("node"), "left")
-          .select(col("node"), col("degree"),
-            coalesce(col("n_triangles"), lit(0L)).as("n_triangles"),
-            when(col("degree") >= 2, round(
-              (coalesce(col("n_triangles"), lit(0L)) * 2).cast("double") /
-                (col("degree") * (col("degree") - 1)).cast("double"), 6))
-              .as("clustering"))
-          .repartition(1).sortWithinPartitions(col("node"))
-      }
-      def oldShape() = {
-        val it = spark.read.parquet(s"$d/lineitem.parquet")
-          .select(col("l_orderkey"), col("l_partkey")).distinct()
-        val edges = it.alias("a").join(it.alias("b"),
-            col("a.l_orderkey") === col("b.l_orderkey") &&
-              col("a.l_partkey") < col("b.l_partkey"))
-          .groupBy(col("a.l_partkey").as("x"), col("b.l_partkey").as("y"))
-          .agg(count(lit(1)).as("n")).filter(col("n") >= 2)
-        graft.operators.Graph.triangleStats(edges, "x", "y")
-          .repartition(1).sortWithinPartitions(col("node"))
-      }
-      val q156 = SparkEntry.queries("q156_triangles")
-      (1 to 4).foreach { _ =>
-        t("old")(oldShape())
-        t("cur")(q156(spark, d))
-        t("bcast")(triBcast(edgesSetPairs()))
       }
     } else if (args.headOption.contains("gen_scale")) {
       // Synthesize a larger corpus for scale-shape validation (round-12
@@ -1244,730 +245,6 @@ object Prof {
           (un(2000L, "em", col("id"), j).cast("double") / 1000.0 - 1.0)
             .cast("float")).as("embedding"),
         un(10L, "el", col("id")).cast("int").as("label")))
-    } else if (args.headOption.contains("q255_ab")) {
-      // contaminatedSpans gram-key A/B: md5(gram) join key (current) vs
-      // the raw gram string (the q89 round-14 lesson — the hash is only
-      // an equality key here, never output, and the join is broadcast
-      // so no shuffle narrows). Interleaved, warm min-of-3.
-      import org.apache.spark.sql.expressions.Window
-      val docs = graft.sources.Tables.parallel(
-        spark.read.parquet(s"$d/documents.parquet"))
-      val train = docs.filter(col("doc_id") % 20 =!= 7)
-      val ev = docs.filter(col("doc_id") % 20 === 7)
-      def cur() = graft.operators.TextDedup.contaminatedSpans(
-          train, ev, "text", "doc_id", k = 5)
-        .transform(QuerySupport.ordered1(_, col("doc_id"), col("span_start")))
-      def raw() = {
-        val k = 5
-        def grams(df: org.apache.spark.sql.DataFrame,
-            cols: Seq[org.apache.spark.sql.Column]) = {
-          val toks = graft.functions.TextFunctions.tokens(col("text"))
-          df.withColumn("__toks", toks)
-            .select(cols :+ posexplode(transform(
-              sequence(lit(1), greatest(size(col("__toks")) - (k - 1), lit(1))),
-              i => concat_ws(" ", slice(col("__toks"), i, lit(k))))): _*)
-        }
-        val evg = grams(ev, Seq.empty).select(col("col").as("__h")).distinct()
-        val hits = grams(train, Seq(col("doc_id")))
-          .select(col("doc_id"), (col("pos") + 1).as("__p"), col("col").as("__h"))
-          .join(broadcast(evg), "__h")
-        val byDoc = Window.partitionBy(col("doc_id")).orderBy(col("__p"))
-        QuerySupport.ordered1(hits
-          .withColumn("__island", col("__p") - row_number().over(byDoc))
-          .groupBy(col("doc_id"), col("__island"))
-          .agg(min(col("__p")).cast("long").as("span_start"),
-            (max(col("__p")) + (k - 1)).cast("long").as("span_end"),
-            count(lit(1)).as("n_grams"))
-          .drop("__island"), col("doc_id"), col("span_start"))
-      }
-      (1 to 3).foreach { _ =>
-        t("q255_cur_md5")(cur())
-        t("q255_raw_gram")(raw())
-      }
-    } else if (args.headOption.contains("q255_sub")) {
-      // q255 strict-subset decomposition — ADMITTED round 16 via this
-      // decomposition (Bench.scala scopeExcluded; BASELINE round-16
-      // "q255 WAS admitted late-round"); kept runnable for the round-17
-      // re-certification the verdict asked for: (a) the
-      // eval gram set build alone — the broadcast input every correct
-      // contamination test must form — and (b) the train explode +
-      // broadcast probe + island merge over a PREBUILT eval set, vs the
-      // full query. Cache-preserving timer for (b).
-      import org.apache.spark.sql.expressions.Window
-      val docs = graft.sources.Tables.parallel(
-        spark.read.parquet(s"$d/documents.parquet"))
-      val train = docs.filter(col("doc_id") % 20 =!= 7)
-      val ev = docs.filter(col("doc_id") % 20 === 7)
-      val k = 5
-      def grams(df: org.apache.spark.sql.DataFrame,
-          cols: Seq[org.apache.spark.sql.Column]) = {
-        val toks = graft.functions.TextFunctions.tokens(col("text"))
-        df.withColumn("__toks", toks)
-          .select(cols :+ posexplode(transform(
-            sequence(lit(1), greatest(size(col("__toks")) - (k - 1), lit(1))),
-            i => concat_ws(" ", slice(col("__toks"), i, lit(k))))): _*)
-      }
-      def evalSet() = grams(ev, Seq.empty).select(col("col").as("__h"))
-        .distinct()
-      def probe(evg: org.apache.spark.sql.DataFrame) = {
-        val hits = grams(train, Seq(col("doc_id")))
-          .select(col("doc_id"), (col("pos") + 1).as("__p"),
-            col("col").as("__h"))
-          .join(broadcast(evg), "__h")
-        val byDoc = Window.partitionBy(col("doc_id")).orderBy(col("__p"))
-        QuerySupport.ordered1(hits
-          .withColumn("__island", col("__p") - row_number().over(byDoc))
-          .groupBy(col("doc_id"), col("__island"))
-          .agg(min(col("__p")).cast("long").as("span_start"),
-            (max(col("__p")) + (k - 1)).cast("long").as("span_end"),
-            count(lit(1)).as("n_grams"))
-          .drop("__island"), col("doc_id"), col("span_start"))
-      }
-      def tk(name: String)(df: => org.apache.spark.sql.DataFrame): Unit = {
-        val ts = (1 to 3).map { _ =>
-          val t0 = System.nanoTime()
-          df.write.format("noop").mode("overwrite").save()
-          (System.nanoTime() - t0) / 1e9
-        }
-        println(f"$name: min ${ts.min}%.2f  runs ${ts.map(x => f"$x%.2f").mkString(" ")}")
-      }
-      def full() = SparkEntry.queries("q255_contaminated_spans")(spark, d)
-      (1 to 3).foreach { _ =>
-        t("q255_a_evalset")(evalSet())
-        val cached = evalSet().persist()
-        cached.write.format("noop").mode("overwrite").save()
-        tk("q255_b_probe")(probe(cached))
-        cached.unpersist(blocking = true)
-        t("q255_full")(full())
-        spark.catalog.clearCache()
-      }
-    } else if (args.headOption.contains("q161_ab")) {
-      // standardize fit: broadcast-leg (old) vs localized LocalRelation
-      // (round 13), same final orderedWide sort, ONE JVM interleaved.
-      QuerySupport.singlePartitionFinals = true
-      val li = graft.sources.Tables.parallel(
-        spark.read.parquet(s"$d/lineitem.parquet"))
-      val dec38 = org.apache.spark.sql.types.DecimalType(38, 0)
-      val cols0 = Seq("l_quantity", "l_extendedprice", "l_discount")
-      def oldShape() = {
-        val pow = 100L
-        val aggs = cols0.flatMap { c =>
-          val q = graft.functions.Decimals.unscaledLong(col(c), 2).cast(dec38)
-          Seq(sum(q).as(s"__s_$c"), sum(q * q).as(s"__ss_$c"),
-            count(col(c)).as(s"__n_$c"),
-            min(col(c)).as(s"__min_$c"), max(col(c)).as(s"__max_$c"))
-        }
-        val stats = li.agg(aggs.head, aggs.tail: _*)
-        val scaled = cols0.flatMap { c =>
-          val n = col(s"__n_$c").cast("double")
-          val mean = col(s"__s_$c").cast("double") / n / lit(pow.toDouble)
-          val varNum = (col(s"__n_$c").cast(dec38) * col(s"__ss_$c") -
-            col(s"__s_$c") * col(s"__s_$c")).cast("double")
-          val std = sqrt(varNum / n / n) / lit(pow.toDouble)
-          val range = col(s"__max_$c") - col(s"__min_$c")
-          Seq(
-            when(std > 0, round((col(c) - mean) / std, 6)).as(s"${c}_z"),
-            when(range > 0, round((col(c) - col(s"__min_$c")) / range, 6))
-              .as(s"${c}_mm"))
-        }
-        li.crossJoin(broadcast(stats))
-          .select(Seq(col("l_orderkey"), col("l_linenumber")) ++ scaled: _*)
-          .orderBy(col("l_orderkey"), col("l_linenumber"),
-            col("l_extendedprice_z"), col("l_quantity_z"),
-            col("l_discount_z"), col("l_extendedprice_mm"),
-            col("l_quantity_mm"), col("l_discount_mm"))
-      }
-      def newShape() = graft.operators.Features.standardize(li,
-          Seq("l_orderkey", "l_linenumber"), cols0, scale = 2)
-        .orderBy(col("l_orderkey"), col("l_linenumber"),
-          col("l_extendedprice_z"), col("l_quantity_z"),
-          col("l_discount_z"), col("l_extendedprice_mm"),
-          col("l_quantity_mm"), col("l_discount_mm"))
-      (1 to 3).foreach { _ =>
-        t("q161_old")(oldShape())
-        t("q161_new")(newShape())
-      }
-    } else if (args.headOption.contains("q89_ab")) {
-      // sourceOverlap round-14 shape (persisted sets frame + separate
-      // size roll-up, broadcast twice) vs the round-15 fused singleton
-      // shape (sizes ride the pair aggregation), interleaved one-JVM.
-      val docs = graft.sources.Tables.parallel(
-        spark.read.parquet(s"$d/documents.parquet"))
-      def oldShape() = {
-        val sets = docs
-          .withColumn("__toks",
-            graft.functions.TextFunctions.tokens(col("text")))
-          .select(col("source"), explode(array_distinct(transform(
-            sequence(lit(1), greatest(size(col("__toks")) - 2, lit(1))),
-            i => concat_ws(" ", slice(col("__toks"), i, lit(3)))))).as("__g"))
-          .groupBy(col("__g"))
-          .agg(sort_array(collect_set(col("source"))).as("__ss"))
-          .persist()
-        val sizes = sets.select(explode(col("__ss")).as("source"))
-          .groupBy(col("source")).agg(count(lit(1)).as("__n"))
-        sets.filter(size(col("__ss")) >= 2)
-          .select(explode(flatten(transform(col("__ss"), (x, i) =>
-            transform(slice(col("__ss"), i + lit(2), size(col("__ss")) - i - 1),
-              y => struct(x.as("a"), y.as("b")))))).as("__pr"))
-          .groupBy(col("__pr.a").as("source_a"), col("__pr.b").as("source_b"))
-          .agg(count(lit(1)).as("n_shared"))
-          .join(broadcast(sizes.select(col("source").as("source_a"),
-            col("__n").as("__na"))), "source_a")
-          .join(broadcast(sizes.select(col("source").as("source_b"),
-            col("__n").as("__nb"))), "source_b")
-          .select(col("source_a"), col("source_b"), col("n_shared"),
-            round(col("n_shared").cast("double") /
-              (col("__na") + col("__nb") - col("n_shared")), 6).as("jaccard"))
-          .orderBy(col("source_a"), col("source_b"))
-      }
-      def newShape() = {
-        val r = graft.operators.TextDedup.sourceOverlap(docs, "text",
-          "source", shingleSize = 3).orderBy(col("source_a"), col("source_b"))
-        r
-      }
-      // fused singleton shape, but the sizes attach via ONE 1-row
-      // map_from_entries broadcast + element_at lookups instead of two
-      // broadcast hash joins
-      def mapShape() = {
-        val sets = docs
-          .withColumn("__toks",
-            graft.functions.TextFunctions.tokens(col("text")))
-          .select(col("source"), explode(array_distinct(transform(
-            sequence(lit(1), greatest(size(col("__toks")) - 2, lit(1))),
-            i => concat_ws(" ", slice(col("__toks"), i, lit(3)))))).as("__g"))
-          .groupBy(col("__g"))
-          .agg(sort_array(collect_set(col("source"))).as("__ss"))
-        val agged = sets
-          .select(explode(concat(
-            flatten(transform(col("__ss"), (x, i) =>
-              transform(slice(col("__ss"), i + lit(2), size(col("__ss")) - i - 1),
-                y => struct(x.as("a"), y.as("b"))))),
-            transform(col("__ss"),
-              x => struct(x.as("a"), lit(null).cast("string").as("b"))))).as("__pr"))
-          .groupBy(col("__pr.a").as("__a"), col("__pr.b").as("__b"))
-          .agg(count(lit(1)).as("__n"))
-          .persist()
-        val sizeMap = agged.filter(col("__b").isNull)
-          .agg(map_from_entries(collect_list(struct(col("__a"), col("__n"))))
-            .as("__m"))
-        agged.filter(col("__b").isNotNull)
-          .crossJoin(broadcast(sizeMap))
-          .select(col("__a").as("source_a"), col("__b").as("source_b"),
-            col("__n").as("n_shared"),
-            round(col("__n").cast("double") /
-              (element_at(col("__m"), col("__a")) +
-                element_at(col("__m"), col("__b")) - col("__n")), 6)
-              .as("jaccard"))
-          .orderBy(col("source_a"), col("source_b"))
-      }
-      (1 to 3).foreach { _ =>
-        t("q89_old")(oldShape())
-        spark.catalog.clearCache()
-        t("q89_new")(newShape())
-        spark.catalog.clearCache()
-        t("q89_map")(mapShape())
-        spark.catalog.clearCache()
-      }
-    } else if (args.headOption.contains("q198_ab")) {
-      // bigramNll vocab shape A/B: the pre-round-15 second full-corpus
-      // explode for count_distinct(token) vs the padded-zip type table
-      // (vocabulary from the same single explode), interleaved one-JVM.
-      val docs = graft.sources.Tables.parallel(
-        spark.read.parquet(s"$d/documents.parquet"))
-      def oldShape() = {
-        val toks = graft.functions.TextFunctions.tokens(col("text"))
-        val held = pmod(col("doc_id"), lit(7L)) === 0
-        val typeTable = docs.filter(col("text").isNotNull)
-          .select(col("source").as("__g"), held.as("__held"),
-            explode(arrays_zip(
-              slice(toks, lit(1), greatest(size(toks) - 1, lit(0))),
-              slice(toks, lit(2), greatest(size(toks) - 1, lit(0))))).as("__bg"))
-          .groupBy(col("__held"), col("__g"),
-            col("__bg.0").as("__w1"), col("__bg.1").as("__w2"))
-          .agg(count(lit(1)).as("__n"))
-          .persist()
-        val cb = typeTable.filter(!col("__held"))
-          .groupBy(col("__w1"), col("__w2"))
-          .agg(sum(col("__n")).as("__cb"))
-        val cu = cb.groupBy(col("__w1")).agg(sum(col("__cb")).as("__cu"))
-        val vocab = docs.filter(col("text").isNotNull && !held)
-          .select(explode(toks).as("__w"))
-          .agg(count_distinct(col("__w")).as("__v"))
-        val heldTypes = typeTable.filter(col("__held"))
-          .select(col("__g"), col("__w1"), col("__w2"), col("__n"))
-        val nDocs = docs
-          .filter(col("text").isNotNull && held && size(toks) >= 2)
-          .groupBy(col("source").as("__g"))
-          .agg(count(lit(1)).as("n_docs"))
-        heldTypes
-          .join(cb, Seq("__w1", "__w2"), "left")
-          .join(cu, Seq("__w1"), "left")
-          .crossJoin(broadcast(vocab))
-          .select(col("__g"), col("__n"),
-            (-log((coalesce(col("__cb"), lit(0L)).cast("double") + lit(1.0)) /
-              (coalesce(col("__cu"), lit(0L)).cast("double") +
-                lit(1.0) * col("__v").cast("double")))).as("__nll"))
-          .groupBy(col("__g"))
-          .agg(sum(col("__n")).as("n_bigrams"),
-            round(sum(col("__nll") * col("__n").cast("double")) /
-              sum(col("__n")).cast("double"), 6).as("avg_nll"))
-          .join(nDocs, Seq("__g"))
-          .select(col("__g").as("source"), col("n_docs"), col("n_bigrams"),
-            col("avg_nll"))
-          .transform(QuerySupport.ordered1(_, col("source")))
-      }
-      def newShape() =
-        graft.operators.CorpusStats.bigramNll(docs, "text", "doc_id",
-          "source", holdoutMod = 7)
-          .transform(QuerySupport.ordered1(_, col("source")))
-      (1 to 3).foreach { _ =>
-        t("q198_old")(oldShape())
-        spark.catalog.clearCache()
-        t("q198_new")(newShape())
-        spark.catalog.clearCache()
-      }
-    } else if (args.headOption.contains("q83_par")) {
-      // does parallel()'s spread-exchange pay for itself on the
-      // blink-class normalize+window queries? (borderline-band hunt)
-      import org.apache.spark.sql.expressions.Window
-      def q83(par: Boolean) = {
-        val base = spark.read.parquet(s"$d/documents.parquet")
-        val docs = if (par) graft.sources.Tables.parallel(base) else base
-        val noisy = docs.withColumn("__noisy",
-          concat(
-            when(col("doc_id") % 2 === 0, upper(col("text"))).otherwise(col("text")),
-            when(col("doc_id") % 3 === 0, lit(" ... !!!")).otherwise(lit(""))))
-        val wh = Window.partitionBy(col("__h"))
-        noisy.select(col("doc_id"),
-            md5(graft.functions.TextFunctions.normalizeText(col("__noisy"))).as("__h"))
-          .withColumn("n_copies", count(lit(1)).over(wh))
-          .withColumn("__keeper", min(col("doc_id")).over(wh))
-          .select(col("doc_id"), col("n_copies"),
-            (col("doc_id") === col("__keeper")).cast("int").as("is_keeper"))
-          .transform(QuerySupport.ordered1(_, col("doc_id")))
-      }
-      def docsOf(par: Boolean) = {
-        val base = spark.read.parquet(s"$d/documents.parquet")
-        if (par) graft.sources.Tables.parallel(base) else base
-      }
-      def q89(par: Boolean) = graft.operators.TextDedup.sourceOverlap(
-        docsOf(par), "text", "source", 3).orderBy("source_a", "source_b")
-      def q261(par: Boolean) = graft.operators.TextDedup.chunkProvenance(
-          docsOf(par), "text", "doc_id", 40, 32, 3, 4)
-        .transform(QuerySupport.ordered1(_, col("doc_id"), col("chunk_id")))
-      def q84q(par: Boolean) = {
-        val noisy = docsOf(par).withColumn("__noisy",
-          when(col("doc_id") % 3 === 0,
-            concat(lit(QuerySupport.SpanBoiler + " "), col("text")))
-            .otherwise(col("text")))
-        graft.operators.TextDedup.spanDedup(noisy, "__noisy", "doc_id", 12)
-          .transform(QuerySupport.ordered1(_, col("doc_id")))
-      }
-      def q91(par: Boolean) = {
-        val toks = split(col("text"), " ", -1)
-        val lined = docsOf(par).withColumn("__lined",
-          concat(
-            concat_ws("\n",
-              array_join(slice(toks, 1, 10), " "),
-              array_join(slice(toks, 11, 1000000), " ")),
-            when(col("doc_id") % 4 === 0, lit("\n" + QuerySupport.LineBoiler))
-              .otherwise(lit(""))))
-        graft.operators.TextDedup.lineDedup(lined, "__lined", "doc_id", "\n",
-            maxDocs = 5L)
-          .transform(QuerySupport.ordered1(_, col("doc_id")))
-      }
-      def q255(par: Boolean) = {
-        val docs = docsOf(par)
-        graft.operators.TextDedup.contaminatedSpans(
-            docs.filter(col("doc_id") % 20 =!= 7),
-            docs.filter(col("doc_id") % 20 === 7),
-            "text", "doc_id", k = 5)
-          .transform(QuerySupport.ordered1(_, col("doc_id"), col("span_start")))
-      }
-      (1 to 3).foreach { _ =>
-        t("q83_parallel")(q83(par = true))
-        t("q83_noparallel")(q83(par = false))
-        t("q84_parallel")(q84q(par = true))
-        t("q84_noparallel")(q84q(par = false))
-        t("q91_parallel")(q91(par = true))
-        t("q91_noparallel")(q91(par = false))
-        spark.catalog.clearCache()
-        t("q255_parallel")(q255(par = true))
-        spark.catalog.clearCache()
-        t("q255_noparallel")(q255(par = false))
-        spark.catalog.clearCache()
-        t("q89_parallel")(q89(par = true))
-        t("q89_noparallel")(q89(par = false))
-        spark.catalog.clearCache()
-        t("q261_parallel")(q261(par = true))
-        spark.catalog.clearCache()
-        t("q261_noparallel")(q261(par = false))
-        spark.catalog.clearCache()
-      }
-    } else if (args.headOption.contains("q89_var")) {
-      // round-14 margin hunt: stock sourceOverlap vs (a) sizes collected
-      // to a LocalRelation (kills two broadcast jobs over the persisted
-      // sets frame) and (b) no persist (re-aggregate per consumer).
-      val docs = graft.sources.Tables.parallel(
-        spark.read.parquet(s"$d/documents.parquet"))
-      def stock() = graft.operators.TextDedup.sourceOverlap(
-        docs, "text", "source", 3).orderBy("source_a", "source_b")
-      def localSizes() = {
-        val sets = docs
-          .withColumn("__toks", graft.functions.TextFunctions.tokens(col("text")))
-          .select(col("source"), explode(array_distinct(transform(
-            sequence(lit(1), greatest(size(col("__toks")) - 2, lit(1))),
-            i => concat_ws(" ", slice(col("__toks"), i, lit(3)))))).as("__g"))
-          .select(col("source"), md5(col("__g")).as("__h"))
-          .groupBy(col("__h"))
-          .agg(sort_array(collect_set(col("source"))).as("__ss"))
-          .persist()
-        val sizesLocal = graft.operators.OpsUtil.localized(
-          sets.select(explode(col("__ss")).as("source"))
-            .groupBy(col("source")).agg(count(lit(1)).as("__n")),
-          10000, "q89_var")
-        sets.filter(size(col("__ss")) >= 2)
-          .select(explode(flatten(transform(col("__ss"), (x, i) =>
-            transform(slice(col("__ss"), i + lit(2), size(col("__ss")) - i - 1),
-              y => struct(x.as("a"), y.as("b")))))).as("__pr"))
-          .groupBy(col("__pr.a").as("source_a"), col("__pr.b").as("source_b"))
-          .agg(count(lit(1)).as("n_shared"))
-          .join(broadcast(sizesLocal.select(col("source").as("source_a"),
-            col("__n").as("__na"))), "source_a")
-          .join(broadcast(sizesLocal.select(col("source").as("source_b"),
-            col("__n").as("__nb"))), "source_b")
-          .select(col("source_a"), col("source_b"), col("n_shared"),
-            round(col("n_shared").cast("double") /
-              (col("__na") + col("__nb") - col("n_shared")), 6).as("jaccard"))
-          .orderBy("source_a", "source_b")
-      }
-      def rawKey() = {
-        val sets = docs
-          .withColumn("__toks", graft.functions.TextFunctions.tokens(col("text")))
-          .select(col("source"), explode(array_distinct(transform(
-            sequence(lit(1), greatest(size(col("__toks")) - 2, lit(1))),
-            i => concat_ws(" ", slice(col("__toks"), i, lit(3)))))).as("__g"))
-          .groupBy(col("__g"))
-          .agg(sort_array(collect_set(col("source"))).as("__ss"))
-          .persist()
-        val sizes = sets.select(explode(col("__ss")).as("source"))
-          .groupBy(col("source")).agg(count(lit(1)).as("__n"))
-        sets.filter(size(col("__ss")) >= 2)
-          .select(explode(flatten(transform(col("__ss"), (x, i) =>
-            transform(slice(col("__ss"), i + lit(2), size(col("__ss")) - i - 1),
-              y => struct(x.as("a"), y.as("b")))))).as("__pr"))
-          .groupBy(col("__pr.a").as("source_a"), col("__pr.b").as("source_b"))
-          .agg(count(lit(1)).as("n_shared"))
-          .join(broadcast(sizes.select(col("source").as("source_a"),
-            col("__n").as("__na"))), "source_a")
-          .join(broadcast(sizes.select(col("source").as("source_b"),
-            col("__n").as("__nb"))), "source_b")
-          .select(col("source_a"), col("source_b"), col("n_shared"),
-            round(col("n_shared").cast("double") /
-              (col("__na") + col("__nb") - col("n_shared")), 6).as("jaccard"))
-          .orderBy("source_a", "source_b")
-      }
-      (1 to 3).foreach { _ =>
-        t("q89_stock")(stock())
-        spark.catalog.clearCache()
-        t("q89_localsizes")(localSizes())
-        spark.catalog.clearCache()
-        t("q89_rawkey")(rawKey())
-        spark.catalog.clearCache()
-      }
-    } else if (args.headOption.contains("pair_scale")) {
-      // Round-13 verdict item: pair-mass family at multiple synthesized
-      // scales with OUTPUT-ratio normalization — `pair_scale <dir>...`.
-      // One timed count() per (query, dir): the count drives the full
-      // plan and returns the output mass the cost should track; a noop
-      // write would hide the row count. Single-run timings (the
-      // interesting signal is orders of magnitude of cost-per-row, not
-      // ±15% weather).
-      // round 14: an optional comma-separated query list as the first
-      // operand widens the sweep to any registry slice. A candidate is
-      // treated as a query list when it contains a comma OR any member
-      // resolves in the registry; a list with an unknown member then
-      // RAISES naming it (round-15 ADVICE fix: previously one typo'd
-      // member silently reclassified the whole list as a data
-      // directory, surfacing later as a misleading parquet-path error).
-      val (qs, dirs) = args.lift(1) match {
-        case Some(a) if a.contains(",") ||
-            a.split(",").exists(SparkEntry.queries.contains) =>
-          val members = a.split(",").toSeq
-          val unknown = members.filterNot(SparkEntry.queries.contains)
-          require(unknown.isEmpty,
-            s"pair_scale: unknown quer${if (unknown.size == 1) "y" else "ies"} " +
-              s"${unknown.mkString(", ")} (known: see SparkEntry.queries)")
-          (members, args.drop(2))
-        case _ =>
-          (Seq("q250_dup_spans", "q54_dup_clusters",
-            "q136_semantic_dedup", "q159_similarity_join"), args.drop(1))
-      }
-      for (dir <- dirs; q <- qs) {
-        // Time a NOOP WRITE, not count(): count lets Catalyst prune
-        // payload columns and eliminate left-join legs, so a query
-        // whose cost lives in the payload (q264's pruned text, q266's
-        // scoring joins) times near-zero and flat across scales
-        // (observed round 14). The untimed count supplies output mass.
-        val t0 = System.nanoTime()
-        SparkEntry.queries(q)(spark, dir)
-          .write.format("noop").mode("overwrite").save()
-        val el = (System.nanoTime() - t0) / 1e9
-        spark.catalog.clearCache()
-        val n = SparkEntry.queries(q)(spark, dir).count()
-        spark.catalog.clearCache()
-        // measurement-integrity invariant (round-15 verdict item): a
-        // zero-row result at any scale means the corpus or the query
-        // slice is broken and the timing above measured nothing —
-        // self-report instead of emitting a too-good-to-be-true row
-        require(n > 0,
-          s"pair_scale: $q produced 0 rows on $dir — the timed noop " +
-            "write exercised no output mass; fix the corpus/query " +
-            "before trusting this sweep")
-        println(f"PAIRSCALE $q dir=$dir rows=$n time=$el%.2f")
-      }
-    } else if (args.headOption.contains("q160_fit_ab")) {
-      // Old 3-scan broadcast-leg fit vs the round-13 localized fit,
-      // interleaved in ONE JVM.
-      val orders = graft.sources.Tables.parallel(
-        spark.read.parquet(s"$d/orders.parquet"))
-      val dec38 = org.apache.spark.sql.types.DecimalType(38, 0)
-      def oldShape() = {
-        val pow = 100L
-        val q = graft.functions.Decimals.unscaledLong(col("o_totalprice"), 2)
-        val quantized = orders.select(col("o_orderkey"),
-          col("o_orderpriority"), q.as("__q"))
-        val perCat = quantized.groupBy(col("o_orderpriority"))
-          .agg(sum(col("__q")).as("__s"), count(col("__q")).as("__n"))
-        val total = quantized.agg(sum(col("__q")).cast(dec38).as("__ts"),
-          count(col("__q")).as("__tn"))
-        val gm = (col("__ts") / lit(pow)).cast("double") /
-          col("__tn").cast("double")
-        val looSum = ((col("__s").cast(dec38) - col("__q")) / lit(pow))
-          .cast("double")
-        quantized.join(broadcast(perCat), Seq("o_orderpriority"), "left")
-          .crossJoin(broadcast(total))
-          .select(col("o_orderkey"), col("o_orderpriority"),
-            col("__n").as("n_cat"),
-            round((looSum + lit(10.0) * gm) /
-              (col("__n").cast("double") - lit(1.0) + lit(10.0)), 6)
-              .as("loo_enc"))
-          .orderBy(col("o_orderkey"))
-      }
-      def newShape() = graft.operators.Features.looTargetEncode(orders,
-          "o_orderkey", "o_orderpriority", "o_totalprice",
-          scale = 2, smoothing = 10.0)
-        .orderBy(col("o_orderkey"))
-      // strict-subset floors: the probe scan+project alone, and the
-      // scan+total-order sort alone — if the sort floor ≈ the whole
-      // query, the residual operator cost is the constant, not the fit
-      def floorScan() = orders.select(col("o_orderkey"),
-        col("o_orderpriority"), col("o_totalprice"))
-      def floorSort() = floorScan().orderBy(col("o_orderkey"))
-      (1 to 3).foreach { _ =>
-        t("q160_floor_scan")(floorScan())
-        t("q160_floor_sort")(floorSort())
-        t("q160_old3scan")(oldShape())
-        t("q160_localfit")(newShape())
-      }
-    } else if (args.headOption.contains("q232_sub")) {
-      // Where does silhouette's constant go? Time strict subsets:
-      // the 64-dim decimal centroid agg alone, the rows+dot scan
-      // alone, then the full query — difference is the cross-join +
-      // final aggs + their plan-compile mass.
-      val emb = graft.sources.Tables.parallel(
-        spark.read.parquet(s"$d/embeddings.parquet"))
-      val dec38 = org.apache.spark.sql.types.DecimalType(38, 0)
-      def asD = col("embedding").cast("array<double>")
-      def cents() = {
-        val sums = (0 until 64).map(i => sum(graft.functions.Decimals
-          .unscaledLong(element_at(asD, i + 1), 6)).as(s"__s$i"))
-        emb.filter(col("label").isNotNull)
-          .groupBy(col("label").as("__cl"))
-          .agg(count(lit(1)).as("__n"), sums: _*)
-      }
-      def rowsOnly() = emb.filter(col("label").isNotNull)
-        .select(col("label"), col("vec_id"),
-          graft.functions.VectorFunctions.dot(asD, asD).as("__vv"))
-      val q232 = SparkEntry.queries("q232_silhouette")
-      (1 to 3).foreach { _ =>
-        t("q232_cents")(cents())
-        t("q232_rows")(rowsOnly())
-        t("q232_full")(q232(spark, d))
-      }
-    } else if (args.headOption.contains("q129_sub")) {
-      // q129 strict-subset decomposition in ONE JVM (round-14 verdict
-      // item 1): the disk-merge path's cost split across its stages —
-      // source lineage, first partitioned write, second merge (probe +
-      // slice + full-outer + dynamic overwrite), read-back sort.
-      import graft.pipeline.{TradeInPipeline, TradeInSchema}
-      import org.apache.spark.sql.DataFrame
-      def dec2p(f: String) =
-        s"(CAST(floor(floor(__p * $f) / 100.0) AS BIGINT) || '.' || " +
-          s"lpad(CAST(CAST(floor(__p * $f) AS BIGINT) % 100 AS STRING), 2, '0'))"
-      val now1 = lit("2024-06-01 10:00:00").cast("timestamp")
-      val now2 = lit("2024-06-02 10:00:00").cast("timestamp")
-      val month = date_format(col("TradeInDate"), "yyyy-MM")
-      val base = TradeInQueries.narrowBase(spark, d)
-        .repartition(spark.sparkContext.defaultParallelism, col("k"))
-        .persist()
-      def day1 = TradeInQueries.widen(base.filter(col("k") % 3 =!= 0))
-      def day2 = TradeInQueries.widen(base.filter(col("k") % 2 === 0))
-        .withColumn("__dup", explode(
-          when(col("__k") % 10 === 0, array(lit(false), lit(true)))
-            .otherwise(array(lit(false)))))
-        .withColumn("TradeInAmount",
-          when(col("__dup"), expr(dec2p("130.0")))
-            .otherwise(expr(dec2p("120.0"))))
-        .withColumn("TradeInDate",
-          when(col("__dup"), concat(date_format(col("__ts") + expr("INTERVAL 1 DAY"),
-            "yyyy-MM-dd'T'HH:mm:ss.SSSSSS"), lit("Z")))
-            .otherwise(col("TradeInDate")))
-      def tmp(): String = {
-        val p = java.nio.file.Files.createTempDirectory("graft_prof_q129")
-        p.toFile.deleteOnExit()
-        p.toString + "/target"
-      }
-      def merge1(w: String): Unit =
-        TradeInPipeline.mergeIntoTargetPartitioned(spark, w,
-          TradeInPipeline.stage(day1, now1), now1, partDay = month): Unit
-      def merge2(w: String): Unit =
-        TradeInPipeline.mergeIntoTargetPartitioned(spark, w,
-          TradeInPipeline.stage(day2, now2), now2, partDay = month): Unit
-      def sub(name: String)(prep: () => String)(body: String => Unit): Unit = {
-        val ts = (1 to 3).map { _ =>
-          val w = prep()
-          val t0 = System.nanoTime(); body(w)
-          (System.nanoTime() - t0) / 1e9
-        }
-        println(f"$name: min ${ts.min}%.2f  runs ${ts.map(x => f"$x%.2f").mkString(" ")}")
-      }
-      base.write.format("noop").mode("overwrite").save() // warm the pin
-      // merge source lineage alone (what pinSource materializes per run)
-      t("src_day2_typed")(TradeInSchema.toTyped(
-        TradeInPipeline.dedupSource(TradeInPipeline.stage(day2, now2))))
-      sub("merge1_write")(() => tmp())(w => merge1(w))
-      sub("merge2_full")(() => { val w = tmp(); merge1(w); w })(w => merge2(w))
-      sub("readback_sort")(() => { val w = tmp(); merge1(w); merge2(w); w }) {
-        w => spark.read.parquet(w)
-          .select(col("SaleInvoiceID"),
-            col("TradeInAmount").cast("double").as("TradeInAmount"),
-            col("TradeInDate"), col("TradeInDateEST"),
-            col("ETLRowInsertedEST"), col("ETLRowUpdatedEST"))
-          .orderBy("SaleInvoiceID")
-          .write.format("noop").mode("overwrite").save()
-      }
-      t("q129_full")(SparkEntry.queries("q129_tradein_merge_part")(spark, d))
-      // merge2 internals, step-timed (replicates upsertPartitioned's
-      // stages against a pre-seeded target; numbers are diagnostic)
-      def stepTimed(): Unit = {
-        val w = tmp(); merge1(w)
-        def step(n: String)(body: => Unit): Unit = {
-          val t0 = System.nanoTime(); body
-          println(f"  m2.$n: ${(System.nanoTime() - t0) / 1e9}%.2f")
-        }
-        val source0 = TradeInSchema.toTyped(
-            TradeInPipeline.dedupSource(TradeInPipeline.stage(day2, now2)))
-          .withColumn(TradeInSchema.updatedCol, lit(null).cast("timestamp"))
-          .withColumn(TradeInPipeline.partitionDayCol, month)
-        val src = source0.persist()
-        step("pin")(src.write.format("noop").mode("overwrite").save())
-        var parts0: Seq[String] = Nil
-        step("discover") {
-          parts0 = src.select(col(TradeInPipeline.partitionDayCol).cast("string"))
-            .distinct().collect().map(_.getString(0)).toSeq
-        }
-        var moved: Seq[String] = Nil
-        step("probe") {
-          moved = spark.read.parquet(w)
-            .filter(!col(TradeInPipeline.partitionDayCol).cast("string").isin(parts0: _*))
-            .select(col("SaleInvoiceID"),
-              col(TradeInPipeline.partitionDayCol).cast("string").as("__part"))
-            .join(src.select(col("SaleInvoiceID")).distinct(), Seq("SaleInvoiceID"), "left_semi")
-            .select(col("__part")).distinct()
-            .collect().map(_.getString(0)).toSeq
-        }
-        println(s"  m2.parts0=${parts0.size} moved=${moved.size}")
-        val parts = (parts0 ++ moved).distinct
-        val slice = spark.read.parquet(w)
-          .filter(col(TradeInPipeline.partitionDayCol).cast("string").isin(parts: _*))
-          .select(src.columns.map(col): _*)
-        val merged = graft.operators.Merge.upsert(slice, src, "SaleInvoiceID",
-          TradeInSchema.columns :+ TradeInPipeline.partitionDayCol,
-          audit = Some((TradeInSchema.insertedCol, TradeInSchema.updatedCol, now2)))
-        // untouched-partition listing: can the probe be skipped for free?
-        step("fs_list") {
-          val fs = new org.apache.hadoop.fs.Path(w)
-            .getFileSystem(spark.sparkContext.hadoopConfiguration)
-          val onDisk = fs.listStatus(new org.apache.hadoop.fs.Path(w)).toSeq
-            .filter(_.isDirectory).map(_.getPath.getName)
-            .filter(_.startsWith(TradeInPipeline.partitionDayCol + "="))
-            .map(_.stripPrefix(TradeInPipeline.partitionDayCol + "="))
-          println(s"  m2.untouched=${(onDisk.toSet -- parts0).size}")
-        }
-        // separate the join cost from the write cost: materialize the
-        // merged frame first (also makes later writes safe — the write
-        // plan must not lazily re-read the target it is overwriting)
-        val mergedP = merged.persist()
-        step("join")(mergedP.write.format("noop").mode("overwrite").save())
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        step("write_dyn32") {
-          mergedP.repartition(32, col(TradeInPipeline.partitionDayCol))
-            .write.mode("overwrite")
-            .partitionBy(TradeInPipeline.partitionDayCol).parquet(w)
-        }
-        step("write_dyn8") {
-          mergedP.repartition(8, col(TradeInPipeline.partitionDayCol))
-            .write.mode("overwrite")
-            .partitionBy(TradeInPipeline.partitionDayCol).parquet(w)
-        }
-        spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-        step("write_fresh32") {
-          mergedP.repartition(32, col(TradeInPipeline.partitionDayCol))
-            .write.mode("overwrite")
-            .partitionBy(TradeInPipeline.partitionDayCol).parquet(tmp())
-        }
-        mergedP.unpersist()
-        src.unpersist()
-      }
-      (1 to 3).foreach(_ => stepTimed())
-      base.unpersist()
-    } else if (args.headOption.contains("conf_sweep")) {
-      // Per-query fixed-cost experiment: the same query set under
-      // (AQE on/off) × (shuffle partitions) in ONE JVM, interleaved so
-      // host weather hits all cells. Floor-class stats queries pay
-      // multiple AQE stage-jobs against sub-second data; this measures
-      // whether the scheduling constant or the coalescing win dominates.
-      val names = args.drop(1).toSeq
-      val cells = Seq(("aqe32", "true", "32"), ("noaqe32", "false", "32"),
-        ("aqe8", "true", "8"), ("noaqe8", "false", "8"),
-        ("noaqe4", "false", "4"))
-      val acc = scala.collection.mutable.Map.empty[(String, String), Double]
-        .withDefaultValue(Double.MaxValue)
-      (1 to 3).foreach { _ =>
-        for ((cell, aqe, parts) <- cells) {
-          spark.conf.set("spark.sql.adaptive.enabled", aqe)
-          spark.conf.set("spark.sql.shuffle.partitions", parts)
-          for (n <- names) {
-            val t0 = System.nanoTime()
-            SparkEntry.queries(n)(spark, d)
-              .write.format("noop").mode("overwrite").save()
-            spark.catalog.clearCache()
-            val el = (System.nanoTime() - t0) / 1e9
-            acc((n, cell)) = math.min(acc((n, cell)), el)
-          }
-        }
-      }
-      println(f"${"query"}%-28s ${cells.map(_._1).map(c => f"$c%9s").mkString}")
-      for (n <- names) println(
-        f"$n%-28s ${cells.map(c => f"${acc((n, c._1))}%9.3f").mkString}")
-      for ((cell, _, _) <- cells) {
-        val tot = names.map(n => acc((n, cell))).sum
-        println(f"TOTAL $cell%-10s $tot%9.3f")
-      }
-    } else {
-      val names = if (args.nonEmpty) args.toSeq else Seq("q33_tradein_merge_2run")
-      names.foreach(n => t(n)(SparkEntry.queries(n)(spark, d)))
     }
     spark.stop()
   }

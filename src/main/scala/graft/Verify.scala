@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. Extra args
@@ -10,21 +9,7 @@ object Verify {
     QuerySupport.singlePartitionFinals = true // harness JVM: bench-scale finals
     val (sfDir, outDir) = (args(0), args(1))
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      // Contended hosts can stretch a broadcast build past the 300 s
-      // default and fabricate a failure (see Bench.scala); Verify must
-      // grade correctness, not host weather.
-      .config("spark.sql.broadcastTimeout", "3600")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.sources.Tables.configure(spark)
+    val spark = Harness.session(Harness.verifyConf(Harness.cpus()))
     new java.io.File(outDir).mkdirs()
     // A query that THROWS must leave a loud artifact, not just a stderr
     // line: round 6's driver compare reported "117/117 green" because the

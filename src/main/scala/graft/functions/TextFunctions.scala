@@ -182,10 +182,10 @@ object TextFunctions {
       regexp_replace(lower(text), lit("[^a-z0-9 ]"), lit(" ")),
       lit(" +"), lit(" ")))
 
-  /** Language-ID heuristic: argmax of per-language marker-token hit
-    * counts. A tiny n-gram/stopword table is enough to separate the
-    * corpus's language mix; at scale this is one codegen'd expression per
-    * row, no shuffle. */
+  /** Per-language marker tokens for the language-ID heuristic (argmax of
+    * marker-token hit counts, `MediaQueries.langScored`). A tiny stopword
+    * table is enough to separate the corpus's language mix; at scale this
+    * is one codegen'd expression per row, no shuffle. */
   val langMarkers: Map[String, Seq[String]] = Map(
     "en" -> Seq("the", "and", "of", "is", "to"),
     "es" -> Seq("el", "la", "de", "que", "y"),
@@ -202,7 +202,4 @@ object TextFunctions {
     ColumnBridge.column(
       graft.expressions.CountInSet(ColumnBridge.expression(arr), items))
   }
-
-  def langIdScore(text: Column, lang: String): Column =
-    countInSet(tokens(text), langMarkers(lang))
 }

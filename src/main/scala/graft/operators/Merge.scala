@@ -140,19 +140,13 @@ object Merge {
       partitionCol: String,
       dataCols: Seq[String],
       audit: Option[(String, String, Column)] = None,
-      probeMovedKeys: Boolean = true,
-      pinSource: Boolean = true): Seq[String] = {
-    // This method runs SEVERAL actions over `source` (partition
-    // discovery, the moved-key probe, the merge write). With pinning the
-    // source materializes once into cache; without it each action
-    // re-executes the source lineage, but COLUMN-PRUNED (discovery needs
-    // only the partition column, the probe only the key), so a cheap
-    // lineage can be cheaper to re-run pruned than to cache wide.
-    // Callers with an expensive un-pruneable source keep the default.
-    val src = if (pinSource) source.persist() else source
+      probeMovedKeys: Boolean = true): Seq[String] = {
+    // Several actions run over `source` (partition discovery, the
+    // moved-key probe, the merge write): pin it so it is computed once.
+    val src = source.persist()
     try upsertPartitionedPinned(spark, targetPath, src, key, partitionCol,
       dataCols, audit, probeMovedKeys)
-    finally if (pinSource) src.unpersist(blocking = false)
+    finally src.unpersist(blocking = false)
   }
 
   private def upsertPartitionedPinned(

@@ -189,13 +189,6 @@ object Relational {
     df.filter(pfx < cutoffCol)
   }
 
-  /** Broadcast-hint helper: dimension-side of star joins must broadcast —
-    * a shuffle of the fact table on a dim key is the canonical 100 TB
-    * mistake. */
-  def joinBroadcastDim(fact: DataFrame, dim: DataFrame, on: Seq[String],
-      how: String = "inner"): DataFrame =
-    fact.join(broadcast(dim), on, how)
-
   /** Existence semi/anti joins — never materialize the right side's
     * payload, dedup-free by construction. */
   def semi(left: DataFrame, right: DataFrame, on: Seq[String]): DataFrame =

@@ -1,6 +1,5 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.sources.{FrameSource, Tables}
@@ -19,15 +18,9 @@ object PipelineDemo {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val work = if (args.length > 1) args(1)
       else java.nio.file.Files.createTempDirectory("tradein").toString
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir", s"$work/warehouse")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Tables.configure(spark)
+    val spark = graft.Harness.session(Map(
+      "spark.sql.shuffle.partitions" -> "8",
+      "spark.sql.warehouse.dir" -> s"$work/warehouse"))
 
     // Day-1 batch: orders before the cutover; day-2 re-delivers a window
     // that overlaps day 1. TradeInDate is stamped "today" per run so

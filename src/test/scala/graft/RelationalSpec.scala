@@ -162,8 +162,12 @@ class RelationalSpec extends AnyFunSuite {
     // the guard also covers the FINAL group run flushed after the
     // loop: with 2 groups and maxGroups=1, the boundary partition
     // holding g1's tail and g2's head emits its 2nd run post-loop —
-    // that append must raise too (it was unchecked before round 13)
-    val two = (1 to 5000).map(i => (i % 2, i)).toDF("g", "id")
+    // that append must raise too (it was unchecked before round 13).
+    // g2 is the last 10 rows, so the last range partition always holds
+    // both groups; with two equal halves the sampled range bound (seeded
+    // by the RDD id, i.e. by what ran earlier in the JVM) sometimes
+    // landed exactly on the group boundary and nothing straddled it.
+    val two = (1 to 5000).map(i => (if (i > 4990) 1 else 0, i)).toDF("g", "id")
     val exTail = intercept[Exception] {
       Relational.groupedRowNumber(two, Seq("g"), Seq(col("id")), "rn",
         maxGroups = 1).count()

@@ -21,6 +21,20 @@ if grep -rniE 'spec-held|without an oracle row' src/main/scala --include='*.scal
   exit 1
 fi
 
+# One session builder: every main builds its SparkSession through
+# graft.Harness, so the harness confs cannot drift apart again (six
+# hand-copied builder chains once disagreed on cores, AQE and timeouts).
+# Code lines only — a scaladoc or `//` mention of the call is fine.
+if grep -rnE --include='*.scala' 'SparkSession\.builder\(' src/main/scala \
+    | grep -v '^src/main/scala/graft/Harness\.scala:' \
+    | grep -vE '^[^:]+:[0-9]+:[[:space:]]*(\*|//|/\*)' >/tmp/builder_hits.txt \
+    && [[ -s /tmp/builder_hits.txt ]]; then
+  echo "[precommit] FAIL: SparkSession.builder() outside graft.Harness in src/main —"
+  echo "[precommit] build the session with Harness.session(<conf>) instead:"
+  cat /tmp/builder_hits.txt
+  exit 1
+fi
+
 if git diff --cached --name-only | grep -q '^src/.*\.scala$'; then
   echo "[precommit] staged Scala sources detected - running sbt compile + test"
   sbt -batch 'set Test / testOptions += Tests.Argument("-oI")' compile test
