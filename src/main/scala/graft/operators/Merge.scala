@@ -104,7 +104,22 @@ object Merge {
     * target partitions are read via pushed-down partition pruning, the
     * standard [[upsert]] runs on that slice, and dynamic partition
     * overwrite replaces exactly the written partitions. Returns the
-    * partition values merged.
+    * partition values merged, as strings; a NULL partition value (the
+    * `__HIVE_DEFAULT_PARTITION__` dir) is merged like any other and
+    * returned as null, sorted first.
+    *
+    * Every job is sized to the batch, not to the session's shuffle
+    * width. The source is pinned with an eager `localCheckpoint()`, not
+    * `persist()`: Spark keeps a cached plan's final shuffle at
+    * `spark.sql.shuffle.partitions` (AQE may not change a cached plan's
+    * output partitioning), so a persisted 1k-row batch came back as 200
+    * mostly-empty partitions and partition discovery, the probe and the
+    * merge join each paid 200 tasks. The checkpoint runs as an ordinary
+    * AQE query whose exchanges coalesce to the batch's size. Trade-off:
+    * checkpoint blocks cannot be recomputed, so a lost executor fails
+    * the call. That is safe to retry: the dynamic-overwrite write
+    * commits at job end and the emptied-partition sweep is crash-healed
+    * (below), so re-running the same batch converges.
     *
     * Moved keys (`probeMovedKeys`, default on): a matched key whose
     * `partitionCol` value CHANGED in this batch (the reference's
@@ -141,12 +156,23 @@ object Merge {
       dataCols: Seq[String],
       audit: Option[(String, String, Column)] = None,
       probeMovedKeys: Boolean = true): Seq[String] = {
-    // Several actions run over `source` (partition discovery, the
-    // moved-key probe, the merge write): pin it so it is computed once.
-    val src = source.persist()
+    // Several jobs read `source` (partition discovery, the moved-key
+    // probe, the merge write): pin it so it is computed once.
+    val src = source.localCheckpoint()
     try upsertPartitionedPinned(spark, targetPath, src, key, partitionCol,
       dataCols, audit, probeMovedKeys)
-    finally src.unpersist(blocking = false)
+    finally OpsUtil.ckptRdds(src).foreach(_.unpersist(blocking = false))
+  }
+
+  /** `c IN parts` with NULL as an ordinary member, never NULL itself:
+    * a NULL partition value lives in its own directory
+    * (`__HIVE_DEFAULT_PARTITION__`) like any other value, so SQL's
+    * NULL-never-matches `IN` would drop its rows from the slice and
+    * empty a negated probe. */
+  private def isInParts(c: Column, parts: Seq[String]): Column = {
+    val values = parts.filter(_ != null)
+    when(c.isNull, lit(values.size < parts.size))
+      .otherwise(if (values.isEmpty) lit(false) else c.isin(values: _*))
   }
 
   private def upsertPartitionedPinned(
@@ -158,8 +184,12 @@ object Merge {
       dataCols: Seq[String],
       audit: Option[(String, String, Column)],
       probeMovedKeys: Boolean): Seq[String] = {
-    val parts0 = source.select(col(partitionCol).cast("string"))
-      .distinct().collect().map(_.getString(0)).toSeq
+    import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+    // The partition value as its directory records it: a string, with
+    // an empty string stored as NULL (both land in the default dir).
+    val partVal = nullif(col(partitionCol).cast("string"), lit(""))
+    val parts0 = source.select(partVal).distinct().collect()
+      .map(_.getString(0)).toSeq
     if (parts0.isEmpty) return Seq.empty
     val p = new org.apache.hadoop.fs.Path(targetPath)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -212,16 +242,17 @@ object Merge {
         val parts0Set = parts0.toSet
         fs.listStatus(p).toSeq
           .filter(st => st.isDirectory && st.getPath.getName.startsWith(prefix))
-          .map(st => org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-            .unescapePathName(st.getPath.getName.stripPrefix(prefix)))
+          .map(_.getPath.getName.stripPrefix(prefix))
+          .map(d => if (d == ExternalCatalogUtils.DEFAULT_PARTITION_NAME) null
+            else ExternalCatalogUtils.unescapePathName(d))
           .filterNot(parts0Set)
       }
     val movedParts: Seq[String] =
       if (!exists || !probeMovedKeys || untouchedOnDisk.isEmpty) Seq.empty
       else {
         targetRead
-          .filter(!col(partitionCol).cast("string").isin(parts0: _*))
-          .select(col(key), col(partitionCol).cast("string").as("__part"))
+          .filter(!isInParts(partVal, parts0))
+          .select(col(key), partVal.as("__part"))
           // NO forced broadcast: on an insert-heavy day the batch key
           // column is the whole batch; let AQE pick (it still
           // broadcasts when the batch is genuinely small — the
@@ -235,7 +266,7 @@ object Merge {
     val targetSlice0 =
       if (exists)
         targetRead
-          .filter(col(partitionCol).cast("string").isin(parts: _*))
+          .filter(isInParts(partVal, parts))
           .select(source.columns.map(col): _*)
       else spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], source.schema)
@@ -250,10 +281,8 @@ object Merge {
       else {
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy(col(key))
-          .orderBy(
-            when(col(partitionCol).cast("string").isin(parts0: _*), 0)
-              .otherwise(1).asc,
-            col(partitionCol).cast("string").desc)
+          .orderBy(when(isInParts(partVal, parts0), 0).otherwise(1).asc,
+            partVal.desc)
         targetSlice0.withColumn("__rn", row_number().over(w))
           .filter(col("__rn") === 1).drop("__rn")
       }
@@ -277,37 +306,35 @@ object Merge {
         source.select(dataCols.map(col) ++ auditCols: _*)
       } else upsert(targetSlice, source, key, dataCols, audit)
     // Only a moved-from partition can end up with zero output rows (every
-    // source partition receives at least its own batch rows), so the
-    // persist + emptied-partition sweep is paid only on moved-key runs.
-    val merged = if (movedParts.nonEmpty) merged0.persist() else merged0
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    // source partition receives at least its own batch rows), so only
+    // moved-key runs record the partitions written, observed during the
+    // write pass itself (a struct, because collect_set skips NULLs).
+    val written = org.apache.spark.sql.Observation()
+    val merged =
+      if (movedParts.isEmpty) merged0
+      else merged0.observe(written, collect_set(struct(partVal)).as("parts"))
     // Partition-aligned write: without this every shuffle task holds rows
     // of every output partition, so a P-partition write emits up to
     // tasks×P files (measured 3200 for a 100-month target at 32 tasks —
     // the file-count explosion IS the slow path, locally and at scale).
-    // Explicit width = cluster parallelism: each output partition still
-    // lands in exactly one task (one file per partition dir), but the
-    // file WRITES spread over the cluster's cores instead of the
-    // session's reduce sizing — a session tuned to few shuffle
-    // partitions would otherwise serialize an 84-dir write onto that
-    // few tasks.
-    val writeWidth = math.max(spark.sparkContext.defaultParallelism,
-      spark.sessionState.conf.numShufflePartitions)
-    try merged.repartition(writeWidth, col(partitionCol))
-      .write.mode("overwrite").partitionBy(partitionCol).parquet(targetPath)
-    finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-    }
+    // Width = the number of rewritten partitions: each partition dir
+    // still lands in exactly one task (one file per dir), and a 2-day
+    // batch pays 2 write tasks, not the session's 200-way reduce width
+    // (which left 195 of 200 write tasks empty on a daily batch). Dynamic
+    // overwrite is a per-write option, so the caller's session conf is
+    // never touched (concurrent streaming batches share that session).
+    merged.repartition(parts.size, col(partitionCol))
+      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+      .partitionBy(partitionCol).parquet(targetPath)
     if (movedParts.nonEmpty) {
-      val written = merged.select(col(partitionCol).cast("string"))
-        .distinct().collect().map(_.getString(0)).toSet
-      merged.unpersist()
-      for (part <- movedParts if !written.contains(part))
-        fs.delete(new org.apache.hadoop.fs.Path(p, s"$partitionCol=$part"), true)
+      val writtenParts = written.get("parts")
+        .asInstanceOf[scala.collection.Seq[org.apache.spark.sql.Row]]
+        .map(_.getString(0)).toSet
+      for (part <- movedParts if !writtenParts.contains(part))
+        fs.delete(new org.apache.hadoop.fs.Path(p,
+          ExternalCatalogUtils.getPartitionPathString(partitionCol, part)), true)
     }
-    parts.sorted
+    parts.sortBy(Option(_))
   }
 
   /** Snapshot swap: write the new snapshot to a temp path, then promote

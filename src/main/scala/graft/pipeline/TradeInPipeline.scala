@@ -119,9 +119,13 @@ object TradeInPipeline {
     *
     * `partDay` is the partition expression over the typed source row —
     * `to_date(TradeInDate)` by default; coarser keys (month) suit
-    * backfills whose batches span years. Staging rows always carry a
-    * parseable `TradeInDate` (stage()'s F4 fallback), so the partition
-    * value is never null. */
+    * backfills whose batches span years. The partition value CAN be
+    * null: a row whose `TradeInDate` is empty or missing (legal input,
+    * FIXTURES §A.1) keeps a NULL `TradeInDate` through stage(), so its
+    * `TradeInDay` is NULL and it lives in the
+    * `TradeInDay=__HIVE_DEFAULT_PARTITION__` directory, which
+    * [[graft.operators.Merge.upsertPartitioned]] merges like any other
+    * partition. */
   def mergeIntoTargetPartitioned(
       spark: SparkSession, targetPath: String, staging: DataFrame,
       now: Column, tieBreak: Seq[Column] = Nil,

@@ -280,6 +280,147 @@ class MergeSpec extends AnyFunSuite {
     assert(spark.read.parquet(dir).count() == 2)
   }
 
+  /** (day, k, v) rows of a partitioned target, NULL days included. */
+  private def readDays(dir: String): Set[(String, Int, String)] =
+    spark.read.parquet(dir)
+      .select(col("day").cast("string"), col("k"), col("v"))
+      .as[(String, Int, String)].collect().toSet
+
+  private def nullDays(rows: (Option[String], Int, String)*) =
+    rows.toDF("day", "k", "v")
+
+  private val nullDir = "day=__HIVE_DEFAULT_PARTITION__"
+
+  test("upsertPartitioned: NULL-day target rows outside the batch survive") {
+    val dir = java.nio.file.Files.createTempDirectory("pnull").toString + "/t"
+    nullDays((None, 1, "n1"), (None, 2, "n2"), (Some("2024-01-01"), 3, "c0"))
+      .write.partitionBy("day").parquet(dir)
+    // the batch updates k=1 inside the NULL partition, inserts k=5 with
+    // an empty day (stored in the same default dir) and inserts k=4;
+    // k=2 shares the rewritten NULL partition but is not in the batch
+    val batch = nullDays((None, 1, "n1b"), (Some(""), 5, "e1"),
+      (Some("2024-01-02"), 4, "d1"))
+    val merged = Merge.upsertPartitioned(spark, dir, batch, "k", "day",
+      Seq("day", "k", "v"))
+    assert(merged == Seq(null, "2024-01-02"))
+    assert(readDays(dir) == Set((null, 1, "n1b"), (null, 2, "n2"),
+      (null, 5, "e1"), ("2024-01-01", 3, "c0"), ("2024-01-02", 4, "d1")))
+  }
+
+  test("upsertPartitioned: a key moves from the NULL day to a day and back") {
+    val dir = java.nio.file.Files.createTempDirectory("pnull2").toString + "/t"
+    nullDays((None, 1, "a0"), (None, 2, "b0"), (Some("2024-01-01"), 3, "c0"))
+      .write.partitionBy("day").parquet(dir)
+    val there = Merge.upsertPartitioned(spark, dir,
+      nullDays((Some("2024-01-05"), 1, "a1")), "k", "day", Seq("day", "k", "v"))
+    assert(there == Seq(null, "2024-01-05"))
+    assert(readDays(dir) == Set(("2024-01-05", 1, "a1"), (null, 2, "b0"),
+      ("2024-01-01", 3, "c0")))
+    val back = Merge.upsertPartitioned(spark, dir,
+      nullDays((None, 1, "a2")), "k", "day", Seq("day", "k", "v"))
+    assert(back == Seq(null, "2024-01-05"))
+    assert(readDays(dir) == Set((null, 1, "a2"), (null, 2, "b0"),
+      ("2024-01-01", 3, "c0")))
+    assert(!new java.io.File(s"$dir/day=2024-01-05").exists(),
+      "the day emptied by the move back was not swept")
+  }
+
+  test("upsertPartitioned: a NULL partition emptied by a move is swept") {
+    val dir = java.nio.file.Files.createTempDirectory("pnull3").toString + "/t"
+    nullDays((None, 1, "a0"), (Some("2024-01-02"), 2, "b0"))
+      .write.partitionBy("day").parquet(dir)
+    Merge.upsertPartitioned(spark, dir,
+      nullDays((Some("2024-01-05"), 1, "a1")), "k", "day", Seq("day", "k", "v"))
+    assert(readDays(dir) == Set(("2024-01-05", 1, "a1"), ("2024-01-02", 2, "b0")))
+    assert(!new java.io.File(s"$dir/$nullDir").exists())
+  }
+
+  test("upsertPartitioned: the sweep finds an escaped partition dir") {
+    val dir = java.nio.file.Files.createTempDirectory("pesc2").toString + "/t"
+    // value "x:y" is stored as the escaped dir "part=x%3Ay"
+    Seq(("x:y", 1, "a0"), ("b", 2, "b0")).toDF("part", "k", "v")
+      .write.partitionBy("part").parquet(dir)
+    Merge.upsertPartitioned(spark, dir, Seq(("c", 1, "a1")).toDF("part", "k", "v"),
+      "k", "part", Seq("part", "k", "v"))
+    val now = spark.read.parquet(dir).select("part", "k", "v")
+      .as[(String, Int, String)].collect().toSet
+    assert(now == Set(("c", 1, "a1"), ("b", 2, "b0")))
+    assert(!new java.io.File(s"$dir/part=x%3Ay").exists())
+  }
+
+  /** Runs `body` with session confs set, restoring each afterwards. */
+  private def withConf[A](kv: (String, String)*)(body: => A): A = {
+    val prev = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kv.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  test("upsertPartitioned leaves the session's partitionOverwriteMode alone") {
+    val conf = "spark.sql.sources.partitionOverwriteMode"
+    val dir = java.nio.file.Files.createTempDirectory("pconf").toString + "/t"
+    Seq(("2024-01-01", 1, "a0"), ("2024-01-02", 2, "b0")).toDF("day", "k", "v")
+      .write.partitionBy("day").parquet(dir)
+    withConf(conf -> "STATIC") {
+      Merge.upsertPartitioned(spark, dir,
+        Seq(("2024-01-03", 1, "a1")).toDF("day", "k", "v"), "k", "day",
+        Seq("day", "k", "v"))
+      assert(spark.conf.get(conf) == "STATIC")
+    }
+    // dynamic overwrite still applied to the write itself: the partition
+    // the batch never touched survived a STATIC session
+    assert(readDays(dir) == Set(("2024-01-03", 1, "a1"), ("2024-01-02", 2, "b0")))
+  }
+
+  /** Tasks run by the jobs `body` starts, read from the status tracker.
+    * The tracker is fed asynchronously, in event order: a marker job run
+    * afterwards has ended there only once every earlier event has. */
+  private def tasksRun(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val tracker = sc.statusTracker
+    def inGroup(group: String)(f: => Unit): Seq[Int] = {
+      sc.setJobGroup(group, group)
+      try f finally sc.clearJobGroup()
+      tracker.getJobIdsForGroup(group).toSeq
+    }
+    val id = java.util.UUID.randomUUID().toString
+    inGroup(s"body-$id")(body)
+    inGroup(s"marker-$id")(sc.parallelize(Seq(1), 1).count())
+    val deadline = System.nanoTime() + 30L * 1000000000L
+    def markerDone = tracker.getJobIdsForGroup(s"marker-$id").exists(j =>
+      tracker.getJobInfo(j).exists(
+        _.status == org.apache.spark.JobExecutionStatus.SUCCEEDED))
+    while (!markerDone && System.nanoTime() < deadline) Thread.sleep(20)
+    assert(markerDone, "status tracker never caught up")
+    tracker.getJobIdsForGroup(s"body-$id").toSeq
+      .flatMap(j => tracker.getJobInfo(j).toSeq.flatMap(_.stageIds.toSeq))
+      .distinct.flatMap(tracker.getStageInfo(_)).map(_.numCompletedTasks).sum
+  }
+
+  test("upsertPartitioned sizes its jobs to the batch, not to the shuffle width") {
+    // a moved-key run exercises every job: discovery, probe, merge, write
+    def movedKeyRun(partitions: Int): Int = {
+      val dir = java.nio.file.Files.createTempDirectory("pwidth").toString + "/t"
+      Seq(("2024-01-01", 1, "a0"), ("2024-01-01", 2, "b0"), ("2024-01-02", 3, "c0"))
+        .toDF("day", "k", "v").write.partitionBy("day").parquet(dir)
+      // deduped like the pipeline's source, so its plan ends in a shuffle
+      val batch = Seq(("2024-01-03", 1, "a1"), ("2024-01-02", 4, "d1"))
+        .toDF("day", "k", "v").dropDuplicates("k")
+      withConf("spark.sql.adaptive.enabled" -> "true",
+          "spark.sql.shuffle.partitions" -> partitions.toString) {
+        tasksRun(Merge.upsertPartitioned(spark, dir, batch, "k", "day",
+          Seq("day", "k", "v")))
+      }
+    }
+    val narrow = movedKeyRun(4)
+    val wide = movedKeyRun(200)
+    assert(narrow > 0)
+    assert(wide <= narrow + 8, s"tasks: $wide at 200 partitions, $narrow at 4")
+  }
+
   test("snapshotDiff classifies insert/update/delete, emits new-side NULLs, drops unchanged") {
     val spark = TestSpark.spark
     import spark.implicits._

@@ -35,6 +35,20 @@ if grep -rnE --include='*.scala' 'SparkSession\.builder\(' src/main/scala \
   exit 1
 fi
 
+# Library calls never flip session state: an operator or pipeline stage
+# that sets a session conf races every other query sharing the session
+# (concurrent streaming batches). Pass per-call options instead, e.g.
+# `.option("partitionOverwriteMode", "dynamic")` on a write.
+if grep -rnE --include='*.scala' 'spark\.conf\.set\(' \
+    src/main/scala/graft/operators src/main/scala/graft/pipeline \
+    | grep -vE '^[^:]+:[0-9]+:[[:space:]]*(\*|//|/\*)' >/tmp/confset_hits.txt \
+    && [[ -s /tmp/confset_hits.txt ]]; then
+  echo "[precommit] FAIL: spark.conf.set( in a library operator or pipeline stage —"
+  echo "[precommit] pass a per-call option instead of mutating the caller's session:"
+  cat /tmp/confset_hits.txt
+  exit 1
+fi
+
 if git diff --cached --name-only | grep -q '^src/.*\.scala$'; then
   echo "[precommit] staged Scala sources detected - running sbt compile + test"
   sbt -batch 'set Test / testOptions += Tests.Argument("-oI")' compile test
