@@ -33,7 +33,6 @@ import java.nio.file.{Files, Paths}
   */
 object Bench {
   def main(args: Array[String]): Unit = {
-    QuerySupport.singlePartitionFinals = true // harness JVM: bench-scale finals
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = Harness.session(Harness.benchConf)
     // JVM warmup so the first measured query doesn't absorb codegen

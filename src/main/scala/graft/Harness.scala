@@ -36,8 +36,8 @@ object Harness {
     // sampled queries ran 41.1 s under (AQE on, partitions=cpus) vs
     // 31.0 s at (AQE off, partitions=8): fewer reduce tasks per stage and
     // no per-stage AQE replan/job split. Scan parallelism is unaffected
-    // (file splits), map-side combine is unaffected, and
-    // singlePartitionFinals already bounds the finals.
+    // (file splits), map-side combine is unaffected, and the registry's
+    // ordered1 finals are single-partition already.
     "spark.sql.adaptive.enabled" -> "false",
     "spark.sql.shuffle.partitions" -> "8",
     // Same constant-attack family (12-query interleaved A/B): constraint

@@ -15,7 +15,6 @@ object Prof {
     val modes = Seq("time_q", "explain_q", "gen_scale", "gen_fresh")
     require(args.headOption.exists(modes.contains),
       s"usage: Prof ${modes.mkString("|")} <args> (see the Prof scaladoc)")
-    QuerySupport.singlePartitionFinals = true // harness JVM: bench-scale finals
     val d = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = Harness.session(Harness.benchConf)
     def t(name: String)(df: => org.apache.spark.sql.DataFrame): Unit = {

@@ -7,10 +7,10 @@ import org.apache.spark.sql.types._
 import graft.operators.Similarity
 
 /** Helpers shared by every query-registry family object
-  * ([[graft.queries]]) and the harness mains: deterministic final
-  * ordering, exact decimal aggregation, boilerplate fixtures, and the
-  * DuckDB-oracle SQL fragment builders. Moved verbatim from SparkEntry
-  * in the round-12 registry split. */
+  * ([[graft.queries]]): deterministic final ordering, exact decimal
+  * aggregation, boilerplate fixtures, and the DuckDB-oracle SQL
+  * fragment builders. Moved verbatim from SparkEntry in the round-12
+  * registry split. */
 private[graft] object QuerySupport {
 
   /** Total order for a SMALL result built on a shuffle-free expensive
@@ -23,58 +23,14 @@ private[graft] object QuerySupport {
     * that fit one partition — large sorted outputs should sort the
     * narrow base early instead (see TradeInQueries.rawSpark).
     *
-    * Scope note: the totally-ordered OUTPUT itself is a harness
-    * artifact (the oracle compare reads rows in order); production
-    * jobs at 100 TB do not demand a total order of a fact table, and
-    * per-fact-row results there would keep a parallel `orderBy` (or no
-    * sort at all). At bench scale every such output is ≤ ~1M narrow
-    * rows, where the single-partition sort measurably beats orderBy's
-    * extra range-sampling job (q55's three-way A/B, round 6; q14,
-    * round 7).
-    *
-    * That scope is ENFORCED, not advisory: the single-partition form is
-    * taken only under the bench/verify harness ([[singlePartitionFinals]]
-    * — set by Bench/Prof/Verify mains or `SPARK_GRAFT_BENCH=1`); any
-    * other caller gets the parallel range-sort, so a library user can
-    * never inherit a single-partition Exchange on a 100 TB final
-    * (PlanShapeSpec pins both shapes). */
+    * Traffic: registry query bodies only (no operator, pipeline or
+    * streaming code calls it), run by Verify, Bench, Prof, PlanAudit,
+    * the perfbench query mix and the specs, all on test corpora of at
+    * most sf0.1 — outputs of at most ~1M narrow rows, where the
+    * single-partition sort measurably beats orderBy's extra
+    * range-sampling job (q55's three-way A/B, round 6; q14, round 7). */
   private[graft] def ordered1(df: DataFrame, keys: Column*): DataFrame =
-    if (singlePartitionFinals) df.repartition(1).sortWithinPartitions(keys: _*)
-    else df.orderBy(keys: _*)
-
-  /** [[ordered1]] for WIDE finals: above ~500k emitted rows × ~10
-    * columns the single-partition sort's one task serializes the whole
-    * materialization and LOSES to the parallel range sort even with its
-    * extra sampling job (q161 A/B, round 11: 1.86 s single-task vs
-    * 1.36 s range-sorted at 8 shuffle partitions — the only registry
-    * query above that threshold). Same output order, different exchange
-    * shape; non-harness callers get the identical parallel sort.
-    *
-    * Round 19: under the harness the child is persisted before the
-    * range sort — `orderBy`'s range-boundary SAMPLING job otherwise
-    * executes the child's full projection DAG a second time (the
-    * sampler reads every row of every partition; only the kept sample
-    * is small). With the persist, the sampling pass materializes the
-    * cache once and the sort pass re-reads it (Prof q161_sub, same-JVM
-    * warm min-of-3 ×3 rounds: whole 2.35/2.62/2.19 s vs persist+sort
-    * 2.07/2.21/2.02 s — lower in all three rounds). Values are
-    * unchanged (persist is not a semantic operator); the bench/verify
-    * harness clears the cache after every query. NOT taken off-harness:
-    * at 100 TB, caching an output-sized frame to dodge one sampling
-    * pass trades bounded recompute for corpus-sized memory/disk
-    * pressure — and production callers don't demand totally-ordered
-    * fact-table output in the first place (see [[ordered1]]'s scope
-    * note). */
-  private[graft] def orderedWide(df: DataFrame, keys: Column*): DataFrame =
-    if (singlePartitionFinals) df.persist().orderBy(keys: _*)
-    else df.orderBy(keys: _*)
-
-  /** Harness flag gating [[ordered1]]'s single-partition final sort.
-    * Defaults to the `SPARK_GRAFT_BENCH=1` env (manual runs); the
-    * Bench/Prof/Verify mains set it true for their own JVM. @volatile:
-    * written once at main() startup, read from query builders. */
-  @volatile private[graft] var singlePartitionFinals: Boolean =
-    sys.env.get("SPARK_GRAFT_BENCH").contains("1")
+    df.repartition(1).sortWithinPartitions(keys: _*)
 
   /** Exactly 12 tokens — q84's injected boilerplate span (one full
     * 12-token span, so it aligns with the span grid in both engines). */
@@ -87,6 +43,10 @@ private[graft] object QuerySupport {
     "subscribe to our newsletter for the latest updates"
 
   def dec(c: Column, scale: Int): Column = c.cast(DecimalType(18, scale))
+  /** See [[graft.functions.Decimals]] — guarded fast-path quantization +
+    * exact final division (the q01 2.7× fix, shared with TimeSeries). */
+  def unscaledLong(c: Column, scale: Int): Column =
+    graft.functions.Decimals.unscaledLong(c, scale)
   /** SUM with exact decimal accumulation, canonical double output.
     *
     * Semantics are identical to `sum(dec(c, scale)).cast("double")` — the
@@ -102,10 +62,6 @@ private[graft] object QuerySupport {
     * same order as the decimal(28) widened buffer's 1e28 — either needs a
     * two-level (partial/final) re-aggregation design well before 100 TB of
     * a single skewed group. */
-  /** See [[graft.functions.Decimals]] — guarded fast-path quantization +
-    * exact final division (the q01 2.7× fix, shared with TimeSeries). */
-  def unscaledLong(c: Column, scale: Int): Column =
-    graft.functions.Decimals.unscaledLong(c, scale)
   def dsum(c: Column, scale: Int): Column =
     graft.functions.Decimals.dsum(c, scale)
   /** Two-level split of [[dsum]] for re-aggregation (rollup/cube over
@@ -123,9 +79,6 @@ private[graft] object QuerySupport {
     "CAST(SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,4))) AS DOUBLE)"
 
 
-  /** Shared CTE text for the minhash-family oracles: one md5 per shingle,
-    * k components from disjoint 8-hex-char digest slices (mirrors
-    * [[graft.operators.TextDedup.minhashSignatures]]). */
   /** Exact eval-overlap decontamination answer (q73); q101's Bloom
     * variant must reproduce it bit-for-bit because its sketch only
     * pre-filters ahead of the exact-verify join. */
@@ -140,6 +93,9 @@ private[graft] object QuerySupport {
       |GROUP BY doc_id HAVING count(*) >= 1
       |ORDER BY doc_id""".stripMargin
 
+  /** Shared CTE text for the minhash-family oracles: one md5 per shingle,
+    * k components from disjoint 8-hex-char digest slices (mirrors
+    * [[graft.operators.TextDedup.minhashSignatures]]). */
   val shinglesCte =
     """toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
       |hs AS (SELECT doc_id,
@@ -184,9 +140,6 @@ private[graft] object QuerySupport {
        |  ELSE round(${(k - 1).toDouble} / (($digits) / 4503599627370496.0), 4) END""".stripMargin
   }
 
-  /** One profile row (matching [[graft.operators.Profiling.profile]]) for
-    * column `c` of `kind` ∈ {int, str, dbl, ts} on `table`; with `group`
-    * set, one row per group value ([[Profiling.profileBy]]). */
   /** DuckDB mirror of [[graft.functions.Decimals.dmean]]: quantize at
     * `scale` through the same DECIMAL cast, sum in HUGEINT, half-up
     * integer mean `floor((2S + n)/2n)`, one final double conversion. */
@@ -218,6 +171,9 @@ private[graft] object QuerySupport {
        |  FROM nodes n LEFT JOIN c$i ON n.node = c$i.node)""".stripMargin
   }
 
+  /** One profile row (matching [[graft.operators.Profiling.profile]]) for
+    * column `c` of `kind` ∈ {int, str, dbl, ts} on `table`; with `group`
+    * set, one row per group value ([[Profiling.profileBy]]). */
   def profileColSql(table: String, c: String, kind: String, k: Int,
       group: Option[String] = None): String = {
     val gSel = group.map(g => s"$g, ").getOrElse("")

@@ -6,7 +6,6 @@ import java.nio.file.{Files, Paths}
   * local single-query iteration loop; the driver passes exactly two. */
 object Verify {
   def main(args: Array[String]): Unit = {
-    QuerySupport.singlePartitionFinals = true // harness JVM: bench-scale finals
     val (sfDir, outDir) = (args(0), args(1))
     val only = args.drop(2).toSet
     val spark = Harness.session(Harness.verifyConf(Harness.cpus()))

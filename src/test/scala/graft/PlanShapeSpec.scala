@@ -240,33 +240,31 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(joins(plan) == 1)
   }
 
-  test("ordered1 finals: parallel orderBy for library callers, single-partition only under the harness flag") {
+  test("ordered1 finals are single-partition; q161 range-sorts its persisted child") {
     val d = "/root/testdata/sf0.001"
     assume(new java.io.File(d).isDirectory)
     graft.sources.Tables.configure(spark)
-    val names = Seq("q02_dedup_latest", "q14_window_frames", "q19_merge_upsert")
     def singleReps(df: org.apache.spark.sql.DataFrame): Int =
       df.queryExecution.optimizedPlan.collect {
         case r: org.apache.spark.sql.catalyst.plans.logical.Repartition
           if r.numPartitions == 1 => r
       }.size
-    def globalSorts(df: org.apache.spark.sql.DataFrame): Int =
+    def globalSorts(df: org.apache.spark.sql.DataFrame) =
       df.queryExecution.optimizedPlan.collect {
         case s: org.apache.spark.sql.catalyst.plans.logical.Sort if s.global => s
-      }.size
-    assert(!QuerySupport.singlePartitionFinals,
-      "test JVM must not run with SPARK_GRAFT_BENCH=1")
-    for (n <- names) {
+      }
+    for (n <- Seq("q02_dedup_latest", "q14_window_frames", "q19_merge_upsert")) {
       val plan = SparkEntry.queries(n)(spark, d)
-      assert(singleReps(plan) == 0,
-        s"$n plans a single-partition Exchange with the harness flag OFF")
-      assert(globalSorts(plan) >= 1, s"$n must still pin a total order")
+      assert(singleReps(plan) == 1, s"$n: ordered1 must plan one single-partition Repartition")
+      assert(globalSorts(plan).isEmpty, s"$n: ordered1 must not plan a global Sort")
     }
-    QuerySupport.singlePartitionFinals = true
-    try for (n <- names) {
-      assert(singleReps(SparkEntry.queries(n)(spark, d)) == 1,
-        s"$n: harness flag must take the measured single-partition form")
-    } finally QuerySupport.singlePartitionFinals = false
+    try {
+      val sorts = globalSorts(SparkEntry.queries("q161_feature_scale")(spark, d))
+      assert(sorts.size == 1, "q161 must range-sort its wide final")
+      assert(sorts.head.child.isInstanceOf[
+        org.apache.spark.sql.execution.columnar.InMemoryRelation],
+        "q161 must sort its persisted child, not re-run the projection")
+    } finally spark.catalog.clearCache()
   }
 
   test("profile: ONE aggregation pass, no Expand, one scan — the claim vs count(distinct)") {

@@ -49,6 +49,23 @@ if grep -rnE --include='*.scala' 'spark\.conf\.set\(' \
   exit 1
 fi
 
+# No global flags in library or query code: an env read or a @volatile
+# var lets a harness run a different plan from the one tests and library
+# callers get. Harness mains may read env; sources/ reads deployment
+# settings (JDBC URL, auth).
+G=src/main/scala/graft
+if grep -rnE --include='*.scala' 'sys\.env|@volatile' \
+    $G/operators $G/pipeline $G/streaming $G/queries $G/functions \
+    $G/expressions $G/plans $G/QuerySupport.scala $G/SparkEntry.scala \
+    $G/TradeInQueries.scala $G/MediaQueries.scala \
+    | grep -vE '^[^:]+:[0-9]+:[[:space:]]*(\*|//|/\*)' >/tmp/flag_hits.txt \
+    && [[ -s /tmp/flag_hits.txt ]]; then
+  echo "[precommit] FAIL: sys.env or @volatile in library or query code —"
+  echo "[precommit] take the value as a parameter from the caller instead:"
+  cat /tmp/flag_hits.txt
+  exit 1
+fi
+
 if git diff --cached --name-only | grep -q '^src/.*\.scala$'; then
   echo "[precommit] staged Scala sources detected - running sbt compile + test"
   sbt -batch 'set Test / testOptions += Tests.Argument("-oI")' compile test
@@ -70,7 +87,7 @@ if git diff --cached --name-only | grep -q '^src/.*\.scala$'; then
     echo "[precommit] running graft.Verify + oracle compare at $SF_DIR"
     VOUT=$(mktemp -d /tmp/graft_verify.XXXXXX)
     trap 'rm -rf "$VOUT"' EXIT
-    SPARK_GRAFT_CPUS=8 sbt -batch "runMain graft.Verify $SF_DIR $VOUT"
+    sbt -batch "runMain graft.Verify $SF_DIR $VOUT"
     if [[ "$(cat "$VOUT/_failed.json" 2>/dev/null || echo missing)" != "{}" ]]; then
       echo "[precommit] FAIL: verify failure manifest non-empty or missing"
       echo "[precommit] (GRAFT_SKIP_ORACLE=1 skips this gate entirely):"
