@@ -26,22 +26,6 @@ object PlanAudit {
   private def count(plan: String, token: String): Int =
     token.r.findAllIn(plan).length
 
-  /** Production-config audit (round 17): the static AQE-off table in
-    * PLANS.md describes the plans Catalyst COMPILES; this mode audits
-    * the plans the production config actually RUNS — AQE on, runtime
-    * stage statistics allowed to re-plan joins and coalesce/skew-split
-    * reads — for the most expensive registry queries at sf0.1. For each
-    * query it records the static (AQE-off) counts and the FINAL
-    * adaptive plan's counts (the query is executed so every
-    * AdaptiveSparkPlan finalizes), then verdicts the diff: a production
-    * plan that GAINS a shuffle or LOSES a broadcast relative to the
-    * static tree is flagged; coalesced reads and broadcast-replans are
-    * noted as the AQE wins they are. Output: PLANS_prod.md.
-    *
-    * Queries audited: the top `n` by the round-16 driver bench artifact
-    * (BENCH_r16.json) plus any registry entries absent from that
-    * artifact (new this round, never audited under production config).
-    */
   /** Round-17 verdict item 3: the five adjudicated AQE-on plan diffs
     * (BASELINE.md round-17 production-config audit) as STRUCTURAL
     * CONTRACTS, checked by `PlanAudit prod <dir> <bench> <topN> assert`
@@ -73,12 +57,6 @@ object PlanAudit {
     "q72_curation_chain" -> (3, 1),
     "q270_docnll" -> (3, 0))
 
-  /** One query's executed-tree audit under both AQE settings: the
-    * counts prodAudit tabulates and PlanPinSpec gates on. Walked, not
-    * string-counted (see the comment inside). Restores the session's
-    * AQE setting; clears the cache after each run. Extracted from
-    * prodAudit (round 19) so the pin contract can run inside the test
-    * JVM's shared session instead of only under a manual runMain. */
   private[graft] final case class AuditRow(name: String,
       offSh: Int, offBc: Int, offRaw: Int,
       onSh: Int, onBc: Int, onRaw: Int,
@@ -119,6 +97,12 @@ object PlanAudit {
     raw ++ pin
   }
 
+  /** One query's executed-tree audit under both AQE settings: the
+    * counts prodAudit tabulates and PlanPinSpec gates on. Walked, not
+    * string-counted (see the comment inside). Restores the session's
+    * AQE setting; clears the cache after each run. Extracted from
+    * prodAudit (round 19) so the pin contract can run inside the test
+    * JVM's shared session instead of only under a manual runMain. */
   private[graft] def auditOne(spark: SparkSession, d: String,
       name: String): AuditRow = {
     // WALK the executed tree — an adaptive plan's explain
@@ -212,6 +196,22 @@ object PlanAudit {
     } finally spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
   }
 
+  /** Production-config audit (round 17): the static AQE-off table in
+    * PLANS.md describes the plans Catalyst COMPILES; this mode audits
+    * the plans the production config actually RUNS — AQE on, runtime
+    * stage statistics allowed to re-plan joins and coalesce/skew-split
+    * reads — for the most expensive registry queries at sf0.1. For each
+    * query it records the static (AQE-off) counts and the FINAL
+    * adaptive plan's counts (the query is executed so every
+    * AdaptiveSparkPlan finalizes), then verdicts the diff: a production
+    * plan that GAINS a shuffle or LOSES a broadcast relative to the
+    * static tree is flagged; coalesced reads and broadcast-replans are
+    * noted as the AQE wins they are. Output: PLANS_prod.md.
+    *
+    * Queries audited: the top `n` by the round-16 driver bench artifact
+    * (BENCH_r16.json) plus any registry entries absent from that
+    * artifact (new this round, never audited under production config).
+    */
   private def prodAudit(d: String, benchJson: String, topN: Int,
       assertPins: Boolean = false): Unit = {
     // PRODUCTION knobs: AQE on (auditOne flips it per run), real

@@ -162,17 +162,6 @@ object TradeInQueries {
        |  ${fmtDuck("ts", "(k + 2) % 5")} AS ResponseTime
        |  FROM base)""".stripMargin
 
-  /** The Spark-side raw fixture: identical values, built from the same
-    * shared SQL text, plus helper columns `__k`/`__p`/`__ts` (dropped by
-    * `stage`, used by q33's day-2 variants). */
-  /** When `sorted`, the narrow base is globally ordered by `k` BEFORE the
-    * wide fixture projection: a final `orderBy` on the 44-col result
-    * would range-sample its child, re-executing the whole expensive
-    * expression tree a second time (measured ~2× the query), while
-    * sorting 6 narrow columns and projecting after preserves the same
-    * total order (SaleInvoiceID = k, unique) for ~nothing. The explicit
-    * partition count keeps AQE from coalescing the small sorted base into
-    * one partition, which would serialize the wide projection above it. */
   /** The narrow 6-col base (k, c, p, st, pri, ts) — everything the wide
     * fixture is a pure function of. */
   private[graft] def narrowBase(s: SparkSession, d: String): DataFrame =
@@ -193,6 +182,18 @@ object TradeInQueries {
     base.select(cols: _*)
   }
 
+  /** The Spark-side raw fixture: identical values, built from the same
+    * shared SQL text, plus helper columns `__k`/`__p`/`__ts` (dropped by
+    * `stage`, used by q33's day-2 variants).
+    *
+    * When `sorted`, the narrow base is globally ordered by `k` BEFORE the
+    * wide fixture projection: a final `orderBy` on the 44-col result
+    * would range-sample its child, re-executing the whole expensive
+    * expression tree a second time (measured ~2× the query), while
+    * sorting 6 narrow columns and projecting after preserves the same
+    * total order (SaleInvoiceID = k, unique) for ~nothing. The explicit
+    * partition count keeps AQE from coalescing the small sorted base into
+    * one partition, which would serialize the wide projection above it. */
   private[graft] def rawSpark(s: SparkSession, d: String,
       sorted: Boolean = false): DataFrame = {
     val base0 = narrowBase(s, d)
@@ -207,6 +208,44 @@ object TradeInQueries {
         .sortWithinPartitions("k")
       else base0.repartition(s.sparkContext.defaultParallelism, col("k"))
     widen(base)
+  }
+
+  /** q33/q129's two daily batches over one persisted narrow base.
+    * Returns `(base, day1, day2)`; `base` stays cached until the caller
+    * unpersists it. */
+  private def twoDays(s: SparkSession, d: String): (DataFrame, DataFrame, DataFrame) = {
+    // The fixture is consumed three times (day1, day2 base, day2 dups).
+    // persist() materializes the NARROW 6-col base — round 2 persisted
+    // the 47-col wide fixture instead, and the 47-strings-per-row
+    // memory-store round trip dominated the query (4.75 s at sf0.1).
+    // Here each consumer filters the cheap base first and pays the
+    // wide formatting projection only for the rows it keeps
+    // (0.67 + 0.5 + 0.1 of the corpus) — filter-below-projection,
+    // exactly what Catalyst would plan had the fixture been a real
+    // staging-table scan.
+    val base = narrowBase(s, d)
+      .repartition(s.sparkContext.defaultParallelism, col("k"))
+      .persist()
+    val day1 = widen(base.filter(col("k") % 3 =!= 0))
+    // k % 10 = 0 ⊆ k % 2 = 0: each dup row re-derives from a narrow row
+    // day 2 already keeps, with a bumped amount and a +1-day shape-0
+    // TradeInDate that out-sorts the base row in the intra-batch dedup
+    // window. Generating dups by exploding a per-row variant array pays
+    // the wide formatting projection ONCE over the k%2 slice instead of
+    // widening the k%10 slice a second time and unioning (round 3's
+    // shape — one more 10%-of-corpus widen plus a union branch).
+    val day2 = widen(base.filter(col("k") % 2 === 0))
+      .withColumn("__dup", explode(
+        when(col("__k") % 10 === 0, array(lit(false), lit(true)))
+          .otherwise(array(lit(false)))))
+      .withColumn("TradeInAmount",
+        when(col("__dup"), expr(dec2("130.0", "__p")))
+          .otherwise(expr(dec2("120.0", "__p"))))
+      .withColumn("TradeInDate",
+        when(col("__dup"), concat(date_format(col("__ts") + expr("INTERVAL 1 DAY"),
+          "yyyy-MM-dd'T'HH:mm:ss.SSSSSS"), lit("Z")))
+          .otherwise(col("TradeInDate")))
+    (base, day1, day2)
   }
 
   private[graft] def nowLit(s: String): Column = lit(s).cast("timestamp")
@@ -240,37 +279,7 @@ object TradeInQueries {
     // intra-batch duplicates resolved by the dedup window
     // (rqtradein_etl.py:150-185).
     "q33_tradein_merge_2run" -> ((s, d) => {
-      // The fixture is consumed three times (day1, day2 base, day2 dups).
-      // persist() materializes the NARROW 6-col base — round 2 persisted
-      // the 47-col wide fixture instead, and the 47-strings-per-row
-      // memory-store round trip dominated the query (4.75 s at sf0.1).
-      // Here each consumer filters the cheap base first and pays the
-      // wide formatting projection only for the rows it keeps
-      // (0.67 + 0.5 + 0.1 of the corpus) — filter-below-projection,
-      // exactly what Catalyst would plan had the fixture been a real
-      // staging-table scan.
-      val base = narrowBase(s, d)
-        .repartition(s.sparkContext.defaultParallelism, col("k"))
-        .persist()
-      val day1 = widen(base.filter(col("k") % 3 =!= 0))
-      // k % 10 = 0 ⊆ k % 2 = 0: each dup row re-derives from a narrow row
-      // day 2 already keeps, with a bumped amount and a +1-day shape-0
-      // TradeInDate that out-sorts the base row in the intra-batch dedup
-      // window. Generating dups by exploding a per-row variant array pays
-      // the wide formatting projection ONCE over the k%2 slice instead of
-      // widening the k%10 slice a second time and unioning (round 3's
-      // shape — one more 10%-of-corpus widen plus a union branch).
-      val day2 = widen(base.filter(col("k") % 2 === 0))
-        .withColumn("__dup", explode(
-          when(col("__k") % 10 === 0, array(lit(false), lit(true)))
-            .otherwise(array(lit(false)))))
-        .withColumn("TradeInAmount",
-          when(col("__dup"), expr(dec2("130.0", "__p")))
-            .otherwise(expr(dec2("120.0", "__p"))))
-        .withColumn("TradeInDate",
-          when(col("__dup"), concat(date_format(col("__ts") + expr("INTERVAL 1 DAY"),
-            "yyyy-MM-dd'T'HH:mm:ss.SSSSSS"), lit("Z")))
-            .otherwise(col("TradeInDate")))
+      val (_, day1, day2) = twoDays(s, d)
       val empty = s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         TradeInSchema.targetSchema)
       val t1 = TradeInPipeline.mergeIntoTarget(empty,
@@ -306,21 +315,7 @@ object TradeInQueries {
     // partition-scoped path must be indistinguishable from the full
     // merge it replaces.
     "q129_tradein_merge_part" -> ((s, d) => {
-      val base = narrowBase(s, d)
-        .repartition(s.sparkContext.defaultParallelism, col("k"))
-        .persist()
-      val day1 = widen(base.filter(col("k") % 3 =!= 0))
-      val day2 = widen(base.filter(col("k") % 2 === 0))
-        .withColumn("__dup", explode(
-          when(col("__k") % 10 === 0, array(lit(false), lit(true)))
-            .otherwise(array(lit(false)))))
-        .withColumn("TradeInAmount",
-          when(col("__dup"), expr(dec2("130.0", "__p")))
-            .otherwise(expr(dec2("120.0", "__p"))))
-        .withColumn("TradeInDate",
-          when(col("__dup"), concat(date_format(col("__ts") + expr("INTERVAL 1 DAY"),
-            "yyyy-MM-dd'T'HH:mm:ss.SSSSSS"), lit("Z")))
-            .otherwise(col("TradeInDate")))
+      val (base, day1, day2) = twoDays(s, d)
       val workRoot = java.nio.file.Files.createTempDirectory("graft_q129")
       // createTempDirectory does NOT delete at exit; without cleanup every
       // invocation leaks a full partitioned parquet table into /tmp

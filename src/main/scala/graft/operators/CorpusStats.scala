@@ -12,17 +12,6 @@ import graft.functions.TextFunctions
   */
 object CorpusStats {
 
-  /** Vocabulary build: token → document frequency + total count, pruned
-    * to `minCount` occurrences, truncated to the `topK` most frequent
-    * (count desc, token asc for determinism).
-    *
-    * Scale shape: explode-then-aggregate is the canonical corpus
-    * word-count — partial aggregation collapses each partition's token
-    * counts BEFORE the single hash shuffle on token, so shuffle volume is
-    * per-partition-distinct tokens, not total tokens (Zipf makes that
-    * collapse enormous). The final top-k is TakeOrderedAndProject: no
-    * global sort. Skewed tokens ("the") are exactly what map-side
-    * partial aggregation absorbs — no salting needed. */
   /** Per-document repetition signals, corpus-scale form: top-bigram
     * fraction and distinct-bigram ratio computed by explode + two-level
     * aggregation rather than the per-row nested-lambda expressions in
@@ -577,6 +566,17 @@ object CorpusStats {
         decile(4), decile(5), decile(6), decile(7), decile(8), decile(9))
   }
 
+  /** Vocabulary build: token → document frequency + total count, pruned
+    * to `minCount` occurrences, truncated to the `topK` most frequent
+    * (count desc, token asc for determinism).
+    *
+    * Scale shape: explode-then-aggregate is the canonical corpus
+    * word-count — partial aggregation collapses each partition's token
+    * counts BEFORE the single hash shuffle on token, so shuffle volume is
+    * per-partition-distinct tokens, not total tokens (Zipf makes that
+    * collapse enormous). The final top-k is TakeOrderedAndProject: no
+    * global sort. Skewed tokens ("the") are exactly what map-side
+    * partial aggregation absorbs — no salting needed. */
   def vocabulary(docs: DataFrame, textCol: String, idCol: String,
       minCount: Long, topK: Int): DataFrame =
     docs

@@ -26,27 +26,6 @@ object Dedup {
       .drop("__rn")
   }
 
-  /** Aggregation-form latest-per-key: keeps the row whose `maxCols`
-    * tuple is the lexicographic MAX within each key — equivalent to
-    * [[latestPerKey]] with all-descending ordering on `maxCols`, planned
-    * as a hash aggregate (`max_by` over the whole-row struct).
-    *
-    * WHEN TO USE (measured, not theory): only when duplicates dominate —
-    * heavy-dup streams collapse map-side before the exchange and skip
-    * the sort. At a ~10% duplicate rate on 44 wide string columns this
-    * form measured 3× SLOWER than the window: nearly every group is a
-    * singleton, so the aggregate pays a full row-struct buffer copy per
-    * input row while the window just sorts each partition once. Ties
-    * beyond `maxCols` fall to whichever row the aggregate saw last —
-    * the same unspecified-tie contract as a ROW_NUMBER dedup without a
-    * tie-break. */
-  def latestPerKeyByMax(df: DataFrame, keys: Seq[String], maxCols: Seq[Column]): DataFrame = {
-    val payload = struct(df.columns.map(col): _*)
-    df.groupBy(keys.map(col): _*)
-      .agg(max_by(payload, struct(maxCols: _*)).as("__row"))
-      .select(col("__row.*"))
-  }
-
   /** Exact-duplicate removal by value equality on `cols` (or all columns
     * when `cols` is empty), keeping the min value of every other column as
     * the deterministic representative. Hash-aggregate, one shuffle — the

@@ -58,9 +58,9 @@ object Maintenance {
     * work — no data is read or rewritten, which is the only form of
     * retention that stays O(partitions) at any table size. Returns the
     * dropped partition values. Row-level retention (the reference's
-    * DATEADD delete, SURVEY.md §2.6 M2) remains [[Retention.retain]];
-    * this is its layout-aware fast path when the retention key IS the
-    * partition key. */
+    * DATEADD delete, SURVEY.md §2.6 M2) remains a `filter` on the
+    * negated delete predicate; this is its layout-aware fast path when
+    * the retention key IS the partition key. */
   def dropPartitionsBefore(spark: SparkSession, path: String,
       partitionCol: String, cutoff: String): Seq[String] = {
     val p = new Path(path)

@@ -121,20 +121,19 @@ object Merge {
     * commits at job end and the emptied-partition sweep is crash-healed
     * (below), so re-running the same batch converges.
     *
-    * Moved keys (`probeMovedKeys`, default on): a matched key whose
-    * `partitionCol` value CHANGED in this batch (the reference's
-    * business-date correction) has its live row in a partition the
-    * source does not mention; a slice-only merge would insert a
-    * duplicate and strand the stale row. The probe finds those rows
-    * without a full-table merge: batch keys unmatched in the slice are
-    * semi-joined against a (`key`, `partitionCol`)-pruned scan of the
-    * UNTOUCHED partitions — two thin columns with the partition filter
-    * pushed down, a tiny fraction of target bytes at 100 TB — and any
-    * hit partitions join the rewrite set. A partition emptied by its
+    * Moved keys: a matched key whose `partitionCol` value CHANGED in
+    * this batch (the reference's business-date correction) has its live
+    * row in a partition the source does not mention; a slice-only merge
+    * would insert a duplicate and strand the stale row. The probe finds
+    * those rows without a full-table merge: batch keys unmatched in the
+    * slice are semi-joined against a (`key`, `partitionCol`)-pruned scan
+    * of the UNTOUCHED partitions — two thin columns with the partition
+    * filter pushed down, a tiny fraction of target bytes at 100 TB — and
+    * any hit partitions join the rewrite set. A partition emptied by its
     * only row moving away is deleted explicitly (dynamic overwrite
-    * never clears a partition it writes no rows to). Pass
-    * `probeMovedKeys = false` only when the partition key is immutable
-    * per business key, which reduces to the pure pruned-slice plan.
+    * never clears a partition it writes no rows to). The probe always
+    * runs; its job is skipped only when the target holds no partition
+    * outside the batch's.
     *
     * Cross-batch stable-schema CONTRACT: every read of the target pins
     * the FULL source schema (`spark.read.schema(source.schema)`) — the
@@ -154,13 +153,12 @@ object Merge {
       key: String,
       partitionCol: String,
       dataCols: Seq[String],
-      audit: Option[(String, String, Column)] = None,
-      probeMovedKeys: Boolean = true): Seq[String] = {
+      audit: Option[(String, String, Column)] = None): Seq[String] = {
     // Several jobs read `source` (partition discovery, the moved-key
     // probe, the merge write): pin it so it is computed once.
     val src = source.localCheckpoint()
     try upsertPartitionedPinned(spark, targetPath, src, key, partitionCol,
-      dataCols, audit, probeMovedKeys)
+      dataCols, audit)
     finally OpsUtil.ckptRdds(src).foreach(_.unpersist(blocking = false))
   }
 
@@ -182,8 +180,7 @@ object Merge {
       key: String,
       partitionCol: String,
       dataCols: Seq[String],
-      audit: Option[(String, String, Column)],
-      probeMovedKeys: Boolean): Seq[String] = {
+      audit: Option[(String, String, Column)]): Seq[String] = {
     import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
     // The partition value as its directory records it: a string, with
     // an empty string stored as NULL (both land in the default dir).
@@ -236,7 +233,7 @@ object Merge {
     // raw-string fast-path compare below is exact.
     def targetRead = spark.read.schema(source.schema).parquet(targetPath)
     val untouchedOnDisk: Seq[String] =
-      if (!exists || !probeMovedKeys) Seq.empty
+      if (!exists) Seq.empty
       else {
         val prefix = s"$partitionCol="
         val parts0Set = parts0.toSet
@@ -248,7 +245,7 @@ object Merge {
           .filterNot(parts0Set)
       }
     val movedParts: Seq[String] =
-      if (!exists || !probeMovedKeys || untouchedOnDisk.isEmpty) Seq.empty
+      if (untouchedOnDisk.isEmpty) Seq.empty
       else {
         targetRead
           .filter(!isInParts(partVal, parts0))

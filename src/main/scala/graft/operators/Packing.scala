@@ -13,19 +13,6 @@ import org.apache.spark.sql.functions._
   */
 object Packing {
 
-  /** Assign each document a pack id and start offset within its shard.
-    *
-    * Ordering within a shard is by `idCol` — deterministic and
-    * replayable; pass a pre-shuffled id (hash) column for random-ish
-    * mixing, which is what production corpus shuffles do anyway.
-    *
-    * Scale shape: one window per SHARD — parallelism equals shard count,
-    * and shards are numerous by construction (one per output file /
-    * worker), so the per-shard running sum never bottlenecks the way a
-    * global `partitionBy()` window would. A single-shard corpus at scale
-    * should instead use the [[Relational.groupedRowNumber]] pattern
-    * (range partition + broadcast per-partition prefix sums) with the
-    * running token sum as the rank payload. */
   /** T5-style span-corruption pair construction (Raffel et al., JMLR
     * 2020 §3.1.4): cut each document's token stream into consecutive
     * `spanLen`-token spans, mask a deterministic 1/`corruptEvery` of
@@ -147,6 +134,19 @@ object Packing {
           sel(i) && cls(i) === 9)).cast("long").as("n_kept"))
   }
 
+  /** Assign each document a pack id and start offset within its shard.
+    *
+    * Ordering within a shard is by `idCol` — deterministic and
+    * replayable; pass a pre-shuffled id (hash) column for random-ish
+    * mixing, which is what production corpus shuffles do anyway.
+    *
+    * Scale shape: one window per SHARD — parallelism equals shard count,
+    * and shards are numerous by construction (one per output file /
+    * worker), so the per-shard running sum never bottlenecks the way a
+    * global `partitionBy()` window would. A single-shard corpus at scale
+    * should instead use the [[Relational.groupedRowNumber]] pattern
+    * (range partition + broadcast per-partition prefix sums) with the
+    * running token sum as the rank payload. */
   def packSequences(docs: DataFrame, idCol: String, tokensCol: String,
       shardCol: String, budget: Long): DataFrame = {
     require(budget > 0, s"budget must be positive: $budget")

@@ -330,19 +330,6 @@ object Sessionize {
             .cast("double")) / col("__sg").cast("double"), 6)).as("cv_gap"))
   }
 
-  /** Per-key next-event transition matrix — the Markov view of user
-    * behavior ("after a search, 40% click and 12% bounce"): consecutive
-    * event pairs within each key's timeline, counted per (from, to) type
-    * with each row's share of its `from` state (the empirical transition
-    * probability). Product analytics reads funnels OUT of this matrix;
-    * data-quality reads instrumentation bugs off it (a transition that
-    * "cannot happen" with nonzero count is a mis-fired event).
-    *
-    * Determinism: ordering within a key is (ts, tiebreakCol) — an exact
-    * total order, so the lead() pairing is engine-reproducible even
-    * with equal timestamps. Scale shape: one per-key window (shuffle by
-    * key — parallelism is |keys|) feeding one hash aggregation on the
-    * |types|² matrix; the share rides a window on the matrix frame. */
   /** Skip-gram (center, context) pair counts from per-key event
     * sequences — word2vec-style training pairs over behavioral data
     * (Mikolov et al. 2013; the item2vec recipe). For every event, its
@@ -378,6 +365,19 @@ object Sessionize {
       .agg(count(lit(1)).as("n"))
   }
 
+  /** Per-key next-event transition matrix — the Markov view of user
+    * behavior ("after a search, 40% click and 12% bounce"): consecutive
+    * event pairs within each key's timeline, counted per (from, to) type
+    * with each row's share of its `from` state (the empirical transition
+    * probability). Product analytics reads funnels OUT of this matrix;
+    * data-quality reads instrumentation bugs off it (a transition that
+    * "cannot happen" with nonzero count is a mis-fired event).
+    *
+    * Determinism: ordering within a key is (ts, tiebreakCol) — an exact
+    * total order, so the lead() pairing is engine-reproducible even
+    * with equal timestamps. Scale shape: one per-key window (shuffle by
+    * key — parallelism is |keys|) feeding one hash aggregation on the
+    * |types|² matrix; the share rides a window on the matrix frame. */
   def transitionMatrix(events: DataFrame, key: String, ts: String,
       typeCol: String, tiebreakCol: String): DataFrame = {
     val w = Window.partitionBy(col(key))

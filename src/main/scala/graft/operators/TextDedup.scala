@@ -53,22 +53,6 @@ object TextDedup {
       }: _*)
   }
 
-  /** LSH banding over a signature frame: each band of `rowsPerBand`
-    * signature components hashes to a bucket key; documents sharing any
-    * band bucket become a candidate pair. Returns distinct (idCol_a,
-    * idCol_b) with a < b.
-    *
-    * `maxBucket` (0 = off) guards the mega-bucket blow-up: a bucket of k
-    * documents yields k(k-1)/2 pairs, and a corpus with thousands of
-    * byte-identical boilerplate pages (the common case at 100 TB — run
-    * exact dedup first, but belt and braces) turns one bucket into a
-    * quadratic join output. Buckets wider than `maxBucket` degrade to
-    * the STAR (min-id anchor, id_j) — O(k) pairs, diameter 2, so the
-    * downstream [[dupClusters]] connected-components step still merges
-    * the whole bucket into one cluster in one propagation round; only
-    * the direct pair list (and hence per-pair Jaccard verification
-    * coverage) is thinned, which is the right trade in a bucket that
-    * wide: its members are near-certainly mutual duplicates. */
   /** The LSH band keys of a signature frame: band `b` hashes its
     * `rowsPerBand` signature components with a band-index prefix, so two
     * documents collide iff they agree on a full band. */
@@ -120,6 +104,22 @@ object TextDedup {
       .distinct()
   }
 
+  /** LSH banding over a signature frame: each band of `rowsPerBand`
+    * signature components hashes to a bucket key; documents sharing any
+    * band bucket become a candidate pair. Returns distinct (idCol_a,
+    * idCol_b) with a < b.
+    *
+    * `maxBucket` (0 = off) guards the mega-bucket blow-up: a bucket of k
+    * documents yields k(k-1)/2 pairs, and a corpus with thousands of
+    * byte-identical boilerplate pages (the common case at 100 TB — run
+    * exact dedup first, but belt and braces) turns one bucket into a
+    * quadratic join output. Buckets wider than `maxBucket` degrade to
+    * the STAR (min-id anchor, id_j) — O(k) pairs, diameter 2, so the
+    * downstream [[dupClusters]] connected-components step still merges
+    * the whole bucket into one cluster in one propagation round; only
+    * the direct pair list (and hence per-pair Jaccard verification
+    * coverage) is thinned, which is the right trade in a bucket that
+    * wide: its members are near-certainly mutual duplicates. */
   def lshCandidatePairs(sigs: DataFrame, idCol: String,
       numHashes: Int, rowsPerBand: Int, maxBucket: Int = 0): DataFrame = {
     val bandKeys = bandKeyExprs(numHashes, rowsPerBand)
@@ -181,21 +181,6 @@ object TextDedup {
     pairs.distinct()
   }
 
-  /** Eval-set decontamination — the benchmark-overlap gate a training
-    * corpus runs before release (cf. the n-gram-overlap decontamination
-    * appendices of the GPT-3 and Pile papers): a train document is
-    * contaminated when at least `minOverlap` of its DISTINCT token
-    * `shingleSize`-gram shingles also occur anywhere in the eval corpus.
-    * Returns `(idCol, n_overlap)` for contaminated documents only;
-    * anti-join the result against the corpus to scrub.
-    *
-    * Scale shape: benchmarks are MBs while corpora are TBs, so the eval
-    * side collapses to a DISTINCT shingle set and broadcasts — the train
-    * side's exploded (id, shingle) frame never shuffles; the only
-    * exchange is the per-document count aggregation, and map-side
-    * partial counts collapse it to |contaminated docs| rows. If the eval
-    * set ever outgrows broadcast range, the same plan degrades to a
-    * shuffled equi-join on the shingle string — still never quadratic. */
   /** One row per (kept columns..., distinct token shingle) — the shared
     * explode of [[contaminatedIds]] / [[contaminatedIdsBloom]]. */
   private def tokenShingled(df: DataFrame, textCol: String,
@@ -204,6 +189,12 @@ object TextDedup {
     .select(keep :+ explode(array_distinct(transform(
       sequence(lit(1), greatest(size(col("__toks")) - (shingleSize - 1), lit(1))),
       i => concat_ws(" ", slice(col("__toks"), i, lit(shingleSize)))))).as("__g"): _*)
+
+  /** Default byte cap for [[guardEvalBroadcast]] — overridable per call
+    * (round-18 ADVICE: the hard-coded private val had no parameter, so a
+    * large-raw-gram workload hit a cap the failure message could not
+    * lift). */
+  private val defaultMaxEvalBytes: Long = 512L * 1024 * 1024
 
   /** Counted fail-fast on an eval-side distinct gram set BEFORE it
     * enters a `broadcast()`: the decontamination family's premise is
@@ -226,11 +217,6 @@ object TextDedup {
     * ≈ the headroom 10M 32-char digests plus overhead were budgeted
     * at), so the raw-key path keeps the driver-OOM headroom the guard
     * exists to provide. */
-  /** Default byte cap for [[guardEvalBroadcast]] — overridable per call
-    * (round-18 ADVICE: the hard-coded private val had no parameter, so a
-    * large-raw-gram workload hit a cap the failure message could not
-    * lift). */
-  private val defaultMaxEvalBytes: Long = 512L * 1024 * 1024
   private def guardEvalBroadcast(evalGrams0: DataFrame, gramCol: String,
       maxEvalGrams: Long, op: String,
       maxEvalBytes: Long = defaultMaxEvalBytes): DataFrame = {
@@ -258,6 +244,21 @@ object TextDedup {
       .select(col(gramCol))
   }
 
+  /** Eval-set decontamination — the benchmark-overlap gate a training
+    * corpus runs before release (cf. the n-gram-overlap decontamination
+    * appendices of the GPT-3 and Pile papers): a train document is
+    * contaminated when at least `minOverlap` of its DISTINCT token
+    * `shingleSize`-gram shingles also occur anywhere in the eval corpus.
+    * Returns `(idCol, n_overlap)` for contaminated documents only;
+    * anti-join the result against the corpus to scrub.
+    *
+    * Scale shape: benchmarks are MBs while corpora are TBs, so the eval
+    * side collapses to a DISTINCT shingle set and broadcasts — the train
+    * side's exploded (id, shingle) frame never shuffles; the only
+    * exchange is the per-document count aggregation, and map-side
+    * partial counts collapse it to |contaminated docs| rows. If the eval
+    * set ever outgrows broadcast range, the same plan degrades to a
+    * shuffled equi-join on the shingle string — still never quadratic. */
   def contaminatedIds(train: DataFrame, evalSet: DataFrame,
       textCol: String, idCol: String, shingleSize: Int,
       minOverlap: Long = 1L, maxEvalGrams: Long = 10000000L,

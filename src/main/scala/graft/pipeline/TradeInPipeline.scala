@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.Timestamps
-import graft.operators.{Dedup, Merge, Retention}
+import graft.operators.{Dedup, Merge}
 import graft.sources.ApiSource
 import TradeInSchema._
 
@@ -75,27 +75,25 @@ object TradeInPipeline {
 
   /** Stage-5 dedup: latest row per SaleInvoiceID by TradeInDate — the
     * reference's `ROW_NUMBER() OVER (PARTITION BY SaleInvoiceID ORDER BY
-    * TradeInDate DESC)` CTE (rqtradein_etl.py:167-171). `tieBreak` extends
-    * the ordering for deterministic results (the reference leaves ties to
-    * the engine). Staging normal form sorts identically as string or
-    * timestamp. */
-  def dedupSource(staging: DataFrame, tieBreak: Seq[Column] = Nil): DataFrame =
-    // Window form, deliberately: the max_by aggregation alternative
-    // (Dedup.latestPerKeyByMax) measured 3× SLOWER here — at the daily
-    // batch's ~10% duplicate rate almost every group is a singleton, so
-    // the aggregate copies every 44-col row struct into its buffer for
-    // nothing, while the window sorts each partition once. The agg form
-    // wins only when duplicates dominate (see its scaladoc).
-    Dedup.latestPerKey(staging, Seq("SaleInvoiceID"),
-      col("TradeInDate").desc +: tieBreak)
+    * TradeInDate DESC)` CTE (rqtradein_etl.py:167-171). Like the
+    * reference, it leaves ties to the engine. Staging normal form sorts
+    * identically as string or timestamp. */
+  def dedupSource(staging: DataFrame): DataFrame =
+    // Window form, deliberately: a `max_by(struct(row), TradeInDate)`
+    // aggregation measured 3× SLOWER here — at the daily batch's ~10%
+    // duplicate rate almost every group is a singleton, so the aggregate
+    // copies every 44-col row struct into its buffer for nothing, while
+    // the window sorts each partition once. The aggregate wins only when
+    // duplicates dominate.
+    Dedup.latestPerKey(staging, Seq("SaleInvoiceID"), Seq(col("TradeInDate").desc))
 
   /** Stage 5 (merge): dedup staging, type it, MERGE into target on
     * SaleInvoiceID with audit stamps — matched rows take all source
     * values and `ETLRowUpdatedEST = now`; new rows stamp
     * `ETLRowInsertedEST = now` (rqtradein_etl.py:150-185). */
   def mergeIntoTarget(target: DataFrame, staging: DataFrame, now: Column,
-      tieBreak: Seq[Column] = Nil, actionCol: Option[String] = None): DataFrame = {
-    val source = toTyped(dedupSource(staging, tieBreak))
+      actionCol: Option[String] = None): DataFrame = {
+    val source = toTyped(dedupSource(staging))
     Merge.upsert(target, source, "SaleInvoiceID", columns,
       audit = Some((insertedCol, updatedCol, now)), actionCol = actionCol)
   }
@@ -128,9 +126,8 @@ object TradeInPipeline {
     * partition. */
   def mergeIntoTargetPartitioned(
       spark: SparkSession, targetPath: String, staging: DataFrame,
-      now: Column, tieBreak: Seq[Column] = Nil,
-      partDay: Column = to_date(col("TradeInDate"))): Seq[String] = {
-    val source = toTyped(dedupSource(staging, tieBreak))
+      now: Column, partDay: Column = to_date(col("TradeInDate"))): Seq[String] = {
+    val source = toTyped(dedupSource(staging))
       // upsert reads audit stamps from the target side; the source only
       // needs the columns PRESENT so the target slice retains them.
       .withColumn(updatedCol, lit(null).cast("timestamp"))
@@ -153,29 +150,12 @@ object TradeInPipeline {
     (agg.getLong(0), agg.getLong(1))
   }
 
-  /** Merge with piggybacked counts: the inserted/updated totals the
-    * reference reports (rqtradein_etl.py:188-190) collected by
-    * `Dataset.observe` DURING the merge's one write pass — where
-    * [[todayCounts]] re-scans the written target, this costs zero extra
-    * jobs at any scale. Read the counts from the returned Observation
-    * AFTER an action has consumed the frame. */
-  def mergeObserved(target: DataFrame, staging: DataFrame, now: Column)
-      : (DataFrame, org.apache.spark.sql.Observation) = {
-    val obs = org.apache.spark.sql.Observation()
-    val merged = mergeIntoTarget(target, staging, now, actionCol = Some("__action"))
-      .observe(obs,
-        count(when(col("__action") === "insert", 1)).as("inserted"),
-        count(when(col("__action") === "update", 1)).as("updated"))
-      .drop("__action")
-    (merged, obs)
-  }
-
   /** Stage 6b (retention): keep only staging rows whose TradeInDate falls
     * on `now`'s date — the relational dual of the reference's DELETE
     * (rqtradein_etl.py:192). On a date-partitioned staging layout this is
     * pure partition pruning. */
   def retainToday(staging: DataFrame, now: Column): DataFrame =
-    Retention.retain(staging,
+    staging.filter(
       Timestamps.parseTimestamp(col("TradeInDate")).cast("date") === now.cast("date"))
 
   /** ETL outcome (the reference returns {"inserted": …, "updated": …}).

@@ -7,7 +7,7 @@ import graft.QuerySupport._
 import graft.sources.Tables.{load, parallel}
 import graft.functions.Timestamps
 import graft.functions.TextFunctions
-import graft.operators.{CorpusStats, Curation, DataQuality, Dedup, EntityResolution, Graph, IncrementalAgg, Itemsets, Maintenance, Merge, Profiling, Quantization, Relational, Retention, Sessionize, Similarity, TextDedup, TimeSeries}
+import graft.operators.{CorpusStats, Curation, DataQuality, Dedup, EntityResolution, Graph, IncrementalAgg, Itemsets, Maintenance, Merge, Profiling, Quantization, Relational, Sessionize, Similarity, TextDedup, TimeSeries}
 /** Deduplication and decontamination: exact/minhash/simhash/winnowing,
   * span and line dedup, contamination, dup clusters, impact audits.
   *

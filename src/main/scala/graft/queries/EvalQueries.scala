@@ -7,7 +7,7 @@ import graft.QuerySupport._
 import graft.sources.Tables.{load, parallel}
 import graft.functions.Timestamps
 import graft.functions.TextFunctions
-import graft.operators.{CorpusStats, Curation, DataQuality, Dedup, EntityResolution, Graph, IncrementalAgg, Itemsets, Maintenance, Merge, Profiling, Quantization, Relational, Retention, Sessionize, Similarity, TextDedup, TimeSeries}
+import graft.operators.{CorpusStats, Curation, DataQuality, Dedup, EntityResolution, Graph, IncrementalAgg, Itemsets, Maintenance, Merge, Profiling, Quantization, Relational, Sessionize, Similarity, TextDedup, TimeSeries}
 /** Evaluation metrics and agreement: AUC/PR/ROC, calibration,
   * retrieval metrics, rater agreement, clustering scores,
   * confusion panels, fairness.

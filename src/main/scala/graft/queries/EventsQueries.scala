@@ -7,7 +7,7 @@ import graft.QuerySupport._
 import graft.sources.Tables.{load, parallel}
 import graft.functions.Timestamps
 import graft.functions.TextFunctions
-import graft.operators.{CorpusStats, Curation, DataQuality, Dedup, EntityResolution, Graph, IncrementalAgg, Itemsets, Maintenance, Merge, Profiling, Quantization, Relational, Retention, Sessionize, Similarity, TextDedup, TimeSeries}
+import graft.operators.{CorpusStats, Curation, DataQuality, Dedup, EntityResolution, Graph, IncrementalAgg, Itemsets, Maintenance, Merge, Profiling, Quantization, Relational, Sessionize, Similarity, TextDedup, TimeSeries}
 /** Events, time series and graph: gap-fill, drift, rolling stats,
   * survival, seasonality, transitions, PageRank, triangles,
   * association rules.

@@ -7,7 +7,7 @@ import graft.QuerySupport._
 import graft.sources.Tables.{load, parallel}
 import graft.functions.Timestamps
 import graft.functions.TextFunctions
-import graft.operators.{CorpusStats, Curation, DataQuality, Dedup, EntityResolution, Graph, IncrementalAgg, Itemsets, Maintenance, Merge, Profiling, Quantization, Relational, Retention, Sessionize, Similarity, TextDedup, TimeSeries}
+import graft.operators.{CorpusStats, Curation, DataQuality, Dedup, EntityResolution, Graph, IncrementalAgg, Itemsets, Maintenance, Merge, Profiling, Quantization, Relational, Sessionize, Similarity, TextDedup, TimeSeries}
 /** Profiling and data quality: sketch profiles, drift, heavy hitters,
   * cardinality, shard audits, layout, record linkage, checks.
   *

@@ -7,7 +7,7 @@ import graft.QuerySupport._
 import graft.sources.Tables.{load, parallel}
 import graft.functions.Timestamps
 import graft.functions.TextFunctions
-import graft.operators.{CorpusStats, Curation, DataQuality, Dedup, EntityResolution, Graph, IncrementalAgg, Itemsets, Maintenance, Merge, Profiling, Quantization, Relational, Retention, Sessionize, Similarity, TextDedup, TimeSeries}
+import graft.operators.{CorpusStats, Curation, DataQuality, Dedup, EntityResolution, Graph, IncrementalAgg, Itemsets, Maintenance, Merge, Profiling, Quantization, Relational, Sessionize, Similarity, TextDedup, TimeSeries}
 /** Relational and reference-ETL breadth: scans, multi-way joins,
   * windows, set ops, temporal functions, MERGE/retention, JSON,
   * sessionization, funnels, incremental views.
@@ -286,8 +286,8 @@ private[graft] object RelationalQueries {
 
     // ---- M2: retention filter-retain (delete as its relational dual) ----
     "q20_retention" -> ((s, d) => {
-      Retention.retain(load(s, d, "events"),
-          col("ts").cast("date") === lit("2024-01-15").cast("date"))
+      load(s, d, "events")
+        .filter(col("ts").cast("date") === lit("2024-01-15").cast("date"))
         .select("event_id", "ts", "event_type")
         .transform(ordered1(_, col("event_id")))
     }),

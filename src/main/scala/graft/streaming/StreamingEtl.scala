@@ -5,7 +5,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
 import org.apache.spark.sql.types.StructType
 
-import graft.operators.Merge
 import graft.pipeline.{TradeInPipeline, TradeInSchema}
 
 /** Structured-Streaming re-expression of the reference's scheduling layer
@@ -30,22 +29,17 @@ object StreamingEtl {
     * shape), stage, and MERGE each micro-batch into the parquet table
     * at `targetPath`. Returns after the AvailableNow drain completes.
     *
-    * `partitioned = true` (the default since round 9, matching the batch
-    * pipeline's default) routes each micro-batch through the
-    * partition-scoped merge: only the day-partitions present in the
-    * batch (plus any stale moved-key partitions the probe finds) are
-    * read and rewritten, so a steady stream of daily windows never
-    * rewrites the accumulated history — the full-snapshot
-    * `writeSnapshot` form (`partitioned = false`) rewrites the entire
-    * target every micro-batch, which is exactly the shape that cannot
-    * survive an ever-growing table. */
+    * Each micro-batch goes through the partition-scoped merge
+    * ([[TradeInPipeline.mergeIntoTargetPartitioned]]): only the
+    * day-partitions present in the batch (plus any stale moved-key
+    * partitions the probe finds) are read and rewritten, so a steady
+    * stream of daily windows never rewrites the accumulated history. */
   def ingestAvailableNow(
       spark: SparkSession,
       sourceDir: String,
       targetPath: String,
       checkpointDir: String,
-      now: () => org.apache.spark.sql.Column = () => current_timestamp(),
-      partitioned: Boolean = true): Unit = {
+      now: () => org.apache.spark.sql.Column = () => current_timestamp()): Unit = {
 
     val rawSchema = StructType(TradeInSchema.rawColumns.map(c =>
       org.apache.spark.sql.types.StructField(c, org.apache.spark.sql.types.StringType)))
@@ -57,27 +51,12 @@ object StreamingEtl {
       .option("checkpointLocation", checkpointDir)
       .outputMode(OutputMode.Append())
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        if (partitioned)
-          TradeInPipeline.mergeIntoTargetPartitioned(
-            batch.sparkSession, targetPath, batch.toDF(), now()): Unit
-        else {
-          val target = readTargetOrEmpty(batch.sparkSession, targetPath)
-          Merge.writeSnapshot(
-            TradeInPipeline.mergeIntoTarget(target, batch.toDF(), now()), targetPath)
-        }
+        TradeInPipeline.mergeIntoTargetPartitioned(
+          batch.sparkSession, targetPath, batch.toDF(), now())
         ()
       }
       .start()
     q.awaitTermination()
-  }
-
-  private def readTargetOrEmpty(spark: SparkSession, path: String): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p))
-      spark.read.schema(TradeInSchema.targetSchema).parquet(path)
-    else spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], TradeInSchema.targetSchema)
   }
 
   /** Stream-STREAM interval join — the streaming form of

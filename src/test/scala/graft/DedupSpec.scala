@@ -28,20 +28,6 @@ class DedupSpec extends AnyFunSuite {
     }
   }
 
-  test("latestPerKeyByMax agrees with the window form on all-desc orderings") {
-    val rnd = new scala.util.Random(7)
-    for (_ <- 1 to 5) {
-      val rows = List.fill(1 + rnd.nextInt(60))(
-        (rnd.nextInt(10), rnd.nextInt(100), rnd.nextInt(100)))
-      val df = rows.toDF("k", "v", "ord")
-      val win = Dedup.latestPerKey(df, Seq("k"), Seq(col("ord").desc, col("v").desc))
-        .as[(Int, Int, Int)].collect().toSet
-      val agg = Dedup.latestPerKeyByMax(df, Seq("k"), Seq(col("ord"), col("v")))
-        .as[(Int, Int, Int)].collect().toSet
-      assert(agg == win)
-    }
-  }
-
   test("exact dedup: one row per distinct key tuple, min representative") {
     val df = Seq((1, "a", 10), (1, "a", 3), (1, "b", 7), (2, "a", 5))
       .toDF("k", "s", "v")

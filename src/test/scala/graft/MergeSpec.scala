@@ -266,20 +266,6 @@ class MergeSpec extends AnyFunSuite {
       s"heal lost a live key or kept the stale copy: $now")
   }
 
-  test("upsertPartitioned probeMovedKeys=false keeps the pure pruned-slice plan") {
-    val spark = TestSpark.spark
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("pmove3").toString + "/t"
-    Seq(("2024-01-01", 1, "a0")).toDF("day", "k", "v")
-      .write.partitionBy("day").parquet(dir)
-    val batch = Seq(("2024-01-03", 1, "a1")).toDF("day", "k", "v")
-    val merged = Merge.upsertPartitioned(
-      spark, dir, batch, "k", "day", Seq("day", "k", "v"), probeMovedKeys = false)
-    // contract mode: the stale row is deliberately out of scope
-    assert(merged == Seq("2024-01-03"))
-    assert(spark.read.parquet(dir).count() == 2)
-  }
-
   /** (day, k, v) rows of a partitioned target, NULL days included. */
   private def readDays(dir: String): Set[(String, Int, String)] =
     spark.read.parquet(dir)

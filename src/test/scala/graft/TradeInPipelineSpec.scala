@@ -28,11 +28,13 @@ class TradeInPipelineSpec extends AnyFunSuite {
       StructType(TradeInSchema.rawColumns.map(c => StructField(c, StringType))))
   }
 
-  private def pipelineAt(work: String, day: String, batch: DataFrame) =
+  private def pipelineAt(work: String, day: String, batch: DataFrame,
+      partitionedTarget: Boolean = true) =
     new TradeInPipeline(new FrameSource(batch),
       stagingPath = s"$work/staging", targetPath = s"$work/target",
       registerCatalog = false,
-      now = () => lit(s"$day 06:00:00").cast("timestamp"))
+      now = () => lit(s"$day 06:00:00").cast("timestamp"),
+      partitionedTarget = partitionedTarget)
 
   test("two overlapping runs: insert/update counts, retention, typed target") {
     val work = java.nio.file.Files.createTempDirectory("tip").toString
@@ -139,6 +141,30 @@ class TradeInPipelineSpec extends AnyFunSuite {
     assert(spark.read.parquet(s"$work/target").count() == 4)
   }
 
+  test("snapshot and partitioned targets agree on rows and counts per day") {
+    // Day 2 updates key 2, moves key 1 to a later day and inserts key 4;
+    // key 3 sits on an earlier day that day 2 never touches.
+    val days = Seq(
+      "2024-06-01" -> Seq(("1", "2024-06-01T01:00:00Z", "10.00"),
+        ("2", "2024-06-01T02:00:00Z", "20.00"), ("3", "2024-05-30T03:00:00Z", "30.00")),
+      "2024-06-02" -> Seq(("1", "2024-06-02T04:00:00Z", "11.00"),
+        ("2", "2024-06-02T01:00:00Z", "21.00"), ("4", "2024-06-02T02:00:00Z", "40.00")))
+    def runDays(partitionedTarget: Boolean) = {
+      val work = java.nio.file.Files.createTempDirectory("tipl").toString
+      val counts = days.map { case (day, rows) =>
+        val r = pipelineAt(work, day, rawBatch(rows), partitionedTarget).run(spark, Map())
+        (r.inserted, r.updated)
+      }
+      val rows = spark.read.parquet(s"$work/target")
+        .select(TradeInSchema.targetSchema.fieldNames.map(col).toSeq: _*).collect().toSet
+      (counts, rows)
+    }
+    val (snapCounts, snapRows) = runDays(partitionedTarget = false)
+    val (partCounts, partRows) = runDays(partitionedTarget = true)
+    assert(snapCounts == partCounts)
+    assert(snapRows.size == 4 && snapRows == partRows)
+  }
+
   test("quarantine splits unparseable TradeInDates; null passes through clean") {
     val raw = rawBatch(Seq(
       ("1", "2024-06-01T01:00:00Z", "10.00"),
@@ -149,25 +175,6 @@ class TradeInPipelineSpec extends AnyFunSuite {
       .toSeq == Seq("1", "3"))
     assert(bad.select("SaleInvoiceID").collect().map(_.getString(0)).toSeq == Seq("2"))
     assert(clean.count() + bad.count() == raw.count())
-  }
-
-  test("mergeObserved reports insert/update counts from the write pass itself") {
-    val now = lit("2024-06-01 06:00:00").cast("timestamp")
-    val staged1 = TradeInPipeline.stage(
-      rawBatch(Seq(("1", "2024-06-01T01:00:00Z", "10.00"),
-        ("2", "2024-06-01T02:00:00Z", "20.00"))), now)
-    val empty = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[Row], TradeInSchema.targetSchema)
-    val (m1, o1) = TradeInPipeline.mergeObserved(empty, staged1, now)
-    m1.write.format("noop").mode("overwrite").save()
-    assert(o1.get("inserted") == 2L && o1.get("updated") == 0L)
-
-    val staged2 = TradeInPipeline.stage(
-      rawBatch(Seq(("2", "2024-06-01T03:00:00Z", "21.00"),
-        ("3", "2024-06-01T04:00:00Z", "30.00"))), now)
-    val (m2, o2) = TradeInPipeline.mergeObserved(m1, staged2, now)
-    m2.write.format("noop").mode("overwrite").save()
-    assert(o2.get("inserted") == 1L && o2.get("updated") == 1L)
   }
 
   test("garbage TradeInDate falls back to run time (F4) and survives merge") {

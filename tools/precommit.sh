@@ -66,6 +66,29 @@ if grep -rnE --include='*.scala' 'sys\.env|@volatile' \
   exit 1
 fi
 
+# One doc comment per definition: scaladoc keeps only the last of two
+# stacked `/** … */` blocks, so the first one is silently dropped from the
+# generated docs (nine such orphans had piled up, most of them a
+# definition's own doc left behind when a helper was inserted above it).
+# A line opening `/**` must not directly follow a line closing one.
+find src/main/scala -name '*.scala' -print0 | sort -z | xargs -0 awk '
+  FNR == 1 { indoc = 0; prevdoc = 0 }
+  /^[[:space:]]*$/ { next }
+  {
+    opens = ($0 ~ /^[[:space:]]*\/\*\*/)
+    if (opens && prevdoc) print FILENAME ":" FNR ": " $0
+    if (opens) indoc = 1
+    closes = 0
+    if (indoc && $0 ~ /\*\//) { indoc = 0; closes = ($0 ~ /\*\/[[:space:]]*$/) }
+    prevdoc = closes
+  }' >/tmp/stacked_doc_hits.txt
+if [[ -s /tmp/stacked_doc_hits.txt ]]; then
+  echo "[precommit] FAIL: stacked scaladoc blocks in src/main — only the last one"
+  echo "[precommit] survives; move the earlier block onto its own definition:"
+  cat /tmp/stacked_doc_hits.txt
+  exit 1
+fi
+
 if git diff --cached --name-only | grep -q '^src/.*\.scala$'; then
   echo "[precommit] staged Scala sources detected - running sbt compile + test"
   sbt -batch 'set Test / testOptions += Tests.Argument("-oI")' compile test
