@@ -292,9 +292,10 @@ object TradeInQueries {
       // runs the PRODUCT pipeline — 44-col staging parse, dedup window,
       // typed projection, two audited merges — because q33 exists to
       // verify the pipeline, not to win the minimal-answer race.
-      // ordered1, not orderBy: AQE turns both merge joins into broadcast
-      // joins (no shuffle stage), so a range-sort's sampling pass would
-      // re-execute the entire two-merge DAG a second time.
+      // ordered1, not orderBy: a range-sort's sampling pass would run
+      // the second merge's sort-merge join stage a second time (a
+      // full-outer join cannot broadcast: 6 shuffles, 0 broadcasts under
+      // AQE in PLANS_prod.md); one single-partition sort runs it once.
       t2.select(col("SaleInvoiceID"),
           col("TradeInAmount").cast("double").as("TradeInAmount"),
           col("TradeInDate"), col("TradeInDateEST"),
@@ -307,7 +308,7 @@ object TradeInQueries {
     // via the pipeline's default mergeIntoTargetPartitioned — then the
     // on-disk partitioned target read back. Only the partitions each
     // batch touches are rewritten; k%10 duplicates whose TradeInDate
-    // moved +1 day across a month boundary exercise the moved-key probe
+    // moved +1 day across a month boundary exercise the moved-key lookup
     // end-to-end. Month granularity, not day: this fixture spreads
     // trade-in days over ~7 years (a real daily feed touches 1–2 day
     // partitions), and day keying here would write thousands of 6-row

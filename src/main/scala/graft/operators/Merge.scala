@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 /** M1 (SURVEY.md §2.6): MERGE-upsert emulation — the reference's core
   * "query" (rqtradein_etl.py:150-185): `MERGE target USING dedupedSource
@@ -17,12 +18,12 @@ import org.apache.spark.sql.functions._
   * NULL-key rows on either side never match (plain `===` join, not `<=>`),
   * reproducing SQL MERGE's NULL-never-equals behavior (SURVEY.md §4.2).
   *
-  * Scale posture (SURVEY.md §4.3): the join shuffles both sides on the key;
-  * when the source batch is small (the reference's daily window) AQE turns
-  * the *outer* side lookup into a broadcast where legal. For a partitioned
-  * target, callers should pre-filter `target` to the partitions present in
-  * `source` and rewrite only those (partition-scoped snapshot swap) so a
-  * daily batch never rewrites the full 100 TB table.
+  * Scale posture (SURVEY.md §4.3): the join shuffles and sorts both sides
+  * on the key, however small the source batch: Spark cannot broadcast
+  * either side of a full-outer join, since both must be preserved
+  * (`PLANS_prod.md` q33: 6 shuffles, 0 broadcasts with AQE on). For a
+  * partitioned target, [[upsertPartitioned]] rewrites only the partitions
+  * the batch touches, and broadcasts the batch instead of joining it.
   */
 object Merge {
 
@@ -43,10 +44,9 @@ object Merge {
 
     val s = source.withColumn("__s_present", lit(true)).alias("s")
     val t = target.withColumn("__t_present", lit(true)).alias("t")
-    // No join-strategy hint: AQE broadcast-converts the (deduped, daily-
-    // batch) source side when it is small — measured strictly faster than
-    // pinning SHUFFLE_HASH, which disables that conversion and pays a
-    // wide-row hash build per partition.
+    // No join-strategy hint: the full-outer join plans as a sort-merge
+    // join, measured strictly faster than pinning SHUFFLE_HASH, which
+    // pays a wide-row hash build per partition.
     val joined = t.join(s, col(s"t.$key") === col(s"s.$key"), "full_outer")
 
     val sPresent = col("s.__s_present").isNotNull
@@ -93,59 +93,76 @@ object Merge {
   }
 
   /** Partition-scoped MERGE into a `partitionCol=value`-layout parquet
-    * table: only the partitions PRESENT IN THE SOURCE batch are read,
-    * merged, and rewritten — the other 99.9% of a 100 TB target is never
-    * touched (the full-snapshot [[writeSnapshot]] form rewrites
-    * everything, fine for small tables, absurd for a daily batch into
-    * years of history).
-    *
-    * Mechanics: the source's distinct partition values are collected
-    * (bounded by the batch's day count — driver-safe), the matching
-    * target partitions are read via pushed-down partition pruning, the
-    * standard [[upsert]] runs on that slice, and dynamic partition
-    * overwrite replaces exactly the written partitions. Returns the
+    * table: only the partitions PRESENT IN THE SOURCE batch, plus those
+    * its moved keys leave, are read, merged and rewritten — the other
+    * 99.9% of a 100 TB target is never touched (the full-snapshot
+    * [[writeSnapshot]] form rewrites everything, fine for small tables,
+    * absurd for a daily batch into years of history). Returns the
     * partition values merged, as strings; a NULL partition value (the
     * `__HIVE_DEFAULT_PARTITION__` dir) is merged like any other and
     * returned as null, sorted first.
+    *
+    * Only the batch's own keys can match, so the batch's key column is
+    * broadcast and the target is only scanned, never shuffled or sorted
+    * by key. The one shuffle is the partition-aligned repartition of
+    * the write. Same answer as [[upsert]] over the slice:
+    *   - Stamp lookup: the target's (key, partition, `insertedCol`)
+    *     columns semi-joined against the batch keys and collected. It
+    *     holds only rows of batch keys. Its partitions outside the
+    *     batch's are the moved-from ones: a matched key whose partition
+    *     value CHANGED in this batch (the reference's business-date
+    *     correction) has its live row in a partition the batch does not
+    *     mention, and that partition joins the rewrite set.
+    *   - Target-only rows: the slice anti-joined against the batch keys.
+    *     Every copy of a batch key drops out, including one left in its
+    *     moved-from partition by a crash between the write and the sweep.
+    *   - Batch rows, each once: a matched key keeps its stamped
+    *     `insertedCol` and gets `updatedCol = now`; an unmatched one gets
+    *     `insertedCol = now` and a NULL `updatedCol`. A key stamped in
+    *     two partitions (that crash again) takes the copy inside the
+    *     batch's partitions, which the earlier run already merged.
+    *   - NULL keys never match (`===`): a NULL-key batch row inserts, a
+    *     NULL-key target row is kept.
+    *   - A missing target (first load) runs the same plan against an
+    *     empty local relation. Catalyst prunes the empty joins, leaving
+    *     one projection of the batch: every row inserts.
+    * Bound: the driver collects one lookup row per matched (key,
+    * partition); the broadcasts carry one key per batch row and one
+    * stamp per matched key, and every executor holds them whole. The
+    * reference's ~1k-row daily batch is kilobytes; split a backfill of
+    * tens of millions of keys into batches.
+    *
+    * The write is a dynamic partition overwrite, which replaces exactly
+    * the partitions written. A moved-from partition left with no rows is
+    * deleted explicitly afterwards, since dynamic overwrite never clears
+    * a partition it writes no rows to.
     *
     * Every job is sized to the batch, not to the session's shuffle
     * width. The source is pinned with an eager `localCheckpoint()`, not
     * `persist()`: Spark keeps a cached plan's final shuffle at
     * `spark.sql.shuffle.partitions` (AQE may not change a cached plan's
     * output partitioning), so a persisted 1k-row batch came back as 200
-    * mostly-empty partitions and partition discovery, the probe and the
-    * merge join each paid 200 tasks. The checkpoint runs as an ordinary
-    * AQE query whose exchanges coalesce to the batch's size. Trade-off:
-    * checkpoint blocks cannot be recomputed, so a lost executor fails
-    * the call. That is safe to retry: the dynamic-overwrite write
-    * commits at job end and the emptied-partition sweep is crash-healed
-    * (below), so re-running the same batch converges.
-    *
-    * Moved keys: a matched key whose `partitionCol` value CHANGED in
-    * this batch (the reference's business-date correction) has its live
-    * row in a partition the source does not mention; a slice-only merge
-    * would insert a duplicate and strand the stale row. The probe finds
-    * those rows without a full-table merge: batch keys unmatched in the
-    * slice are semi-joined against a (`key`, `partitionCol`)-pruned scan
-    * of the UNTOUCHED partitions — two thin columns with the partition
-    * filter pushed down, a tiny fraction of target bytes at 100 TB — and
-    * any hit partitions join the rewrite set. A partition emptied by its
-    * only row moving away is deleted explicitly (dynamic overwrite
-    * never clears a partition it writes no rows to). The probe always
-    * runs; its job is skipped only when the target holds no partition
-    * outside the batch's.
+    * mostly-empty partitions and every job reading it paid 200 tasks.
+    * The checkpoint runs as an ordinary AQE query whose exchanges
+    * coalesce to the batch's size. Trade-off: checkpoint blocks cannot
+    * be recomputed, so a lost executor fails the call. That is safe to
+    * retry: the write commits at job end and the emptied-partition sweep
+    * is crash-healed (above), so re-running the same batch converges.
     *
     * Cross-batch stable-schema CONTRACT: every read of the target pins
     * the FULL source schema (`spark.read.schema(source.schema)`) — the
     * round-15 fix for partition-type inference silently corrupting the
-    * merge (dir `part=01` inferred as int 1). The pin deliberately
-    * covers data columns too, so a batch whose data-column types drift
-    * from what earlier batches wrote (target parquet holds long, new
-    * source declares int) fails FAST at the parquet read instead of
-    * coercing at union time as the old inferred read did. Schema
-    * evolution is a migration (rewrite or re-declare), not a per-batch
-    * coercion — at 100 TB a silent widening hides exactly the class of
-    * bug the partition pin closed. */
+    * merge (dir `part=01` inferred as int 1, so the merged "01" row
+    * wrote to dir `part=1` and the real dir was never overwritten). With
+    * the pin, partition values are the raw dir strings cast to the
+    * source type, in the same domain as the batch's. The pin
+    * deliberately covers data columns too, so a batch whose data-column
+    * types drift from what earlier batches wrote (target parquet holds
+    * long, new source declares int) fails FAST at the parquet read
+    * instead of coercing at union time. Schema evolution is a migration
+    * (rewrite or re-declare), not a per-batch coercion — at 100 TB a
+    * silent widening hides exactly the class of bug the partition pin
+    * closed. */
   def upsertPartitioned(
       spark: org.apache.spark.sql.SparkSession,
       targetPath: String,
@@ -154,8 +171,8 @@ object Merge {
       partitionCol: String,
       dataCols: Seq[String],
       audit: Option[(String, String, Column)] = None): Seq[String] = {
-    // Several jobs read `source` (partition discovery, the moved-key
-    // probe, the merge write): pin it so it is computed once.
+    // Several jobs read `source` (partition discovery, the stamp lookup,
+    // the merge write): pin it so it is computed once.
     val src = source.localCheckpoint()
     try upsertPartitionedPinned(spark, targetPath, src, key, partitionCol,
       dataCols, audit)
@@ -165,8 +182,7 @@ object Merge {
   /** `c IN parts` with NULL as an ordinary member, never NULL itself:
     * a NULL partition value lives in its own directory
     * (`__HIVE_DEFAULT_PARTITION__`) like any other value, so SQL's
-    * NULL-never-matches `IN` would drop its rows from the slice and
-    * empty a negated probe. */
+    * NULL-never-matches `IN` would drop its rows from the slice. */
   private def isInParts(c: Column, parts: Seq[String]): Column = {
     val values = parts.filter(_ != null)
     when(c.isNull, lit(values.size < parts.size))
@@ -190,123 +206,44 @@ object Merge {
     if (parts0.isEmpty) return Seq.empty
     val p = new org.apache.hadoop.fs.Path(targetPath)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val exists = fs.exists(p)
+    val target =
+      if (fs.exists(p)) spark.read.schema(source.schema).parquet(targetPath)
+      else spark.createDataFrame(java.util.List.of[Row](), source.schema)
+    val keys = broadcast(source.select(col(key).as("__k")))
 
-    // Partitions holding a prior row of a key whose partition value moved.
-    // A plain semi-join against the batch keys (round 9) — NOT an
-    // anti-join against the parts0 slice: after a crash between the
-    // dynamic-overwrite write and the emptied-partition sweep, the key
-    // already sits in its new partition, so "source keys missing from
-    // the parts0 slice" is empty and an anti-join-refined probe would
-    // never find (or heal) the stale moved-from copy. Rows physically
-    // outside parts0 whose key is in the batch are exactly the
-    // stale-or-moving set, crashed or not.
-    // Metadata fast path before the probe JOB: a moved key's stale row
-    // can only live in a partition OUTSIDE the batch slice, so when the
-    // driver-side directory listing (O(partitions) — the same listing
-    // every read of the target performs anyway) shows NO partition
-    // beyond parts0, the probe is provably empty and its join job is
-    // skipped entirely. Steady state for a mature target: the daily
-    // batch's days are a subset of history, untouched is large and the
-    // probe runs; the fast path wins on young targets and backfills
-    // whose batches span the whole table (measured 0.4 s/run at bench
-    // scale). Dir names are UNESCAPED before the comparison: matching
-    // raw escaped names against raw values is conservative in one
-    // direction only — a batch carrying the literal value "x%3Ay"
-    // would string-match the ESCAPED dir of value "x:y" and wrongly
-    // prove the probe empty (round-14 review); unescaping makes both
-    // sides the logical partition value, closing that collision.
-    // Round-15 ADVICE hardening: every read of the target pins the
-    // partition column to the SOURCE's type via an explicit schema —
-    // partition TYPE INFERENCE would otherwise normalize dir names on
-    // read-back (dir part=01 inferred as int 1 casts to "1"), which (a)
-    // let a dir string-match a parts0 value while the probe's
-    // cast-based filter placed its rows OUTSIDE parts0 (wrongly
-    // skipping the probe), and (b) corrupted the merge itself: ANSI
-    // CASE WHEN coercion of a string batch value against an
-    // int-inferred target column routes through LONG, so the merged
-    // "01" row wrote to dir part=1 and the real part=01 dir was never
-    // overwritten (silent data loss — MergeSpec pins the scenario).
-    // With the pinned schema, partition values are the raw dir strings
-    // cast to the source type, so parts0 (source values cast to
-    // string) and unescaped dir names live in the same domain and the
-    // raw-string fast-path compare below is exact.
-    def targetRead = spark.read.schema(source.schema).parquet(targetPath)
-    val untouchedOnDisk: Seq[String] =
-      if (!exists) Seq.empty
-      else {
-        val prefix = s"$partitionCol="
-        val parts0Set = parts0.toSet
-        fs.listStatus(p).toSeq
-          .filter(st => st.isDirectory && st.getPath.getName.startsWith(prefix))
-          .map(_.getPath.getName.stripPrefix(prefix))
-          .map(d => if (d == ExternalCatalogUtils.DEFAULT_PARTITION_NAME) null
-            else ExternalCatalogUtils.unescapePathName(d))
-          .filterNot(parts0Set)
-      }
-    val movedParts: Seq[String] =
-      if (untouchedOnDisk.isEmpty) Seq.empty
-      else {
-        targetRead
-          .filter(!isInParts(partVal, parts0))
-          .select(col(key), partVal.as("__part"))
-          // NO forced broadcast: on an insert-heavy day the batch key
-          // column is the whole batch; let AQE pick (it still
-          // broadcasts when the batch is genuinely small — the
-          // steady-state daily-window case)
-          .join(source.select(col(key)).distinct(), Seq(key), "left_semi")
-          .select(col("__part")).distinct()
-          .collect().map(_.getString(0)).toSeq
-      }
-    val parts = (parts0 ++ movedParts).distinct
-
-    val targetSlice0 =
-      if (exists)
-        targetRead
-          .filter(isInParts(partVal, parts))
-          .select(source.columns.map(col): _*)
-      else spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], source.schema)
-    // Crash-heal dedup, paid only on moved-key runs: a crash in the
-    // write→sweep window leaves a key in BOTH its new partition and the
-    // stale moved-from one; the full-outer merge would fan such a key
-    // out to two identical output rows. Keep one target row per key,
-    // preferring the copy inside parts0 (the already-merged one, which
-    // carries the correct audit stamps), tie-broken deterministically.
-    val targetSlice =
-      if (movedParts.isEmpty) targetSlice0
-      else {
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(col(key))
-          .orderBy(when(isInParts(partVal, parts0), 0).otherwise(1).asc,
-            partVal.desc)
-        targetSlice0.withColumn("__rn", row_number().over(w))
-          .filter(col("__rn") === 1).drop("__rn")
-      }
-    // First load (no target on disk): the full-outer MERGE against an
-    // empty slice degenerates to "every source row is an insert", so
-    // skip the join — and the key exchange + sort of the whole batch it
-    // plans — and stamp the audit columns directly. Column-for-column
-    // identical to upsert(emptySlice, source, …): data values from the
-    // source, insertedCol = now, updatedCol = NULL of the declared type
-    // (the empty slice contributes nothing to either branch of upsert's
-    // per-column WHENs). Measured (Prof q129_stages, round 19): the
-    // first merge run is the bench's single largest component; at scale
-    // this is every bootstrap/backfill-into-empty load skipping a full
-    // shuffle of the batch.
-    val merged0 =
-      if (!exists) {
-        val auditCols = audit.toSeq.flatMap { case (ins, upd, now) =>
-          Seq(now.as(ins),
-            lit(null).cast(source.schema(upd).dataType).as(upd))
-        }
-        source.select(dataCols.map(col) ++ auditCols: _*)
-      } else upsert(targetSlice, source, key, dataCols, audit)
+    // Batch-sized, so collected: a broadcast passes through the driver
+    // anyway, and a missing target then plans no lookup job at all.
+    val lookup = target
+      .select(Seq(col(key).as("__k"), partVal.as("__part")) ++
+        audit.map(a => col(a._1).as("__ins")): _*)
+      .join(keys, Seq("__k"), "left_semi")
+    val found = lookup.collect().toSeq
+    val movedParts = found.map(_.getString(1)).distinct.filterNot(parts0.contains)
+    val parts = parts0 ++ movedParts
+    val targetOnly = target.filter(isInParts(partVal, parts))
+      .join(keys, col(key) === col("__k"), "left_anti")
+      .select(dataCols.map(col) ++
+        audit.toSeq.flatMap(a => Seq(col(a._1), col(a._2))): _*)
+    val batchRows = audit match {
+      case None => source.select(dataCols.map(col): _*)
+      case Some((ins, upd, now)) =>
+        // One stamp per key: the copy inside parts0 first, then the
+        // highest partition value.
+        val stamps = found.groupBy(_.get(0)).values
+          .map(_.maxBy(r => (parts0.contains(r.getString(1)), Option(r.getString(1)))))
+        val stamp = spark.createDataFrame(stamps.toSeq.asJava, lookup.schema)
+        val matched = col("__k").isNotNull
+        source.join(broadcast(stamp), col(key) === col("__k"), "left_outer")
+          .select(dataCols.map(col) ++ Seq(
+            when(matched, col("__ins")).otherwise(now).as(ins),
+            when(matched, now).as(upd)): _*)
+    }
     // Only a moved-from partition can end up with zero output rows (every
-    // source partition receives at least its own batch rows), so only
-    // moved-key runs record the partitions written, observed during the
-    // write pass itself (a struct, because collect_set skips NULLs).
-    val written = org.apache.spark.sql.Observation()
+    // batch partition receives its own batch rows), so only moved-key
+    // runs record the partitions written, observed during the write pass
+    // itself (a struct, because collect_set skips NULLs).
+    val written = Observation()
+    val merged0 = targetOnly.union(batchRows)
     val merged =
       if (movedParts.isEmpty) merged0
       else merged0.observe(written, collect_set(struct(partVal)).as("parts"))
@@ -325,7 +262,7 @@ object Merge {
       .partitionBy(partitionCol).parquet(targetPath)
     if (movedParts.nonEmpty) {
       val writtenParts = written.get("parts")
-        .asInstanceOf[scala.collection.Seq[org.apache.spark.sql.Row]]
+        .asInstanceOf[scala.collection.Seq[Row]]
         .map(_.getString(0)).toSet
       for (part <- movedParts if !writtenParts.contains(part))
         fs.delete(new org.apache.hadoop.fs.Path(p,
@@ -369,7 +306,7 @@ object Merge {
     * (old-side for deletes).
     *
     * Scale shape: ONE key-keyed full-outer join — shuffle on the key
-    * like any MERGE, AQE broadcasts a small side; the non-key comparison
+    * like [[upsert]], never a broadcast; the non-key comparison
     * is a codegen'd per-row conjunction, no second pass. For
     * date-partitioned snapshots, pre-filter both sides to the changed
     * window and the join only shuffles that window (the

@@ -25,12 +25,14 @@ import TradeInSchema._
   * to storage.
   *
   * Scale posture: the daily source batch is small relative to the target
-  * (one day vs. all history) — the merge's full-outer join broadcasts the
-  * source side under AQE. The staging table never exceeds ~2 days of data
-  * by construction (retention). The target snapshot rewrite is the one
-  * full-table cost; on a date-partitioned target, writers should swap
-  * only partitions present in the source (documented on
-  * [[graft.operators.Merge.writeSnapshot]]).
+  * (one day vs. all history). The partition-scoped merge broadcasts the
+  * batch's keys into a scan of the partitions it touches; the snapshot
+  * layout's full-outer join ([[mergeIntoTarget]]) cannot broadcast and
+  * shuffles both sides on the key. The staging table never exceeds ~2
+  * days of data by construction (retention). The target snapshot
+  * rewrite is the one full-table cost; on a date-partitioned target,
+  * writers should swap only partitions present in the source
+  * (documented on [[graft.operators.Merge.writeSnapshot]]).
   */
 object TradeInPipeline {
 
@@ -112,7 +114,7 @@ object TradeInPipeline {
     * partitions of years of history instead of snapshotting the world
     * (the [[mergeIntoTarget]] + writeSnapshot fallback). Date
     * corrections that move an invoice across days are handled by
-    * [[graft.operators.Merge.upsertPartitioned]]'s moved-key probe.
+    * [[graft.operators.Merge.upsertPartitioned]]'s stamp lookup.
     * Returns the partition values rewritten.
     *
     * `partDay` is the partition expression over the typed source row —
@@ -128,8 +130,9 @@ object TradeInPipeline {
       spark: SparkSession, targetPath: String, staging: DataFrame,
       now: Column, partDay: Column = to_date(col("TradeInDate"))): Seq[String] = {
     val source = toTyped(dedupSource(staging))
-      // upsert reads audit stamps from the target side; the source only
-      // needs the columns PRESENT so the target slice retains them.
+      // The merge reads audit stamps from the target side; the source
+      // only needs the columns PRESENT, since every target read takes
+      // the source's schema.
       .withColumn(updatedCol, lit(null).cast("timestamp"))
       .withColumn(partitionDayCol, partDay)
     Merge.upsertPartitioned(spark, targetPath, source, "SaleInvoiceID",
@@ -276,7 +279,7 @@ final class TradeInPipeline(
 
     // 5. merge into target — partition-scoped by default: only the
     // TradeInDay partitions present in this batch are read and
-    // rewritten (plus any moved-key partitions the probe finds).
+    // rewritten (plus the partitions moved keys leave).
     val staging = spark.read.schema(stagingSchema).parquet(stagingPath)
     timed("merge") {
       if (partitionedTarget)

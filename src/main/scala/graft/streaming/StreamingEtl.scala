@@ -31,8 +31,8 @@ object StreamingEtl {
     *
     * Each micro-batch goes through the partition-scoped merge
     * ([[TradeInPipeline.mergeIntoTargetPartitioned]]): only the
-    * day-partitions present in the batch (plus any stale moved-key
-    * partitions the probe finds) are read and rewritten, so a steady
+    * day-partitions present in the batch (plus the partitions its
+    * moved keys leave) are read and rewritten, so a steady
     * stream of daily windows never rewrites the accumulated history. */
   def ingestAvailableNow(
       spark: SparkSession,

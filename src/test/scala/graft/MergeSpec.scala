@@ -407,6 +407,119 @@ class MergeSpec extends AnyFunSuite {
     assert(wide <= narrow + 8, s"tasks: $wide at 200 partitions, $narrow at 4")
   }
 
+  /** (day, k, v) rows with an `ins` stamp at 2024-06-01 10:00 and no `upd`. */
+  private def stamped(rows: (Option[String], Option[Int], String)*) =
+    rows.toDF("day", "k", "v")
+      .withColumn("ins", lit("2024-06-01 10:00:00").cast("timestamp"))
+      .withColumn("upd", lit(null).cast("timestamp"))
+
+  private def stampedRun(dir: String, now: String,
+      batch: (Option[String], Option[Int], String)*): Seq[String] =
+    Merge.upsertPartitioned(spark, dir, stamped(batch: _*), "k", "day",
+      Seq("day", "k", "v"),
+      audit = Some(("ins", "upd", lit(now).cast("timestamp"))))
+
+  /** (day, k, v, ins, upd) of a stamped target, stamps as "dd HH" text. */
+  private def readStamped(dir: String): Seq[(String, Option[Int], String, String, String)] =
+    spark.read.parquet(dir)
+      .select(col("day").cast("string"), col("k"), col("v"),
+        date_format(col("ins"), "dd HH"), date_format(col("upd"), "dd HH"))
+      .as[(String, Option[Int], String, String, String)].collect().toSeq
+      .sortBy(r => (Option(r._1), r._2, r._3))
+
+  test("upsertPartitioned plans one shuffle, the write's, and never joins " +
+    "or windows the target slice by key") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.command.DataWritingCommandExec
+    import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+    import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeExec}
+    import org.apache.spark.sql.execution.joins.SortMergeJoinExec
+    import org.apache.spark.sql.execution.window.WindowExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case s: QueryStageExec => nodes(s.plan)
+      case _ => p.children.flatMap(nodes)
+    })
+    val dir = java.nio.file.Files.createTempDirectory("pplan").toString + "/t"
+    stamped((Some("2024-01-01"), Some(1), "a0"), (Some("2024-01-01"), Some(2), "b0"),
+      (Some("2024-01-02"), Some(3), "c0"))
+      .write.partitionBy("day").parquet(dir)
+    val writes = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      // the merge's overwrite; the set-up write's event may arrive late
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (nodes(qe.executedPlan).exists {
+          case DataWritingCommandExec(c: InsertIntoHadoopFsRelationCommand, _) =>
+            c.mode == org.apache.spark.sql.SaveMode.Overwrite
+          case _ => false
+        }) writes.add(qe.executedPlan)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      // k=1 moves 01-01 → 01-03 (so the moved-from partition is rewritten
+      // too), k=4 inserts into 01-02
+      stampedRun(dir, "2024-06-02 10:00:00",
+        (Some("2024-01-03"), Some(1), "a1"), (Some("2024-01-02"), Some(4), "d1"))
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (writes.isEmpty && System.nanoTime() < deadline) Thread.sleep(20)
+    } finally spark.listenerManager.unregister(listener)
+    assert(writes.size == 1, s"${writes.size} writes captured")
+    val plan = nodes(writes.peek())
+    assert(plan.exists(_.isInstanceOf[AdaptiveSparkPlanExec]))
+    val shuffles = plan.collect { case e: ShuffleExchangeExec => e }
+    assert(shuffles.map(_.shuffleOrigin) == Seq(REPARTITION_BY_NUM),
+      s"expected only the partition-aligned repartition:\n${writes.peek()}")
+    assert(!plan.exists(_.isInstanceOf[SortMergeJoinExec]), writes.peek())
+    val windowsOverScans = plan.collect { case w: WindowExec => w }
+      .filter(w => nodes(w).exists(_.isInstanceOf[FileSourceScanExec]))
+    assert(windowsOverScans.isEmpty, writes.peek())
+    assert(readStamped(dir).map(r => (r._1, r._2.get, r._3)) == Seq(
+      ("2024-01-01", 2, "b0"), ("2024-01-02", 3, "c0"), ("2024-01-02", 4, "d1"),
+      ("2024-01-03", 1, "a1")))
+  }
+
+  test("upsertPartitioned: NULL keys never match (SQL MERGE null semantics)") {
+    val dir = java.nio.file.Files.createTempDirectory("pnullkey").toString + "/t"
+    stamped((Some("2024-01-01"), None, "tn"), (Some("2024-01-01"), Some(1), "t1"),
+      (Some("2024-01-02"), Some(2), "t2"))
+      .write.partitionBy("day").parquet(dir)
+    // the NULL-key batch row lands in the partition holding the NULL-key
+    // target row, which is rewritten
+    val merged = stampedRun(dir, "2024-06-02 10:00:00",
+      (Some("2024-01-01"), None, "sn"), (Some("2024-01-01"), Some(1), "s1"))
+    assert(merged == Seq("2024-01-01"))
+    assert(readStamped(dir) == Seq(
+      ("2024-01-01", None, "sn", "02 10", null),     // inserts
+      ("2024-01-01", None, "tn", "01 10", null),     // kept, not updated
+      ("2024-01-01", Some(1), "s1", "01 10", "02 10"),
+      ("2024-01-02", Some(2), "t2", "01 10", null)))
+  }
+
+  test("upsertPartitioned crash heal keeps the merged copy's audit stamps") {
+    val dir = java.nio.file.Files.createTempDirectory("pcrash3").toString + "/t"
+    stamped((Some("2024-01-09"), Some(1), "a0"), (Some("2024-01-02"), Some(2), "b0"))
+      .write.partitionBy("day").parquet(dir)
+    val batch = Seq((Some("2024-01-05"), Some(1), "a1"))
+    stampedRun(dir, "2024-06-02 10:00:00", batch: _*)
+    // crashed layout: the stale pre-move copy of k=1 is back in 01-09.
+    // It carries a different insert stamp, and its day sorts after the
+    // new one, so only the preference for the copy inside the batch's
+    // partitions keeps the right stamp.
+    Seq((Some(1), "a0")).toDF("k", "v")
+      .withColumn("ins", lit("2024-06-07 10:00:00").cast("timestamp"))
+      .withColumn("upd", lit(null).cast("timestamp"))
+      .write.parquet(s"$dir/day=2024-01-09")
+    val merged = stampedRun(dir, "2024-06-03 10:00:00", batch: _*)
+    assert(merged == Seq("2024-01-05", "2024-01-09"))
+    assert(readStamped(dir) == Seq(
+      ("2024-01-02", Some(2), "b0", "01 10", null),
+      ("2024-01-05", Some(1), "a1", "01 10", "03 10")))
+    assert(!new java.io.File(s"$dir/day=2024-01-09").exists())
+  }
+
   test("snapshotDiff classifies insert/update/delete, emits new-side NULLs, drops unchanged") {
     val spark = TestSpark.spark
     import spark.implicits._

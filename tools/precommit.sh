@@ -118,8 +118,26 @@ if git diff --cached --name-only | grep -q '^src/.*\.scala$'; then
       exit 1
     fi
     python3 tools/check_oracle.py "$SF_DIR" "$VOUT"
+
+    # Daily-ETL gate: the registry oracle never runs the product's daily
+    # path (stage, dedup, MERGE, counts, retention) the way a deployment
+    # does; perfbench's etl_daily replays one such day in DuckDB. An
+    # every-day NPE in the partition-scoped MERGE once reached the
+    # benchmark with every gate above green.
+    if git diff --cached --name-only \
+        | grep -qE '^src/main/scala/graft/(operators/Merge\.scala|pipeline/|streaming/)'; then
+      echo "[precommit] running one perfbench etl_daily day (seed 1)"
+      ETL_JSON=$(python3 perfbench/run.py --workload etl_daily --seed 1 \
+        --seconds 1 --trace 0 | tail -n 1 || true)
+      if ! python3 -c 'import json, sys
+r = json.loads(sys.argv[1])
+sys.exit(0 if r["correct"] is True and r["failed"] == 0 else 1)' "$ETL_JSON"; then
+        echo "[precommit] FAIL: etl_daily day not correct or failed: $ETL_JSON"
+        exit 1
+      fi
+    fi
   else
-    echo "[precommit] GRAFT_SKIP_ORACLE=1 - skipping oracle gate"
+    echo "[precommit] GRAFT_SKIP_ORACLE=1 - skipping oracle and ETL gates"
   fi
 else
   echo "[precommit] no staged Scala sources - skipping build gate"
