@@ -70,13 +70,6 @@ object TextFunctions {
         sequence(lit(1), greatest(length(text) - (n - 1), lit(1))),
         i => text.substr(i, lit(n))))
 
-  /** One MinHash signature component: the lexicographic min of
-    * `md5(seed | shingle)` over the document's shingle set. md5-hex min is
-    * a valid min-hash (uniform permutation per seed) and — unlike Spark's
-    * murmur3 `hash()` — is reproducible in any ANSI-SQL oracle. */
-  def minhash(shingles: Column, seed: String): Column =
-    array_min(transform(shingles, s => md5(concat(lit(seed + "|"), s))))
-
   /** Per-document term-frequency map `token → count` — the codegen'd
     * one-pass form of `explode(tokens) → groupBy(token).count()`
     * ([[graft.expressions.TokenTf]]). Exploding the returned map yields

@@ -362,7 +362,7 @@ object Curation {
     * must report separately.
     *
     * Scale shape (round-13 rework): the cutoff is
-    * [[Relational.valueAtRank]]'s two-job exact order statistic — the
+    * [[Relational.valueAtRankOf]]'s two-job exact order statistic — the
     * previous shape materialized a rank COLUMN over every row
     * ([[Relational.groupedRowNumber]]) and then re-played the whole
     * range shuffle once more inside the cutoff aggregation's broadcast

@@ -59,17 +59,13 @@ object EntityResolution {
   /** Linkage-quality summary against a known truth predicate (available
     * in evaluation settings where a shared key survives): precision and
     * recall of the thresholded links. `truePair` is evaluated on the
-    * suffixed pair frame; `nTrue` is the total number of true pairs
-    * (the recall denominator, counted independently of blocking so
-    * missed-by-blocking pairs hurt recall, as they should). */
-  def evalLinks(links: DataFrame, truePair: Column, nTrue: Long): DataFrame =
-    evalLinksAgainst(links, truePair,
-      links.sparkSession.range(1).select(lit(nTrue).as("n_true")))
-
-  /** [[evalLinks]] with the truth total supplied as a 1-row frame
-    * (`n_true` column) instead of a driver value — keeps the whole eval
-    * one job (a driver-side `.count()` for the denominator would run the
-    * truth side's full lineage as a separate action). */
+    * suffixed pair frame; `truthTotal` is a 1-row frame whose `n_true`
+    * column is the total number of true pairs (the recall denominator,
+    * counted independently of blocking so missed-by-blocking pairs hurt
+    * recall, as they should). A frame rather than a driver value keeps
+    * the whole eval one job (a driver-side `.count()` for the
+    * denominator would run the truth side's full lineage as a separate
+    * action). */
   def evalLinksAgainst(links: DataFrame, truePair: Column,
       truthTotal: DataFrame): DataFrame =
     links.agg(

@@ -7,9 +7,9 @@ import org.apache.spark.sql.functions._
 /** Table-maintenance operators. At 100 TB the dominant operational costs
   * of a parquet lake are (a) small files — every scan pays per-file
   * open/footer overhead and the driver pays per-file listing — and (b)
-  * retention — rewriting data to delete old rows is absurd when the
-  * layout already partitions by date. Both fix at the storage layer, not
-  * the query layer.
+  * scans that cannot skip — file min/max stats prune nothing unless the
+  * layout clusters the filtered columns. Both fix at the storage layer,
+  * not the query layer.
   */
 object Maintenance {
 
@@ -33,9 +33,9 @@ object Maintenance {
     nFiles
   }
 
-  /** Compact an [[graft.streaming.StreamingEtl.annIngest]] epoch tree (or
-    * any flat entries frame) into the CELL-PARTITIONED index layout:
-    * `out/cell=<id>/part-*.parquet`, one write partition per cell
+  /** Compact an IVF entries frame (a [[Similarity.buildIvfIndex]] or
+    * [[Similarity.ivfAppend]] result) into the CELL-PARTITIONED index
+    * layout: `out/cell=<id>/part-*.parquet`, one write partition per cell
     * (`repartition(cell)` before `partitionBy` — the q129 lesson: without
     * it every task writes a file into every cell directory and the file
     * count explodes tasks×cells). This layout is what makes an IVF index
@@ -51,29 +51,6 @@ object Maintenance {
       .repartition(col("cell"))
       .write.mode("overwrite")
       .partitionBy("cell").parquet(outPath)
-
-  /** Partition-level retention for a `col=value`-partitioned layout:
-    * drops every partition directory whose string value sorts strictly
-    * below `cutoff` (ISO dates sort correctly as strings). Pure metadata
-    * work — no data is read or rewritten, which is the only form of
-    * retention that stays O(partitions) at any table size. Returns the
-    * dropped partition values. Row-level retention (the reference's
-    * DATEADD delete, SURVEY.md §2.6 M2) remains a `filter` on the
-    * negated delete predicate; this is its layout-aware fast path when
-    * the retention key IS the partition key. */
-  def dropPartitionsBefore(spark: SparkSession, path: String,
-      partitionCol: String, cutoff: String): Seq[String] = {
-    val p = new Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return Seq.empty
-    val prefix = s"$partitionCol="
-    val dropped = fs.listStatus(p).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith(prefix))
-      .map(st => st.getPath)
-      .filter(_.getName.stripPrefix(prefix) < cutoff)
-    dropped.foreach(d => fs.delete(d, true))
-    dropped.map(_.getName.stripPrefix(prefix)).sorted
-  }
 
   /** Z-order clustered rewrite — multi-dimensional data skipping. A
     * single-column sort makes parquet min/max stats selective for ONE

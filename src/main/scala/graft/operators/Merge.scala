@@ -94,10 +94,12 @@ object Merge {
 
   /** Partition-scoped MERGE into a `partitionCol=value`-layout parquet
     * table: only the partitions PRESENT IN THE SOURCE batch, plus those
-    * its moved keys leave, are read, merged and rewritten — the other
-    * 99.9% of a 100 TB target is never touched (the full-snapshot
+    * its moved keys leave, are merged and rewritten — the other 99.9% of
+    * a 100 TB target is never rewritten (the full-snapshot
     * [[writeSnapshot]] form rewrites everything, fine for small tables,
-    * absurd for a daily batch into years of history). Returns the
+    * absurd for a daily batch into years of history). The other
+    * partitions are still read: the stamp lookup below scans the key,
+    * partition and `insertedCol` columns of the whole target. Returns the
     * partition values merged, as strings; a NULL partition value (the
     * `__HIVE_DEFAULT_PARTITION__` dir) is merged like any other and
     * returned as null, sorted first.

@@ -137,27 +137,6 @@ object Multimodal {
     }(Encoders.product[MediaFeatures])
   }
 
-  /** Stub resize: halves the embedded dimensions and keeps every second
-    * body byte — deterministic plumbing for the real thing (same
-    * schema-in/schema-out shape a JNI resizer would have). */
-  final case class ResizedMedia(doc_id: Long, width: Int, height: Int,
-      bin: Array[Byte])
-
-  def resizeStub(df: DataFrame, idCol: String, binCol: String,
-      codec: MediaCodec = HeaderCodec): Dataset[ResizedMedia] = {
-    val input = df.select(df(idCol).cast("long"), df(binCol))
-      .as[(Long, Array[Byte])](Encoders.tuple(Encoders.scalaLong, Encoders.BINARY))
-    input.mapPartitions { rows =>
-      rows.map { case (id, bytes) =>
-        val (w, h) = codec.decode(bytes)
-        val body = bytes.drop(12)
-        val sub = body.indices.collect { case i if i % 2 == 0 => body(i) }.toArray
-        ResizedMedia(id, w / 2, h / 2, bytes.take(4) ++
-          f"${w / 2}%04d${h / 2}%04d".getBytes(java.nio.charset.StandardCharsets.US_ASCII) ++ sub)
-      }
-    }(Encoders.product[ResizedMedia])
-  }
-
   /** The decode stage: one pass, partition-local, no shuffle. Format is
     * sniffed from magic bytes on the JVM side (same table as
     * [[graft.functions.BinaryFunctions.sniffFormat]]); dimensions come

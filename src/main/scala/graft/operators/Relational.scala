@@ -42,8 +42,7 @@ object Relational {
     * its share of the table, its ratio to the mean per-key load, and the
     * salt factor that would level it (`ceil(count / mean)` — the number
     * of sub-keys a salted join needs so no sub-key exceeds the average).
-    * Run it on both sides of a join that AQE keeps flagging; the output
-    * is directly the `saltFactor` argument of the salted-join operator.
+    * Run it on both sides of a join that AQE keeps flagging.
     * The ratio arithmetic is exact-integer until one final rounded
     * division (ceil via `(a + b - 1) div b`, never float), so any SQL
     * oracle reproduces it bit-exactly.
@@ -195,28 +194,6 @@ object Relational {
     left.join(right, on, "left_semi")
   def anti(left: DataFrame, right: DataFrame, on: Seq[String]): DataFrame =
     left.join(right, on, "left_anti")
-
-  /** Skew-defeating salted equi-join (left = the skewed/fact side,
-    * right = the smaller-but-not-broadcastable side). The left side's
-    * hot keys are spread over `salt` buckets by a random-free
-    * deterministic salt (hash of the whole row modulo `salt`); the right
-    * side is replicated `salt`× via explode so every (key, salt) bucket
-    * finds its match. Shuffle key becomes (key, salt) — a hot key's rows
-    * land on `salt` reducers instead of one.
-    *
-    * AQE's skew-join handles sort-merge skew automatically when stats
-    * surface it; this is the explicit form for when they don't (e.g.
-    * skew behind an exchange AQE cannot split, or a deliberately
-    * pre-partitioned layout). Inner joins only. */
-  def saltedJoin(left: DataFrame, right: DataFrame, on: Seq[String],
-      salt: Int): DataFrame = {
-    require(salt > 0, "salt must be positive")
-    val lSalted = left.withColumn("__salt",
-      pmod(hash(left.columns.map(col): _*), lit(salt)))
-    val rSalted = right.withColumn("__salt",
-      explode(array((0 until salt).map(lit): _*)))
-    lSalted.join(rSalted, on :+ "__salt").drop("__salt")
-  }
 
   /** As-of join: for every left row, the single most recent right row
     * with `rightTime <= leftTime`, matched within `key` — the canonical
@@ -439,35 +416,29 @@ object Relational {
       org.apache.spark.sql.types.LongType, nullable = false))
   }
 
-  /** The row at 1-based global rank `rank` under `sortCols` — an exact
+  /** The row at a 1-based global rank under `sortCols` — an exact
     * distributed order statistic (quantile cutoffs, exact percentile
-    * boundaries). Same range-shuffle machinery as [[groupedRowNumber]]
-    * but extracts ONE row instead of materializing a rank column: a
-    * per-partition count pass locates the owning partition, then a
-    * second pass walks that partition's already-sorted iterator to the
-    * local offset (every other partition returns instantly). Both
-    * passes act on the SAME shuffled RDD, so the range exchange runs
-    * once and the second job reuses its shuffle files. `None` when
-    * `rank` exceeds the row count. Driver traffic is one count per
+    * boundaries) — with the rank derived FROM the total row count.
+    * Same range-shuffle machinery as [[groupedRowNumber]] but extracts
+    * ONE row instead of materializing a rank column: a per-partition
+    * count pass locates the owning partition, then a second pass walks
+    * that partition's already-sorted iterator to the local offset
+    * (every other partition returns instantly). Both passes act on the
+    * SAME shuffled RDD, so the range exchange runs once and the second
+    * job reuses its shuffle files. Driver traffic is one count per
     * partition plus the single result row — never data.
     *
-    * `sortCols` need not be a total order when only an ORDER-DETERMINED
-    * column of the result is consumed (the value at sorted position k
-    * is identical under any tie order of equal sort keys); consume a
-    * non-sort column only with a total order. */
-  def valueAtRank(df: DataFrame, sortCols: Seq[Column],
-      rank: Long): Option[org.apache.spark.sql.Row] = {
-    require(rank >= 1, s"rank must be >= 1: $rank")
-    valueAtRankOf(df, sortCols)(_ => rank).map(_._1)
-  }
-
-  /** [[valueAtRank]] with the rank derived FROM the total row count —
     * `rankOf(n)` receives the exact count the counting pass already
     * computed (the sum of per-partition counts IS n), so a quantile
     * cutoff like ceil(frac·n) costs no dedicated count scan of the
     * input. Returns the row AND the total; `None` row when the derived
     * rank is out of range (n = 0, or rankOf asks past the end).
-    * `rankOf` must be pure (it is evaluated once). */
+    * `rankOf` must be pure (it is evaluated once).
+    *
+    * `sortCols` need not be a total order when only an ORDER-DETERMINED
+    * column of the result is consumed (the value at sorted position k
+    * is identical under any tie order of equal sort keys); consume a
+    * non-sort column only with a total order. */
   def valueAtRankOf(df: DataFrame, sortCols: Seq[Column])(
       rankOf: Long => Long): Option[(org.apache.spark.sql.Row, Long)] = {
     val (rows, total) = valuesAtRanks(df, sortCols)(n => Seq(rankOf(n)))
@@ -475,7 +446,7 @@ object Relational {
   }
 
   /** The rows at SEVERAL 1-based global ranks in one pair of jobs —
-    * the bulk form of [[valueAtRank]] for quantile EDGE extraction
+    * the bulk form of [[valueAtRankOf]] for quantile EDGE extraction
     * (histogram bin boundaries, decile cuts): `ranksOf(n)` receives the
     * exact total and returns the wanted ranks (duplicates fine,
     * out-of-range ranks dropped). One range shuffle, one per-partition
@@ -540,19 +511,6 @@ object Relational {
     finally b.destroy()
     (got.toMap, total)
   }
-
-  /** Bucketed co-located table pair: writing both sides bucketed and
-    * sorted by the join key lets every future equi-join on that key run
-    * shuffle-free (bucket pruning + sort-merge without exchange) — the
-    * standard layout for a 100 TB fact table joined daily on the same
-    * key. Managed-table write (`saveAsTable`); read back via
-    * `spark.table`. */
-  def writeBucketed(df: DataFrame, table: String, key: String,
-      buckets: Int): Unit =
-    df.write.mode("overwrite")
-      .bucketBy(buckets, key).sortBy(key)
-      .format("parquet")
-      .saveAsTable(table)
 
   /** Native as-of join — same result contract as [[asofJoin]] (latest
     * right row with `rightTime ≤ leftTime` per key, NULLs when none),

@@ -271,9 +271,7 @@ object Similarity {
 
   /** The assignment half of [[buildIvfIndex]] / [[ivfAppend]] as a
     * standalone batch operation: the `(id, vec, nrm, cell)` postings
-    * frame for `df` against a frozen `(cell, vec, nrm)` centroid frame.
-    * This is the unit a streaming ingest appends per micro-batch
-    * ([[graft.streaming.StreamingEtl.annIngest]]). */
+    * frame for `df` against a frozen `(cell, vec, nrm)` centroid frame. */
   def assignToCells(df: DataFrame, centroids: DataFrame, vecCol: String,
       idCol: String, roundTo: Int = 6): DataFrame =
     nearestCells(df, centroids, vecCol, idCol, "id", 1, roundTo)
@@ -757,61 +755,6 @@ object Similarity {
       .join(dupOf.withColumnRenamed("id_a", idCol), Seq(idCol), "left")
       .withColumn("is_dup", col("dup_of").isNotNull)
       .select(col(idCol), col("cell"), col("is_dup"), col("dup_of"))
-  }
-
-  /** Incremental SemDeDup probe — [[semanticDedup]]'s batch-vs-index
-    * form (the q77 build/probe split in embedding space): a batch of
-    * new vectors is assigned to the FROZEN centroids and compared only
-    * against the standing index's members of the SAME cell; a batch
-    * vector with any index cell-mate at cosine ≥ `threshold` is a
-    * duplicate of the smallest such index id. The index is
-    * [[assignToCells]] output `(id, vec, nrm, cell)` — the corpus is
-    * never re-embedded, never re-assigned, never re-scanned beyond the
-    * probed cells.
-    *
-    * Batch-INTERNAL near-dups are deliberately out of scope (both
-    * members are novel vs the index — the [[semanticDedup]] batch pass
-    * handles self-duplicating ingest), mirroring
-    * [[graft.streaming.StreamingEtl.dedupIngest]]'s contract.
-    *
-    * Emits one row per batch vector: `(idCol, cell, is_dup, dup_of)`
-    * — [[semanticDedup]]'s verdict contract, so downstream removal
-    * passes are interchangeable.
-    *
-    * Scale shape: centroids broadcast (bounded by nlist); the probe is
-    * an equi-join on `cell` — with the index parquet written
-    * cell-partitioned ([[Maintenance.compactIvfIndex]]'s layout) the
-    * join prunes to the batch's cells and never shuffles the standing
-    * index; `maxCell` fails fast on a degenerate mega-cell exactly as
-    * [[semanticDedup]] does (the all-pairs failure mode is fenced, not
-    * inherited). */
-  def semanticDedupIncremental(batch: DataFrame, index: DataFrame,
-      centroids: DataFrame, vecCol: String, idCol: String,
-      threshold: Double, roundTo: Int = 6,
-      maxCell: Long = 100000L): DataFrame = {
-    require(threshold > 0.0 && threshold <= 1.0, s"threshold in (0,1]: $threshold")
-    require(maxCell > 0, "maxCell must be positive")
-    val asg = assignToCells(batch, centroids, vecCol, idCol, roundTo)
-    val counts = index.groupBy(col("cell")).agg(count(lit(1)).as("__cnt"))
-    val guarded = index.join(broadcast(counts), "cell")
-      .where(OpsUtil.orRaise(col("__cnt") <= maxCell,
-        lit(s"semanticDedupIncremental: cell "), col("cell"),
-        lit(s" holds "), col("__cnt"),
-        lit(s" vectors (> maxCell=$maxCell); use better centroids or " +
-          "raise maxCell")))
-    asg.select(col("cell"), col("id"),
-        col("vec").as("__va"), col("nrm").as("__na"))
-      // LEFT join: a batch vector landing in an empty cell is still a
-      // verdict row (is_dup = false), not a dropped record
-      .join(guarded.select(col("cell"), col("id").as("__ib"),
-        col("vec").as("__vb"), col("nrm").as("__nb")), Seq("cell"), "left")
-      .withColumn("__cos", when(col("__ib").isNotNull,
-        round(dot(col("__va"), col("__vb")) / (col("__na") * col("__nb")),
-          roundTo)))
-      .groupBy(col("id"), col("cell"))
-      .agg(min(when(col("__cos") >= threshold, col("__ib"))).as("dup_of"))
-      .select(col("id").as(idCol), col("cell"),
-        col("dup_of").isNotNull.as("is_dup"), col("dup_of"))
   }
 
   /** Recall@k of an approximate top-k table against the exact baseline —

@@ -110,12 +110,14 @@ object TradeInPipeline {
     * dedup + type the staging batch and MERGE it into the
     * `TradeInDay`-partitioned parquet target at `targetPath`, rewriting
     * ONLY the partitions the batch touches — the reference's daily batch
-    * spans 1–2 business days, so the daily run reads and rewrites 1–2
-    * partitions of years of history instead of snapshotting the world
-    * (the [[mergeIntoTarget]] + writeSnapshot fallback). Date
-    * corrections that move an invoice across days are handled by
-    * [[graft.operators.Merge.upsertPartitioned]]'s stamp lookup.
-    * Returns the partition values rewritten.
+    * spans 1–2 business days, so the daily run rewrites 1–2 partitions
+    * of years of history instead of snapshotting the world (the
+    * [[mergeIntoTarget]] + writeSnapshot fallback). The other partitions
+    * are read but never rewritten: the stamp lookup of
+    * [[graft.operators.Merge.upsertPartitioned]] scans the key,
+    * partition and `ETLRowInsertedEST` columns of the whole target, and
+    * it is also what handles date corrections that move an invoice
+    * across days. Returns the partition values rewritten.
     *
     * `partDay` is the partition expression over the typed source row —
     * `to_date(TradeInDate)` by default; coarser keys (month) suit
@@ -278,8 +280,10 @@ final class TradeInPipeline(
     }
 
     // 5. merge into target — partition-scoped by default: only the
-    // TradeInDay partitions present in this batch are read and
-    // rewritten (plus the partitions moved keys leave).
+    // TradeInDay partitions present in this batch (plus the partitions
+    // moved keys leave) are rewritten. Every partition is read: the
+    // merge's stamp lookup scans the whole target, and so does stage 6's
+    // count of today's stamps.
     val staging = spark.read.schema(stagingSchema).parquet(stagingPath)
     timed("merge") {
       if (partitionedTarget)

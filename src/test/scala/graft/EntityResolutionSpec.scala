@@ -28,8 +28,8 @@ class EntityResolutionSpec extends AnyFunSuite {
     val pairs = links.select("id_a", "id_b").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pairs == Set((1L, 1L), (4L, 4L)))
-    val ev = EntityResolution.evalLinks(links,
-      col("id_a") === col("id_b"), nTrue = 4L).collect().head
+    val ev = EntityResolution.evalLinksAgainst(links,
+      col("id_a") === col("id_b"), Seq(4L).toDF("n_true")).collect().head
     assert(ev.getLong(0) == 2 && ev.getLong(1) == 2 && ev.getLong(2) == 4)
     assert(ev.getDouble(3) == 1.0 && ev.getDouble(4) == 0.5)
   }

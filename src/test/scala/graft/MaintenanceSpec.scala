@@ -95,23 +95,6 @@ class MaintenanceSpec extends AnyFunSuite {
     assert(mem.sameElements(viaDisk))
   }
 
-  test("dropPartitionsBefore removes only older partitions, metadata-only") {
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("ret").toString + "/t"
-    Seq(
-      ("2024-01-01", 1L), ("2024-01-02", 2L),
-      ("2024-01-03", 3L), ("2024-01-04", 4L))
-      .toDF("day", "v")
-      .write.partitionBy("day").parquet(dir)
-    val dropped = Maintenance.dropPartitionsBefore(spark, dir, "day", "2024-01-03")
-    assert(dropped == Seq("2024-01-01", "2024-01-02"))
-    val left = spark.read.parquet(dir).select("day").distinct()
-      .as[String].collect().sorted
-    assert(left.toSeq == Seq("2024-01-03", "2024-01-04"))
-    // idempotent
-    assert(Maintenance.dropPartitionsBefore(spark, dir, "day", "2024-01-03").isEmpty)
-  }
-
   test("corpusManifest: order-independent, content-sensitive, counts exact") {
     import spark.implicits._
     val docs = (1L to 50L).map(i => (i, s"document body $i")).toDF("doc_id", "text")

@@ -90,15 +90,4 @@ class MultimodalSpec extends AnyFunSuite {
     val f = Multimodal.featureExtract(df, "doc_id", "bin").collect().head
     assert(f == Multimodal.MediaFeatures(7L, 6, 2, 1, 1, 2))
   }
-
-  test("resizeStub halves dims, rewrites the header, subsamples the body") {
-    import spark.implicits._
-    val payload = "MMMM" + "0100" + "0200" + "abcdef"
-    val df = Seq((7L, payload)).toDF("doc_id", "s")
-      .select(col("doc_id"), col("s").cast("binary").as("bin"))
-    val r = Multimodal.resizeStub(df, "doc_id", "bin").collect().head
-    assert(r.width == 50 && r.height == 100)
-    val out = new String(r.bin, java.nio.charset.StandardCharsets.US_ASCII)
-    assert(out == "MMMM" + "0050" + "0100" + "ace")
-  }
 }

@@ -5,40 +5,12 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.Relational
 
-/** Scale-utility semantics: salted joins match plain joins; bucketed
-  * pairs join without an exchange. */
+/** Relational operator semantics: as-of and interval joins match their
+  * naive forms; grouped row numbers, weighted samples and the skew and
+  * shard audits are exact. */
 class RelationalSpec extends AnyFunSuite {
   import TestSpark._
   import spark.implicits._
-
-  test("saltedJoin equals the plain inner join, including skewed keys") {
-    // 1000 rows of one hot key + a tail — the salted shuffle must not
-    // change the result set.
-    val left = (Seq.fill(1000)((1, "hot")) ++ (2 to 50).map(k => (k, s"v$k")))
-      .toDF("k", "lv")
-    val right = (1 to 50).map(k => (k, k * 10)).toDF("k", "rv")
-    val plain = left.join(right, Seq("k")).select("k", "lv", "rv")
-      .collect().toSeq.map(_.toSeq).sortBy(_.toString)
-    val salted = Relational.saltedJoin(left, right, Seq("k"), salt = 8)
-      .select("k", "lv", "rv").collect().toSeq.map(_.toSeq).sortBy(_.toString)
-    assert(salted == plain)
-    assert(salted.count(_.head == 1) == 1000)
-  }
-
-  test("saltedJoin spreads a hot key over multiple salt buckets") {
-    val left = Seq.fill(100)((1, "hot")).toDF("k", "lv")
-    val salts = left.withColumn("__salt", pmod(hash(left.columns.map(col): _*), lit(8)))
-      .select(countDistinct(col("__salt"))).head().getLong(0)
-    // Identical rows hash identically — the salt spreads distinct rows;
-    // with one fully identical row repeated the salt is 1 bucket, which
-    // documents that row-hash salting needs a distinguishing column.
-    assert(salts == 1L)
-    val leftDistinct = (1 to 100).map(i => (1, s"row$i")).toDF("k", "lv")
-    val salts2 = leftDistinct
-      .withColumn("__salt", pmod(hash(leftDistinct.columns.map(col): _*), lit(8)))
-      .select(countDistinct(col("__salt"))).head().getLong(0)
-    assert(salts2 > 4L)
-  }
 
   test("asofJoin: <= semantics, no-match nulls, deterministic tie-break") {
     import java.sql.Timestamp
@@ -59,26 +31,6 @@ class RelationalSpec extends AnyFunSuite {
     // Tie at 09:00 resolved to the LAST by ascending q => "qc"; the
     // same-instant event sees it (<=); key 2 carries null.
     assert(got == Map("e1" -> "qc", "e2" -> "qc", "e3" -> null))
-  }
-
-  test("bucketed pair joins without a shuffle exchange") {
-    val a = (1 to 1000).map(k => (k.toLong, s"a$k")).toDF("k", "av")
-    val b = (1 to 1000).map(k => (k.toLong, s"b$k")).toDF("k", "bv")
-    Relational.writeBucketed(a, "bkt_a", "k", 4)
-    Relational.writeBucketed(b, "bkt_b", "k", 4)
-    // Force the sort-merge path (tiny test tables would broadcast, which
-    // disables bucketing) to show the bucketed layout joins with zero
-    // shuffle exchanges.
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val joined = spark.table("bkt_a").join(spark.table("bkt_b"), Seq("k"))
-      val plan = joined.queryExecution.executedPlan.toString
-      assert(!plan.contains("Exchange hashpartitioning"),
-        s"expected shuffle-free bucketed join:\n$plan")
-      assert(plan.contains("Bucketed: true"), s"bucketing not used:\n$plan")
-      assert(joined.count() == 1000)
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
   }
 
   test("intervalJoin matches the naive BETWEEN theta-join") {

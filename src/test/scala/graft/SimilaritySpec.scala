@@ -224,40 +224,6 @@ class SimilaritySpec extends AnyFunSuite {
       Option(ex.getCause).exists(_.getMessage.contains("maxCell")))
   }
 
-  test("semanticDedupIncremental: batch probes only its cell's index " +
-    "members; empty cells admit; mega-cell guard fires") {
-    import spark.implicits._
-    val seed = Seq(
-      (0L, Seq(1.0f, 0.0f)),
-      (1L, Seq(0.0f, 1.0f))).toDF("vec_id", "embedding")
-    val cents = Similarity.buildIvfIndex(seed, "embedding", "vec_id",
-      nlist = 2).centroids
-    // standing index: two +x vectors, both cell 0; cell 1 is EMPTY
-    val index = Similarity.assignToCells(
-      Seq((0L, Seq(1.0f, 0.0f)), (2L, Seq(3.0f, 0.0f)))
-        .toDF("vec_id", "embedding"),
-      cents, "embedding", "vec_id")
-    val batch = Seq(
-      (10L, Seq(2.0f, 0.0f)), // cell 0, cosine 1.0 with BOTH -> dup of min(0,2)
-      (11L, Seq(0.0f, 1.0f))  // cell 1, no index members -> novel
-    ).toDF("vec_id", "embedding")
-    val got = Similarity.semanticDedupIncremental(batch, index, cents,
-        "embedding", "vec_id", threshold = 0.9)
-      .orderBy("vec_id").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2),
-        if (r.isNullAt(3)) -1L else r.getLong(3))).toSeq
-    assert(got == Seq(
-      (10L, 0L, true, 0L),
-      (11L, 1L, false, -1L)))
-    // the index side trips the same mega-cell guard as semanticDedup
-    val ex = intercept[Exception] {
-      Similarity.semanticDedupIncremental(batch, index, cents,
-        "embedding", "vec_id", threshold = 0.9, maxCell = 1).collect()
-    }
-    assert(ex.getMessage.contains("maxCell") ||
-      Option(ex.getCause).exists(_.getMessage.contains("maxCell")))
-  }
-
   test("multi-probe LSH: recall dominates single-probe, never exceeds exact") {
     import spark.implicits._
     val rnd = new scala.util.Random(7)

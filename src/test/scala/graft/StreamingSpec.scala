@@ -1,23 +1,19 @@
 package graft
 
-import java.sql.Timestamp
-
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.pipeline.TradeInSchema
 import graft.streaming.StreamingEtl
 
 /** Structured-Streaming semantics (SURVEY.md §2.9): AvailableNow ingest
-  * with exactly-once source tracking, watermark dedup, windowed counts,
-  * and mapGroupsWithState running state. */
+  * with exactly-once source tracking and partition-scoped merges, a
+  * stream-static enrichment join, and the two bounded-state sketches
+  * (`runningDistinct`, `runningSample`) against their batch duals. */
 class StreamingSpec extends AnyFunSuite {
   import TestSpark._
   import spark.implicits._
-
-  private def ts(s: String) = Timestamp.valueOf(s)
 
   test("AvailableNow ingest: drains new files per activation, merges into target") {
     val work = java.nio.file.Files.createTempDirectory("se").toString
@@ -87,124 +83,6 @@ class StreamingSpec extends AnyFunSuite {
       .select(col("TradeInAmount").cast("string")).head().getString(0) == "21.00")
   }
 
-  test("watermark dedup: duplicate (key, event-time) rows collapse to one") {
-    implicit val ctx = spark.sqlContext
-    val in = MemoryStream[(Long, Timestamp)]
-    val out = StreamingEtl.dedupStream(
-      in.toDF().toDF("k", "ts"), "ts", "10 minutes", Seq("k"))
-    val q = out.writeStream.format("memory").queryName("dedup_t")
-      .outputMode(OutputMode.Append()).start()
-    in.addData((1L, ts("2024-01-01 00:00:00")), (1L, ts("2024-01-01 00:00:00")),
-      (2L, ts("2024-01-01 00:01:00")), (1L, ts("2024-01-01 00:00:00")))
-    q.processAllAvailable()
-    val rows = spark.table("dedup_t").as[(Long, Timestamp)].collect().toSet
-    q.stop()
-    assert(rows == Set((1L, ts("2024-01-01 00:00:00")), (2L, ts("2024-01-01 00:01:00"))))
-  }
-
-  test("windowed counts with watermark finalize after the watermark passes") {
-    implicit val ctx = spark.sqlContext
-    val in = MemoryStream[(Timestamp, String)]
-    val out = StreamingEtl.windowedCounts(
-      in.toDF().toDF("ts", "typ"), "ts", "5 minutes", "10 minutes", "typ")
-    val q = out.writeStream.format("memory").queryName("win_t")
-      .outputMode(OutputMode.Append()).start()
-    in.addData((ts("2024-01-01 00:01:00"), "a"), (ts("2024-01-01 00:02:00"), "a"),
-      (ts("2024-01-01 00:03:00"), "b"))
-    q.processAllAvailable()
-    // Advance the watermark past the first window (00:00-00:10).
-    in.addData((ts("2024-01-01 00:30:00"), "a"))
-    q.processAllAvailable()
-    val rows = spark.table("win_t")
-      .select(col("w_start").cast("string"), col("typ"), col("n"))
-      .as[(String, String, Long)].collect().toSet
-    q.stop()
-    assert(rows == Set(
-      ("2024-01-01 00:00:00", "a", 2L), ("2024-01-01 00:00:00", "b", 1L)))
-  }
-
-  test("dedupStreamWithinWatermark: retried keys with fresh timestamps " +
-    "drop inside the horizon; state evicts past it") {
-    implicit val ctx = spark.sqlContext
-    val in = MemoryStream[(Long, Timestamp)]
-    val out = StreamingEtl.dedupStreamWithinWatermark(
-      in.toDF().toDF("k", "ts"), "ts", "5 minutes", Seq("k"))
-    val q = out.writeStream.format("memory").queryName("wwd_t")
-      .outputMode(OutputMode.Append()).start()
-    // key 1 delivered, then RETRIED 2 min later with a fresh timestamp:
-    // plain dropDuplicates(k, ts) would keep both; within-watermark
-    // dedup must keep only the first arrival
-    in.addData((1L, ts("2024-01-01 00:00:00")),
-      (1L, ts("2024-01-01 00:02:00")),
-      (2L, ts("2024-01-01 00:01:00")))
-    q.processAllAvailable()
-    assert(spark.table("wwd_t").count() == 2)
-    // advance the watermark far past key 1's horizon, then redeliver:
-    // its state is evicted, so the late same-key record is NEW
-    in.addData((9L, ts("2024-01-01 01:00:00")))
-    q.processAllAvailable()
-    in.addData((1L, ts("2024-01-01 00:58:00")))
-    q.processAllAvailable()
-    val k1 = spark.table("wwd_t").filter(col("k") === 1L).count()
-    q.stop()
-    assert(k1 == 2, "evicted key must be re-emittable past the horizon")
-  }
-
-  test("stream-stream interval join: in-window matches, out-of-window " +
-    "misses, left_outer NULL-pads after the watermark") {
-    implicit val ctx = spark.sqlContext
-    val clicks = MemoryStream[(Long, Timestamp, String)]
-    val buys = MemoryStream[(Long, Timestamp, Double)]
-    val joined = StreamingEtl.intervalJoinStream(
-      clicks.toDF().toDF("user_id", "cts", "page"),
-      buys.toDF().toDF("user_id", "bts", "amount"),
-      "user_id", "cts", "bts", delay = "1 minute",
-      lookbackSeconds = 600L, joinType = "left_outer")
-    val q = joined.writeStream.format("memory").queryName("ssj_t")
-      .outputMode(OutputMode.Append()).start()
-    // user 1: buy 5 min before the click (in window); user 2: buy 20 min
-    // before (outside); user 3: no buy at all.
-    clicks.addData((1L, ts("2024-01-01 00:10:00"), "p1"),
-      (2L, ts("2024-01-01 00:10:00"), "p2"),
-      (3L, ts("2024-01-01 00:10:00"), "p3"))
-    buys.addData((1L, ts("2024-01-01 00:05:00"), 9.0),
-      (2L, ts("2023-12-31 23:50:00"), 7.0))
-    q.processAllAvailable()
-    // advance BOTH watermarks far past every click's match horizon so
-    // the unmatched left rows are provably final and emit NULL-padded
-    clicks.addData((9L, ts("2024-01-01 02:00:00"), "px"))
-    buys.addData((9L, ts("2024-01-01 02:00:00"), 1.0))
-    q.processAllAvailable()
-    val rows = spark.table("ssj_t")
-      .filter(col("user_id") < 9)
-      .select(col("user_id"), col("page"),
-        coalesce(col("amount"), lit(-1.0)))
-      .as[(Long, String, Double)].collect().toSet
-    q.stop()
-    assert(rows == Set((1L, "p1", 9.0), (2L, "p2", -1.0), (3L, "p3", -1.0)))
-  }
-
-  test("stream-stream interval join rejects right columns that collide " +
-    "with left (the silent-duplicate trap) and dotted names") {
-    implicit val ctx = spark.sqlContext
-    val l = MemoryStream[(Long, Timestamp, String)].toDF()
-      .toDF("user_id", "ts", "page")
-    val rCollide = MemoryStream[(Long, Timestamp, Double)].toDF()
-      .toDF("user_id", "ts", "amount") // "ts" collides with left
-    val ex = intercept[IllegalArgumentException] {
-      StreamingEtl.intervalJoinStream(l, rCollide, "user_id", "ts", "ts",
-        delay = "1 minute", lookbackSeconds = 60L)
-    }
-    assert(ex.getMessage.contains("collide"))
-    val rDotted = MemoryStream[(Long, Timestamp, Double)].toDF()
-      .toDF("user_id", "bts", "amount.usd")
-    val ex2 = intercept[IllegalArgumentException] {
-      StreamingEtl.intervalJoinStream(l, rDotted, "user_id", "ts", "bts",
-        delay = "1 minute", lookbackSeconds = 60L)
-    }
-    assert(ex2.getMessage.contains("dotted"))
-  }
-
   test("stream-static enrichment join broadcasts the dimension per micro-batch") {
     implicit val ctx = spark.sqlContext
     val dim = Seq((1L, "gold"), (2L, "silver")).toDF("user_id", "tier")
@@ -219,48 +97,6 @@ class StreamingSpec extends AnyFunSuite {
       .select("user_id", "tier").as[(Long, Option[String])].collect().toSet
     q.stop()
     assert(rows == Set((1L, Some("gold")), (2L, Some("silver")), (9L, None)))
-  }
-
-  test("flatMapGroupsWithState sessions close via event-time timeout, emitted once") {
-    implicit val ctx = spark.sqlContext
-    val in = MemoryStream[StreamingEtl.SessionIn]
-    val out = StreamingEtl.sessionizeStream(in.toDS(), gapMs = 600000L) // 10 min
-    val q = out.writeStream.format("memory").queryName("sess_t")
-      .outputMode(OutputMode.Append()).start()
-    // Two close events for key 1 (one session), then a far-future event
-    // for key 2 that advances the watermark past session 1's gap.
-    in.addData(
-      StreamingEtl.SessionIn(1L, ts("2024-01-01 10:00:00")),
-      StreamingEtl.SessionIn(1L, ts("2024-01-01 10:05:00")))
-    q.processAllAvailable()
-    assert(spark.table("sess_t").count() == 0) // still open, nothing emitted
-    in.addData(StreamingEtl.SessionIn(2L, ts("2024-01-01 12:00:00")))
-    q.processAllAvailable()
-    in.addData(StreamingEtl.SessionIn(2L, ts("2024-01-01 12:00:01")))
-    q.processAllAvailable()
-    val sessions = spark.table("sess_t").as[StreamingEtl.ClosedSession].collect()
-    q.stop()
-    assert(sessions.length == 1)
-    assert(sessions.head.key == 1L && sessions.head.nEvents == 2L)
-    assert(sessions.head.startMs == ts("2024-01-01 10:00:00").getTime)
-    assert(sessions.head.endMs == ts("2024-01-01 10:05:00").getTime)
-  }
-
-  test("mapGroupsWithState keeps running totals across micro-batches") {
-    implicit val ctx = spark.sqlContext
-    val in = MemoryStream[(Long, Double)]
-    val out = StreamingEtl.runningTotals(in.toDS())
-    val q = out.writeStream.format("memory").queryName("state_t")
-      .outputMode(OutputMode.Update()).start()
-    in.addData((1L, 5.0), (1L, 7.0), (2L, 1.0))
-    q.processAllAvailable()
-    in.addData((1L, 3.0))
-    q.processAllAvailable()
-    val byKey = spark.table("state_t").as[StreamingEtl.KeyedTotals].collect()
-      .groupBy(_.key).map { case (k, vs) => k -> vs.maxBy(_.n) }
-    q.stop()
-    assert(byKey(1L) == StreamingEtl.KeyedTotals(1L, 3L, 15.0))
-    assert(byKey(2L) == StreamingEtl.KeyedTotals(2L, 1L, 1.0))
   }
 
   test("runningDistinct: bounded sketch state across batches matches the batch sketch") {
@@ -318,279 +154,5 @@ class StreamingSpec extends AnyFunSuite {
       .sortBy(_._1).take(8).map(_._2)
     assert(last.sample.toList == expected.toList)
     assert(at60.sample.toList == expected.toList)
-  }
-
-  test("dedupIngest drops near-dups of earlier micro-batches via the durable band index") {
-    implicit val ctx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("dedup_ingest").toString
-    val in = MemoryStream[(Long, String)]
-    val novel = scala.collection.mutable.ListBuffer[Long]()
-    val q = StreamingEtl.dedupIngest(
-        in.toDF().toDF("doc_id", "text"), s"$dir/index", "text", "doc_id",
-        numHashes = 4, shingleSize = 3, rowsPerBand = 2,
-        checkpointDir = s"$dir/ckpt") { batch =>
-      novel ++= batch.select("doc_id").collect().map(_.getLong(0))
-    }
-    val proseA = (1 to 30).map(i => s"alpha$i").mkString(" ")
-    val proseB = (1 to 30).map(i => s"beta$i").mkString(" ")
-    in.addData((1L, proseA), (2L, proseB))
-    q.processAllAvailable()
-    assert(novel.toSet == Set(1L, 2L)) // empty index: everything is novel
-    // batch 2: a near-dup of doc 1 (same shingles, one token appended —
-    // every LSH band still collides) and one genuinely new document
-    in.addData((3L, proseA + " tail"), (4L, (1 to 30).map(i => s"gamma$i").mkString(" ")))
-    q.processAllAvailable()
-    q.stop()
-    assert(novel.toSet == Set(1L, 2L, 4L)) // 3 was dropped by the index probe
-    // the index carries state for the NEXT run: bands exist for 1, 2, 4 only
-    val idx = spark.read.parquet(s"$dir/index")
-    assert(idx.select("doc_id").distinct().collect().map(_.getLong(0)).toSet ==
-      Set(1L, 2L, 4L))
-    // REPLAY of a failed attempt (simulated with a fresh checkpoint, so
-    // batchId restarts at 0): near-dup SIBLINGS 10 and 11 were appended
-    // at epoch 0 by the "failed" attempt; on the retry the epoch-0 rows
-    // are excluded, so the siblings must NOT collide with their own
-    // leftovers — both are re-emitted and re-indexed
-    val proseC = (1 to 30).map(i => s"delta$i").mkString(" ")
-    val failedAttempt = Seq((10L, proseC), (11L, proseC + " tail"))
-      .toDF("doc_id", "text")
-    graft.operators.TextDedup.buildBandIndex(
-        failedAttempt, "text", "doc_id", 4, 3, 2)
-      .withColumn("epoch", org.apache.spark.sql.functions.lit(0L))
-      .write.mode("append").parquet(s"$dir/index")
-    val in2 = MemoryStream[(Long, String)]
-    val novel2 = scala.collection.mutable.ListBuffer[Long]()
-    val q2 = StreamingEtl.dedupIngest(
-        in2.toDF().toDF("doc_id", "text"), s"$dir/index", "text", "doc_id",
-        numHashes = 4, shingleSize = 3, rowsPerBand = 2,
-        checkpointDir = s"$dir/ckpt2") { batch =>
-      novel2 ++= batch.select("doc_id").collect().map(_.getLong(0))
-    }
-    in2.addData((10L, proseC), (11L, proseC + " tail"))
-    q2.processAllAvailable()
-    assert(novel2.toSet == Set(10L, 11L))
-    // REDELIVERY in a later epoch: old id 1 (indexed at epoch 0) arrives
-    // again WITH a new near-dup 12 in the same batch — 12 must still be
-    // dropped (doc 1's OLDER-epoch rows are not excluded), while the
-    // redelivered id itself is re-emitted (same-id pairs are filtered)
-    in2.addData((1L, proseA), (12L, proseA + " tail"))
-    q2.processAllAvailable()
-    q2.stop()
-    assert(novel2.toSet == Set(10L, 11L, 1L))
-  }
-
-  test("dedupIngest crash AFTER index append, BEFORE downstream emit: same-checkpoint replay loses no id, admits no dup") {
-    // The foreachBatch body appends novel bands to the index and THEN
-    // hands the batch downstream; a crash between the two is the worst
-    // window — the index already contains this epoch's rows but the
-    // consumer never saw the batch. On restart from the SAME checkpoint
-    // Spark replays the batch under the SAME batchId, and the epoch
-    // exclusion must make the leftover rows invisible to the probe:
-    // the batch's novel ids re-emit (nothing lost), while near-dups of
-    // OLDER epochs are still dropped (nothing dup-admitted).
-    implicit val ctx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("dedup_crash").toString
-    val proseX = (1 to 30).map(i => s"omega$i").mkString(" ")
-    val proseY = (1 to 30).map(i => s"sigma$i").mkString(" ")
-    val in = MemoryStream[(Long, String)]
-    val novel = scala.collection.mutable.ListBuffer[Long]()
-    @volatile var injectCrash = false
-    def start() = StreamingEtl.dedupIngest(
-        in.toDF().toDF("doc_id", "text"), s"$dir/index", "text", "doc_id",
-        numHashes = 4, shingleSize = 3, rowsPerBand = 2,
-        checkpointDir = s"$dir/ckpt") { batch =>
-      val ids = batch.select("doc_id").collect().map(_.getLong(0))
-      if (injectCrash) {
-        injectCrash = false
-        throw new RuntimeException("injected post-append crash")
-      }
-      novel ++= ids
-    }
-    val q1 = start()
-    in.addData((20L, proseX))
-    q1.processAllAvailable()
-    assert(novel.toSet == Set(20L))
-    // batch 1: a near-dup of 20 (must drop) + novel SIBLINGS 22/23
-    // (near-dups of each other but not of the corpus — the pair a naive
-    // replay would self-collide on)
-    injectCrash = true
-    in.addData((21L, proseX + " tail"), (22L, proseY), (23L, proseY + " tail"))
-    intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
-      q1.processAllAvailable()
-    }
-    q1.stop()
-    // the crash landed after the append: epoch-1 leftovers are on disk
-    val leftover = spark.read.parquet(s"$dir/index")
-      .filter(org.apache.spark.sql.functions.col("epoch") === 1L)
-      .select("doc_id").distinct().collect().map(_.getLong(0)).toSet
-    assert(leftover == Set(22L, 23L), s"expected epoch-1 leftovers, got $leftover")
-
-    // restart against the SAME checkpoint: Spark replays batchId 1
-    val q2 = start()
-    q2.processAllAvailable()
-    q2.stop()
-    assert(novel.toSet == Set(20L, 22L, 23L),
-      "replay must re-emit the batch's novel ids and still drop the near-dup of 20")
-    val idx = spark.read.parquet(s"$dir/index")
-    assert(idx.select("doc_id").distinct().collect().map(_.getLong(0)).toSet ==
-      Set(20L, 22L, 23L), "index must hold exactly the admitted ids")
-  }
-
-  test("annIngest: streamed postings equal the batch IVF build; epoch replay is idempotent") {
-    import graft.operators.Similarity
-    implicit val ctx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("ann_ingest").toString
-    def vec(seed: Int): Seq[Double] =
-      (0 until 6).map(j => math.sin(seed * 7 + j * 3 + 1) * (1 + j % 2))
-    val all = (0 until 30).map(i => (i.toLong, vec(i)))
-    val corpus = all.toDF("id", "emb")
-    val cents = Similarity.buildIvfIndex(corpus, "emb", "id", nlist = 4).centroids
-    val in = MemoryStream[(Long, Seq[Double])]
-    val q = StreamingEtl.annIngest(in.toDF().toDF("id", "emb"),
-      s"$dir/index", cents, "emb", "id", s"$dir/ckpt")
-    in.addData(all.take(10): _*)
-    q.processAllAvailable()
-    in.addData(all.drop(10): _*)
-    q.processAllAvailable()
-    q.stop()
-    def postings(df: org.apache.spark.sql.DataFrame) =
-      df.select("id", "cell").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val streamed = postings(spark.read.parquet(s"$dir/index"))
-    val batch = postings(
-      Similarity.buildIvfIndex(corpus, "emb", "id", nlist = 4,
-        centroids = Some(cents)).entries)
-    assert(streamed == batch)
-    assert(streamed.size == 30)
-    // Replay of a reused batchId: the epoch directory is overwritten, so
-    // a redelivered first batch leaves the index unchanged.
-    Similarity.assignToCells(all.take(10).toDF("id", "emb"), cents, "emb", "id")
-      .write.mode("overwrite").parquet(s"$dir/index/epoch=0")
-    assert(spark.read.parquet(s"$dir/index").count() == 30)
-    assert(postings(spark.read.parquet(s"$dir/index")) == batch)
-  }
-
-  test("semanticDedupIngest: later-batch semantic near-dups drop via the " +
-    "durable cell index; replay leftovers are epoch-excluded") {
-    import graft.operators.Similarity
-    implicit val ctx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("semdedup_ingest").toString
-    def vec(seed: Int): Seq[Double] =
-      (0 until 6).map(j => math.sin(seed * 7 + j * 3 + 1) * (1 + j % 2))
-    // seeds 41/43/44 are mutually low-cosine (−0.01/−0.96/0.30); a
-    // 1.5x-scaled copy has cosine exactly 1.0 (same direction)
-    val cents = Similarity.buildIvfIndex(
-      (0 until 30).map(i => (i.toLong, vec(i))).toDF("id", "emb"),
-      "emb", "id", nlist = 4).centroids
-    val in = MemoryStream[(Long, Seq[Double])]
-    val novel = scala.collection.mutable.ListBuffer[Long]()
-    val q = StreamingEtl.semanticDedupIngest(
-        in.toDF().toDF("id", "emb"), s"$dir/index", cents, "emb", "id",
-        threshold = 0.9, checkpointDir = s"$dir/ckpt") { batch =>
-      novel ++= batch.select("id").collect().map(_.getLong(0))
-    }
-    in.addData((1L, vec(41)), (2L, vec(43)))
-    q.processAllAvailable()
-    assert(novel.toSet == Set(1L, 2L)) // empty index: everything admits
-    // batch 2: a scaled copy of 1 (same direction, cosine 1.0 — must
-    // drop against the standing index) and a genuinely new direction
-    in.addData((3L, vec(41).map(_ * 1.5)), (4L, vec(44)))
-    q.processAllAvailable()
-    q.stop()
-    assert(novel.toSet == Set(1L, 2L, 4L))
-    val idx = spark.read.parquet(s"$dir/index")
-    assert(idx.select("id").distinct().collect().map(_.getLong(0)).toSet ==
-      Set(1L, 2L, 4L), "index holds exactly the admitted ids")
-    // replay safety, dedupIngest's contract: sibling near-dups appended
-    // by a failed attempt at epoch 0 must not collide with their own
-    // leftovers when the batch replays under a fresh checkpoint
-    Similarity.assignToCells(
-        Seq((20L, vec(45)), (21L, vec(45).map(_ * 1.5))).toDF("id", "emb"),
-        cents, "emb", "id")
-      .withColumn("epoch", org.apache.spark.sql.functions.lit(0L))
-      .write.mode("append").parquet(s"$dir/index")
-    val in2 = MemoryStream[(Long, Seq[Double])]
-    val novel2 = scala.collection.mutable.ListBuffer[Long]()
-    val q2 = StreamingEtl.semanticDedupIngest(
-        in2.toDF().toDF("id", "emb"), s"$dir/index", cents, "emb", "id",
-        threshold = 0.9, checkpointDir = s"$dir/ckpt2") { batch =>
-      novel2 ++= batch.select("id").collect().map(_.getLong(0))
-    }
-    in2.addData((20L, vec(45)), (21L, vec(45).map(_ * 1.5)))
-    q2.processAllAvailable()
-    q2.stop()
-    // batch-internal near-dups are out of scope: both siblings admit
-    assert(novel2.toSet == Set(20L, 21L))
-  }
-
-  test("ewmaAnomalies: spike flagged against pre-spike envelope, then absorbed") {
-    implicit val ctx = spark.sqlContext
-    val in = MemoryStream[(Long, Double)]
-    val out = StreamingEtl.ewmaAnomalies(in.toDS(), alpha = 0.3,
-      threshold = 3.0, warmup = 5)
-    val q = out.writeStream.format("memory").queryName("ewma_a")
-      .outputMode(OutputMode.Append()).start()
-    // steady 10 +/- 1 for 8 values, then a 100 spike, then steady again
-    in.addData((1 to 8).map(i => (1L, 10.0 + (i % 2))): _*)
-    q.processAllAvailable()
-    in.addData((1L, 100.0))
-    q.processAllAvailable()
-    in.addData((1L, 10.0), (1L, 11.0))
-    q.processAllAvailable()
-    val rows = spark.table("ewma_a").as[StreamingEtl.EwmaAlert].collect()
-      .sortBy(_.n)
-    q.stop()
-    assert(rows.length == 11)
-    // warmup rows never flag, even the early mean shifts
-    assert(rows.take(8).forall(!_.anomaly))
-    // the spike is judged by the envelope BUILT BEFORE it arrived
-    assert(rows(8).value == 100.0 && rows(8).anomaly)
-    // replicate the fold to confirm the state math (West update)
-    var (n, m, v) = (0L, 0.0, 0.0)
-    val vals = (1 to 8).map(i => 10.0 + (i % 2)).map(_.toDouble) ++
-      Seq(100.0, 10.0, 11.0)
-    vals.foreach { x =>
-      val d = x - m
-      m = if (n == 0) x else 0.7 * m + 0.3 * x
-      v = if (n == 0) 0.0 else 0.7 * (v + 0.3 * d * d)
-      n += 1
-    }
-    assert(math.abs(rows.last.mean - m) < 1e-12 &&
-      math.abs(rows.last.variance - v) < 1e-12)
-    // post-spike values: the spike inflated the envelope, so they pass
-    assert(!rows(9).anomaly && !rows(10).anomaly)
-  }
-
-  test("runningHeavyHitters: bounded state, exact under k, survivor guarantee") {
-    implicit val ctx = spark.sqlContext
-    val in = MemoryStream[(Long, String)]
-    val out = StreamingEtl.runningHeavyHitters(in.toDS(), k = 3)
-    val q = out.writeStream.format("memory").queryName("hh_s")
-      .outputMode(OutputMode.Update()).start()
-    // batch 1: 3 distinct values -> exact (all retained)
-    in.addData((1L, "a"), (1L, "a"), (1L, "b"), (1L, "c"))
-    q.processAllAvailable()
-    // batch 2: flood with a majority value + noise across many distinct
-    val noise = (0 until 30).map(i => (1L, s"z$i"))
-    in.addData((0 until 40).map(_ => (1L, "a")) ++ noise: _*)
-    q.processAllAvailable()
-    val rows = spark.table("hh_s").as[StreamingEtl.HhCandidates]
-      .collect().sortBy(_.n)
-    q.stop()
-    assert(rows.head.candidates.toSet == Set("a", "b", "c")) // exact at n=4
-    val last = rows.last
-    assert(last.n == 74)
-    // state stayed bounded and the >n/(k+1) majority value survived
-    assert(last.candidates.size <= 3 && last.candidates.contains("a"))
-    // replicate the MG fold over the concatenated history in order
-    val history = Seq("a", "a", "b", "c") ++
-      Seq.fill(40)("a") ++ (0 until 30).map(i => s"z$i")
-    val m = scala.collection.mutable.Map.empty[String, Long]
-    history.foreach { v =>
-      if (m.contains(v)) m(v) += 1
-      else if (m.size < 3) m(v) = 1
-      else m.keys.toList.foreach { w =>
-        if (m(w) == 1) m.remove(w) else m(w) -= 1 }
-    }
-    assert(last.candidates == m.keys.toSeq.sorted)
   }
 }

@@ -89,6 +89,32 @@ if [[ -s /tmp/stacked_doc_hits.txt ]]; then
   exit 1
 fi
 
+# No new library def without a library caller: eleven streaming operators
+# and six other defs had piled up whose only callers were their own specs.
+# A public def added under operators/, functions/ or streaming/ must be
+# named on a code line (not a comment, a string or its own def line)
+# somewhere in src/main/scala or perfbench/src. Only added lines are
+# checked, so existing defs need no allowlist.
+git diff --cached -U0 -- src/main/scala/graft/operators \
+    src/main/scala/graft/functions src/main/scala/graft/streaming \
+  | sed -nE 's/^\+[[:space:]]*(final[[:space:]]+)?def[[:space:]]+([A-Za-z_][A-Za-z0-9_]*).*/\2/p' \
+  | sort -u >/tmp/new_defs.txt
+: >/tmp/uncalled_def_hits.txt
+while read -r name; do
+  refs=$(git grep --cached -h -w -F -e "$name" -- src/main/scala perfbench/src \
+      | grep -vE '^[[:space:]]*(\*|//|/\*)' \
+      | grep -vE "(^|[^A-Za-z0-9_])def[[:space:]]+$name([^A-Za-z0-9_]|\$)" \
+      | sed -E 's/"[^"]*"//g' | grep -c -w -F -e "$name" || true)
+  [[ "$refs" -gt 0 ]] || echo "$name" >>/tmp/uncalled_def_hits.txt
+done </tmp/new_defs.txt
+if [[ -s /tmp/uncalled_def_hits.txt ]]; then
+  echo "[precommit] FAIL: new public def with no caller in src/main/scala or perfbench/src —"
+  echo "[precommit] call it from a product path or a registry query; a test-only"
+  echo "[precommit] reference implementation belongs under src/test:"
+  cat /tmp/uncalled_def_hits.txt
+  exit 1
+fi
+
 if git diff --cached --name-only | grep -q '^src/.*\.scala$'; then
   echo "[precommit] staged Scala sources detected - running sbt compile + test"
   sbt -batch 'set Test / testOptions += Tests.Argument("-oI")' compile test
