@@ -19,7 +19,6 @@ import graft.operators.Multimodal
 object MediaQueries {
 
   private val magics = Seq("FFD8FF00", "89504E47", "47494638", "25504446")
-  private val fmtNames = Seq("jpeg", "png", "gif", "pdf")
 
   private def widthSql  = "100 + doc_id % 1820"
   private def heightSql = "100 + (doc_id * 7) % 980"

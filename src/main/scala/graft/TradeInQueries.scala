@@ -14,9 +14,9 @@ import graft.pipeline.{TradeInPipeline, TradeInSchema}
   *
   * The fixture's raw column expressions are written once as SQL text in
   * the dialect intersection of Spark SQL and DuckDB (`rawSpec`), so the
-  * Spark query and the oracle construct bit-identical inputs; only the
-  * timestamp-string rendering differs per engine (`date_format` vs
-  * `strftime`) and is defined twice, side by side.
+  * Spark query and the oracle construct bit-identical inputs. Only the
+  * Spark side renders the timestamp strings (`fmtSpark`); the oracles
+  * compute what the parser recovers from each shape (`parsedDuck`).
   *
   * Timestamp strings are emitted in 5 rotating shapes keyed on
   * `o_orderkey % 5` — ISO-T with 6-digit fraction + Z, ISO-T no fraction
@@ -115,7 +115,7 @@ object TradeInQueries {
     "MobileNumber"           -> "'555' || lpad(CAST((k * 3) % 10000000 AS STRING), 7, '0')")
 
   /** Spark rendering of one raw timestamp string, shape keyed by `m`
-    * (0..4). KEEP IN SYNC with [[fmtDuck]]. */
+    * (0..4). KEEP IN SYNC with [[parsedDuck]]. */
   private def fmtSpark(ts: Column, m: Column, k: Column): Column =
     when(m === 0, concat(date_format(ts, "yyyy-MM-dd'T'HH:mm:ss.SSSSSS"), lit("Z")))
       .when(m === 1, concat(date_format(ts, "yyyy-MM-dd'T'HH:mm:ss"), lit("Z")))
@@ -139,28 +139,9 @@ object TradeInQueries {
   private def estTsDuck(x: String): String =
     s"date_trunc('second', ($x AT TIME ZONE 'UTC') AT TIME ZONE 'America/New_York')"
 
-  /** DuckDB CTE producing the raw fixture (shared-dialect columns plus
-    * the three per-shape timestamp strings). */
-  private def fmtDuck(ts: String, m: String): String =
-    s"""CASE $m
-       | WHEN 0 THEN strftime($ts, '%Y-%m-%dT%H:%M:%S.%f') || 'Z'
-       | WHEN 1 THEN strftime($ts, '%Y-%m-%dT%H:%M:%S') || 'Z'
-       | WHEN 2 THEN strftime($ts, '%Y-%m-%d %H:%M:%S.') || substring(strftime($ts, '%f'), 1, 3)
-       | WHEN 3 THEN strftime($ts, '%Y-%m-%d %H:%M:%S')
-       | ELSE 'garbage-' || k END""".stripMargin
-
   private val baseCteDuck =
     s"""base AS (SELECT o_orderkey AS k, o_custkey AS c, o_totalprice AS p,
        |  o_orderstatus AS st, o_orderpriority AS pri, $tsDuck AS ts FROM orders)""".stripMargin
-
-  private val rawCteDuck =
-    s"""$baseCteDuck,
-       |raw AS (SELECT k, ts,
-       |  ${rawSpec.map { case (n, e) => s"$e AS $n" }.mkString(",\n  ")},
-       |  ${fmtDuck("ts", "k % 5")} AS TradeInDate,
-       |  ${fmtDuck("ts", "(k + 1) % 5")} AS PostTime,
-       |  ${fmtDuck("ts", "(k + 2) % 5")} AS ResponseTime
-       |  FROM base)""".stripMargin
 
   /** The narrow 6-col base (k, c, p, st, pri, ts) — everything the wide
     * fixture is a pure function of. */

@@ -11,27 +11,14 @@ import org.apache.spark.sql.types.TimestampType
   * UDFs, so every one of these stays inside whole-stage codegen.
   *
   * Reference semantics (cited by file:line in /root/reference):
-  *  - F1 `truncate_microseconds` — rqtradein_etl.py:249-258
+  *  - F1 `truncate_microseconds` — rqtradein_etl.py:249-258, folded
+  *    into the F2 cast (see [[parseTimestamp]])
   *  - F2 `to_datetime` multi-format parse — rqtradein_etl.py:260-284
   *  - F3 `to_est` — rqtradein_etl.py:286-311
   *  - F4 parse-failure → now() fallback — rqtradein_etl.py:319-322
   *  - F5 EST seconds-precision round-trip — rqtradein_etl.py:325-337
   */
 object Timestamps {
-
-  /** F1: normalize a fractional-seconds suffix to exactly 6 digits,
-    * preserving an optional trailing 'Z'. Strings without a fraction pass
-    * through unchanged (the reference regex `(.*?\.)(\d+)(Z?)$` only
-    * rewrites on match). */
-  def truncateMicroseconds(c: Column): Column = {
-    val pat = "^(.*?\\.)(\\d+)(Z?)$"
-    val head = regexp_extract(c, pat, 1)
-    val frac = regexp_extract(c, pat, 2)
-    val z    = regexp_extract(c, pat, 3)
-    when(c.rlike(pat),
-      concat(head, rpad(substring(frac, 1, 6), 6, "0"), z)
-    ).otherwise(c)
-  }
 
   /** F10 + F2: multi-format parse, null when nothing matches (the
     * reference logs and returns None — rqtradein_etl.py:282-284).
@@ -49,9 +36,8 @@ object Timestamps {
     *
     * The cast truncates over-long fractions (7+, even past 9 digits) to
     * microseconds — verified empirically — which is precisely the
-    * reference's `truncate_microseconds` behavior, so no regex
-    * normalization is needed on this path at all ([[truncateMicroseconds]]
-    * remains the standalone F1 string transform). */
+    * reference's `truncate_microseconds` behavior (F1), so no regex
+    * normalization is needed on this path at all. */
   def parseTimestamp(c: Column): Column =
     ColumnBridge.column(
       Cast(ColumnBridge.expression(c), TimestampType, None, EvalMode.TRY))

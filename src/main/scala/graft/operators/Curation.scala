@@ -42,56 +42,16 @@ object Curation {
     *   unpersisted, each consumer would re-execute the whole upstream
     *   dedup — the same re-execution trap q33 measured. The cached blocks
     *   stay live after curate returns (the result is lazy, so they cannot
-    *   be unpersisted here); callers running many curations should use
-    *   the materializing [[curateTo]] (which unpersists its own stages),
-    *   `spark.catalog.clearCache()` between calls, or
+    *   be unpersisted here); callers running many curations should call
+    *   `spark.catalog.clearCache()` between calls, or pass
     *   `StorageLevel.NONE` to opt out. */
   def curate(docs: DataFrame, textCol: String, idCol: String,
       numHashes: Int = 4, shingleSize: Int = 3, rowsPerBand: Int = 2,
       maxBucket: Int = 0,
       thresholds: QualityThresholds = QualityThresholds(),
-      stageStorage: StorageLevel = StorageLevel.MEMORY_AND_DISK): DataFrame =
-    curateStaged(docs, textCol, idCol, numHashes, shingleSize, rowsPerBand,
-      maxBucket, thresholds, stageStorage)._1
-
-  /** [[curate]] materialized to parquet — the cache-hygienic production
-    * form: runs the chain, snapshot-writes the curated corpus to `path`
-    * (the write is the action that makes the persisted stages pay), then
-    * unpersists BOTH intermediate stages before returning, so no cached
-    * blocks outlive the call ([[curate]]'s documented leak-by-design).
-    * Returns the reloaded frame, whose lineage is the parquet scan —
-    * nothing downstream can re-trigger the dedup chain. */
-  def curateTo(docs: DataFrame, textCol: String, idCol: String, path: String,
-      numHashes: Int = 4, shingleSize: Int = 3, rowsPerBand: Int = 2,
-      maxBucket: Int = 0,
-      thresholds: QualityThresholds = QualityThresholds(),
       stageStorage: StorageLevel = StorageLevel.MEMORY_AND_DISK): DataFrame = {
-    val sc = docs.sparkSession.sparkContext
-    val preexisting = sc.getPersistentRDDs.keySet
-    val (result, stages) = curateStaged(docs, textCol, idCol, numHashes,
-      shingleSize, rowsPerBand, maxBucket, thresholds, stageStorage)
-    Merge.writeSnapshot(result, path)
-    stages.foreach(_.unpersist(blocking = true))
-    // dupClusters' final localCheckpoint is invisible to the stage
-    // unpersist above (checkpoint blocks are RDD-level, not CacheManager
-    // entries) and is dead once the snapshot is on disk: sweep every
-    // block this call created. Assumes no CONCURRENT persist activity in
-    // the session during the call — fine for a batch curation job; run
-    // concurrent curations in separate sessions.
-    for ((id, rdd) <- sc.getPersistentRDDs if !preexisting.contains(id))
-      rdd.unpersist(blocking = true)
-    docs.sparkSession.read.parquet(path)
-  }
-
-  private def curateStaged(docs: DataFrame, textCol: String, idCol: String,
-      numHashes: Int, shingleSize: Int, rowsPerBand: Int,
-      maxBucket: Int,
-      thresholds: QualityThresholds,
-      stageStorage: StorageLevel): (DataFrame, Seq[DataFrame]) = {
-    val staged = scala.collection.mutable.ListBuffer.empty[DataFrame]
     def cached(df: DataFrame): DataFrame =
-      if (stageStorage == StorageLevel.NONE) df
-      else { val p = df.persist(stageStorage); staged += p; p }
+      if (stageStorage == StorageLevel.NONE) df else df.persist(stageStorage)
 
     // 1. exact dedup — keep only each distinct text's min-id representative
     val reps = TextDedup.exact(docs, textCol, idCol).select(idCol)
@@ -125,7 +85,7 @@ object Curation {
         col("__sw") >= t.minStopwordRatio && col("__tbf") < t.maxTopBigramFrac &&
         col("__rf") <= t.maxRareFrac)
       .select(idCol)
-    (nearDeduped.join(keepIds, Seq(idCol), "left_semi"), staged.toList)
+    nearDeduped.join(keepIds, Seq(idCol), "left_semi")
   }
 
   /** Deterministic train/val/test assignment by a salt-free multiplicative

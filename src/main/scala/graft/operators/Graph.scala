@@ -10,7 +10,7 @@ import graft.functions.Decimals
   * one join of the (large, static) edge list against it plus one
   * aggregation, and the refreshed frame is `localCheckpoint`ed so the
   * plan stays O(1) deep across iterations (the
-  * [[Similarity.kmeansCentroids]] / [[TextDedup]] pointer-jump
+  * [[TextDedup.dupClusters]] pointer-jump
   * discipline — without it the analyzer cost and recovery lineage grow
   * linearly and every action replays all prior steps).
   *

@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -12,26 +11,6 @@ import org.apache.spark.sql.functions._
   * not the query layer.
   */
 object Maintenance {
-
-  /** Compact a parquet directory to ~`targetBytes` per file: reads the
-    * current snapshot, repartitions to ceil(total/target) partitions, and
-    * promotes the rewrite via the crash-safe snapshot swap
-    * ([[Merge.writeSnapshot]]). Returns the chosen file count.
-    *
-    * Round-robin repartition (not coalesce): coalesce merges existing
-    * partitions without a shuffle but inherits their skew — a compaction
-    * pass exists precisely because the current layout is bad, so pay the
-    * one shuffle and emit uniform files. */
-  def compact(spark: SparkSession, path: String, targetBytes: Long): Int = {
-    require(targetBytes > 0, "targetBytes must be positive")
-    val p = new Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val totalBytes = fs.getContentSummary(p).getLength
-    val nFiles = math.max(1, math.ceil(totalBytes.toDouble / targetBytes).toInt)
-    val df = spark.read.parquet(path)
-    Merge.writeSnapshot(df.repartition(nFiles), path)
-    nFiles
-  }
 
   /** Compact an IVF entries frame (a [[Similarity.buildIvfIndex]] or
     * [[Similarity.ivfAppend]] result) into the CELL-PARTITIONED index
@@ -59,7 +38,7 @@ object Maintenance {
     * small hyper-rectangle, so row-group pruning works for range
     * predicates on ANY clustered dimension. This is the OPTIMIZE
     * ZORDER maintenance pass of a parquet lake, as a snapshot-swap
-    * rewrite ([[Merge.writeSnapshot]], same crash-safety as [[compact]]).
+    * rewrite ([[Merge.writeSnapshot]]).
     *
     * Binning is rank-based (per-dimension quantile boundaries from
     * `approxQuantile`, collected once at bounded driver cost and folded

@@ -9,16 +9,12 @@ import graft.functions.BinaryFunctions
   * over raw bytes — as a typed `mapPartitions` stage (the documented
   * last-resort tier for genuine per-partition imperative logic).
   *
-  * The codec is pluggable, with two shipped implementations:
-  * [[HeaderCodec]] — a deterministic stub that parses the dimensions the
-  * test fixture embeds in the payload header (the oracle-checkable
-  * default, since the synthetic corpus is not real media) — and
-  * [[ImageIoCodec]] — a REAL header-level decoder over the JDK's
-  * `javax.imageio` (PNG/JPEG/GIF/BMP, zero new dependencies). Audio and
-  * video codecs remain out of scope offline; the Spark-side contract —
-  * schema, partition-local batch loop, zero shuffle, typed output — is
-  * identical for any [[MediaCodec]], so a JNI-backed one drops in
-  * without touching the plan.
+  * The codec is [[HeaderCodec]], a deterministic stub that parses the
+  * dimensions the test fixture embeds in the payload header (the
+  * synthetic corpus is not real media, and the oracle needs a kernel
+  * DuckDB can recompute). A real image or video codec would replace its
+  * one `decode` call; the Spark-side contract — schema, partition-local
+  * batch loop, zero shuffle, typed output — does not depend on it.
   */
 object Multimodal {
 
@@ -26,61 +22,16 @@ object Multimodal {
   final case class MediaMeta(doc_id: Long, format: String, byte_size: Int,
       width: Int, height: Int, aspect: Double)
 
-  /** A codec turns raw payload bytes into (width, height). Implementations
-    * must be Serializable (shipped to executors once, reused per
-    * partition). */
-  trait MediaCodec extends Serializable {
-    def decode(bytes: Array[Byte]): (Int, Int)
-  }
-
   /** STUB CODEC — stands in for an image library: reads the 4-ASCII-digit
     * width/height the fixture writes at payload bytes 4–11 (after the
     * 4-byte magic block). Deterministic, so the decode stage is fully
     * oracle-checkable end to end. */
-  object HeaderCodec extends MediaCodec {
+  object HeaderCodec {
     def decode(bytes: Array[Byte]): (Int, Int) = {
       def ascii4(off: Int): Int =
         if (bytes.length < off + 4) 0
         else new String(bytes, off, 4, java.nio.charset.StandardCharsets.US_ASCII).toInt
       (ascii4(4), ascii4(8))
-    }
-  }
-
-  /** REAL codec for the formats the JDK ships decoders for (PNG, JPEG,
-    * GIF, BMP): `javax.imageio`, zero new dependencies. Dimensions come
-    * from the format reader's header parse (`ImageReader.getWidth/
-    * getHeight`), NOT a full pixel decode — the right cost model for a
-    * metadata pass over 100 TB of media. Unrecognized or truncated
-    * payloads yield (0, 0) so the stage stays total (the quarantine
-    * split upstream is where bad media should be routed).
-    *
-    * [[HeaderCodec]] remains the default: the synthetic corpus embeds
-    * dimensions in an ASCII header (not real media), and the oracle gate
-    * needs a kernel DuckDB can recompute. Real deployments pass this
-    * codec (or a JNI one for video) into the same stages. */
-  object ImageIoCodec extends MediaCodec {
-    def decode(bytes: Array[Byte]): (Int, Int) = {
-      var in: javax.imageio.stream.ImageInputStream = null
-      try {
-        in = javax.imageio.ImageIO.createImageInputStream(
-          new java.io.ByteArrayInputStream(bytes))
-        if (in == null) (0, 0) // no registered stream SPI for this input
-        else {
-          val readers = javax.imageio.ImageIO.getImageReaders(in)
-          if (!readers.hasNext) (0, 0)
-          else {
-            val r = readers.next()
-            try { r.setInput(in, true, true); (r.getWidth(0), r.getHeight(0)) }
-            finally r.dispose()
-          }
-        }
-      } catch {
-        // ImageIO format readers throw RuntimeExceptions (IAE, IOOBE,
-        // NegativeArraySize…) on malformed headers, not just IOException;
-        // the decode stage's contract is TOTAL — a corrupt payload yields
-        // (0,0), it must never kill the task.
-        case scala.util.control.NonFatal(_) => (0, 0)
-      } finally if (in != null) in.close()
     }
   }
 
@@ -140,9 +91,8 @@ object Multimodal {
   /** The decode stage: one pass, partition-local, no shuffle. Format is
     * sniffed from magic bytes on the JVM side (same table as
     * [[graft.functions.BinaryFunctions.sniffFormat]]); dimensions come
-    * from the codec. */
-  def decodeMeta(df: DataFrame, idCol: String, binCol: String,
-      codec: MediaCodec = HeaderCodec): Dataset[MediaMeta] = {
+    * from [[HeaderCodec]]. */
+  def decodeMeta(df: DataFrame, idCol: String, binCol: String): Dataset[MediaMeta] = {
     val input = df.select(df(idCol).cast("long"), df(binCol))
       .as[(Long, Array[Byte])](Encoders.tuple(Encoders.scalaLong, Encoders.BINARY))
     input.mapPartitions { rows =>
@@ -151,7 +101,7 @@ object Multimodal {
         val format = BinaryFunctions.magicPrefixes
           .collectFirst { case (f, p) if hexHead.startsWith(p) => f }
           .getOrElse("unknown")
-        val (w, h) = codec.decode(bytes)
+        val (w, h) = HeaderCodec.decode(bytes)
         // floor-at-6-decimals, not round: floor is exact in IEEE double,
         // so any SQL oracle reproduces it bit-for-bit.
         MediaMeta(id, format, bytes.length, w, h,

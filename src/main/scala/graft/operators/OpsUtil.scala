@@ -10,8 +10,8 @@ private[graft] object OpsUtil {
     * localCheckpoint blocks are invisible to `DataFrame.unpersist`; an
     * iterative operator frees each superseded round's blocks through
     * these handles so storage stays O(1) rounds instead of
-    * O(iterations). Shared by [[TextDedup.dupClusters]] and
-    * [[BpeTrainer.train]]. */
+    * O(iterations). Shared by [[TextDedup.dupClusters]],
+    * [[Graph.pageRank]] and [[Merge.upsertPartitioned]]. */
   def ckptRdds(df: DataFrame): Seq[org.apache.spark.rdd.RDD[_]] =
     df.queryExecution.logical.collect {
       case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd

@@ -154,9 +154,8 @@ object Quantization {
     * SAME two jobs per iteration (explode → assign → posexplode → mean),
     * not m sequential trainings — the Spark-first shape for codebook
     * learning, and the difference between 2 and 2m scheduler rounds.
-    * Cells that capture no members keep their previous center (the
-    * [[Similarity.kmeansCentroids]] convention); each iteration's
-    * codebook re-materializes as a bounded LocalRelation
+    * Cells that capture no members keep their previous center; each
+    * iteration's codebook re-materializes as a bounded LocalRelation
     * ([[OpsUtil.localized]], round 15 — previously a localCheckpoint),
     * keeping the per-iteration plan O(1) deep with no checkpoint job.
     *

@@ -197,68 +197,12 @@ object Similarity {
       .select(col(id), col(s"__v_$id"), col(s"__n_$id"), col("__cent"))
   }
 
-  /** Sampled-Lloyd centroids for [[buildIvfIndex]]: seed with the
-    * first-`nlist` vectors, then run `iterations` Lloyd steps over a
-    * DETERMINISTIC hash-sample of the corpus (`crc32(id) % sampleMod ==
-    * 0` — reproducible, no RNG; ~1/sampleMod of the rows). Each step
-    * broadcasts the tiny centroid frame, assigns the sample to nearest
-    * cells, and recomputes per-cell per-dimension means (posexplode →
-    * avg → re-assemble); a cell that captured no sample keeps its
-    * previous centroid. On a skewed corpus — where first-N seeds all
-    * land in one dense region — the moved centroids spread over the
-    * real clusters and `nProbe`-bounded recall improves; plan shape is
-    * unchanged (this is purely a better `centroids` input).
-    *
-    * Not the default: the q41/q100 oracles pin the deterministic
-    * first-N construction, and a DuckDB oracle cannot reasonably
-    * replay Lloyd means. Flag it in via `buildIvfIndex(...,
-    * centroids = Some(kmeansCentroids(...)))`. */
-  def kmeansCentroids(corpus: DataFrame, vecCol: String, idCol: String,
-      nlist: Int, iterations: Int = 1, sampleMod: Int = 4,
-      roundTo: Int = 6): DataFrame = {
-    require(iterations >= 1 && sampleMod >= 1, "iterations and sampleMod must be >= 1")
-    val sample = corpus
-      .filter(pmod(crc32(col(idCol).cast("string")), lit(sampleMod)) === 0)
-      .select(col(idCol), col(vecCol))
-      .persist()
-    var cents = corpus.filter(col(idCol) < nlist)
-      .select(col(idCol).as("cell"), asDouble(col(vecCol)).as("vec"),
-        norm(col(vecCol)).as("nrm"))
-    for (_ <- 1 to iterations) {
-      val assigned = nearestCells(sample, cents, vecCol, idCol, "id", 1, roundTo)
-      val means = assigned
-        .select(col("__cent").as("cell"), posexplode(col("__v_id")).as(Seq("__pos", "__x")))
-        .groupBy(col("cell"), col("__pos")).agg(avg(col("__x")).as("__m"))
-        .groupBy(col("cell"))
-        .agg(transform(array_sort(collect_list(struct(col("__pos"), col("__m")))),
-          e => e("__m")).as("__mv"))
-      // localCheckpoint per Lloyd step (the BpeTrainer/dupClusters
-      // idiom): each iteration re-derives `cents` from the previous
-      // frame, so without a checkpoint the plan nests one join + agg
-      // deeper per step — quadratic analysis cost and a re-execution of
-      // every prior step at the final action. The centroid frame is
-      // nlist rows, so the materialization is trivial; superseded
-      // checkpoint blocks are freed to keep storage O(1) iterations.
-      val next = cents.alias("c")
-        .join(means.alias("m"), Seq("cell"), "left")
-        .select(col("cell"),
-          coalesce(col("__mv"), col("c.vec")).as("vec"))
-        .withColumn("nrm", norm(col("vec")))
-        .localCheckpoint()
-      val superseded = OpsUtil.ckptRdds(cents)
-      cents = next
-      superseded.foreach(_.unpersist(blocking = false))
-    }
-    sample.unpersist()
-    cents
-  }
-
   /** Build the IVF index: assign every corpus vector to its nearest of
     * `nlist` coarse centroids in one scan. Default centroids are the
     * first `nlist` corpus vectors — deterministic and
-    * oracle-reproducible; pass `centroids = Some(kmeansCentroids(...))`
-    * for recall on skewed corpora (changes recall, not the plan
-    * shape). A supplied frame must have the `(cell, vec, nrm)` schema. */
+    * oracle-reproducible; pass `centroids` to build over a frozen
+    * centroid set (an existing index's, the set [[ivfAppend]] assigns
+    * against). A supplied frame must have the `(cell, vec, nrm)` schema. */
   def buildIvfIndex(corpus: DataFrame, vecCol: String, idCol: String,
       nlist: Int, roundTo: Int = 6,
       centroids: Option[DataFrame] = None): IvfIndex = {
@@ -886,7 +830,7 @@ object Similarity {
     * Scale posture: the DISTRIBUTED work ended inside
     * [[embeddingCovariance]]'s one-pass aggregation; iterating on a
     * d×d matrix driver-side is the documented bounded-metadata idiom
-    * (the [[BpeTrainer]] 1-row election, the Bloom sketch bytes). */
+    * (the Bloom sketch bytes). */
   def topPrincipalComponent(cov: DataFrame, dims: Int,
       iterations: Int = 50): Array[Double] = {
     require(iterations >= 1, "iterations must be >= 1")

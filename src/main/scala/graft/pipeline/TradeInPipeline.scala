@@ -62,19 +62,6 @@ object TradeInPipeline {
     withParsed.select(columns.map(col) :+ now.as(insertedCol): _*)
   }
 
-  /** Quarantine split: rows whose `TradeInDate` is present but
-    * unparseable — exactly the rows the F4 fallback silently stamps with
-    * `now` (rqtradein_etl.py:319-322). The reference loses them in the
-    * fallback; a production pipeline routes them to a side table for
-    * inspection while the main flow proceeds. Both frames derive from
-    * one predicate, so with the input materialized (staging table / one
-    * persist) the split costs two map-side filters, no shuffle. */
-  def quarantine(raw: DataFrame): (DataFrame, DataFrame) = {
-    val bad = col("TradeInDate").isNotNull &&
-      Timestamps.parseTimestamp(col("TradeInDate")).isNull
-    (raw.filter(!bad), raw.filter(bad))
-  }
-
   /** Stage-5 dedup: latest row per SaleInvoiceID by TradeInDate — the
     * reference's `ROW_NUMBER() OVER (PARTITION BY SaleInvoiceID ORDER BY
     * TradeInDate DESC)` CTE (rqtradein_etl.py:167-171). Like the

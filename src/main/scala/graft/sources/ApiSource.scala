@@ -1,5 +1,7 @@
 package graft.sources
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
@@ -10,9 +12,7 @@ import org.apache.spark.sql.types.StructType
   * the payload is a bounded report (one day of trade-ins), so a
   * driver-side fetch followed by a distributed parse is the right shape
   * even at cluster scale; what must never happen on the driver is the
-  * *transform*, which stays in DataFrame land. For genuinely large pulls
-  * an implementation can shard `params` into many windows and fetch from
-  * executors; the trait is agnostic.
+  * *transform*, which stays in DataFrame land.
   *
   * Configuration is env-var/parameter driven. The reference's hardcoded
   * credentials and cookie (rqtradein_etl.py:206-209) are deliberately NOT
@@ -27,8 +27,10 @@ trait ApiSource {
 
 /** S2: bounded retry with linearly growing backoff — the reference's
   * `max_retries = 3; backoff = 5; sleep(backoff * attempt)` loop
-  * (rqtradein_etl.py:211-227), generalized. `sleep` is injectable so
-  * tests run instantly. */
+  * (rqtradein_etl.py:211-227), generalized. Only non-fatal errors retry
+  * (the reference retries only `RequestException`): an interrupt or a
+  * VM error propagates at once, without a sleep. `sleep` is injectable
+  * so tests run instantly. */
 object Retry {
   def withBackoff[T](
       maxRetries: Int = 3,
@@ -39,7 +41,7 @@ object Retry {
     while (true) {
       try return f
       catch {
-        case e: Throwable =>
+        case NonFatal(e) =>
           onFailure(attempt, e)
           if (attempt >= maxRetries) throw e
           sleep(backoffMillis * attempt)
@@ -59,139 +61,9 @@ final class JsonLinesSource(path: String, schema: StructType) extends ApiSource 
     spark.read.schema(schema).json(path)
 }
 
-/** Parquet-backed source for replaying a previously landed batch. */
-final class ParquetSource(path: String) extends ApiSource {
-  def fetch(spark: SparkSession, params: Map[String, String]): DataFrame =
-    spark.read.parquet(path)
-}
-
-/** [[JsonLinesSource]] with malformed-record quarantine: lines that fail
-  * to parse are captured via PERMISSIVE mode's corrupt-record column,
-  * written RAW to `quarantinePath` (append — each ingest adds its
-  * casualties, so a fixed parser can replay the whole quarantine later),
-  * and dropped from the returned frame. An API batch with a few mangled
-  * payloads must not abort the load (FAILFAST) or silently vanish rows
-  * (DROPMALFORMED, which also hides the evidence); quarantine is the
-  * production contract: load what parses, keep what didn't, byte-exact.
-  *
-  * The parsed frame is persisted before the split — Spark (correctly)
-  * refuses plans that filter on only the internal corrupt-record column
-  * of a live JSON scan, and the two consumers (good rows, quarantine
-  * write) would otherwise each re-read and re-parse the file. The
-  * quarantine write is eager (it happens during `fetch`); the returned
-  * good-rows frame stays lazy. Caller owns `spark.catalog.clearCache()`
-  * between unrelated ingests (the [[graft.operators.Curation.curate]]
-  * contract). */
-final class QuarantiningJsonSource(path: String, schema: StructType,
-    quarantinePath: String) extends ApiSource {
-  import org.apache.spark.sql.functions.col
-  def fetch(spark: SparkSession, params: Map[String, String]): DataFrame = {
-    require(!schema.fieldNames.contains("_corrupt_record"),
-      "schema must not already contain _corrupt_record")
-    val withCorrupt = StructType(schema.fields :+
-      org.apache.spark.sql.types.StructField("_corrupt_record",
-        org.apache.spark.sql.types.StringType))
-    val parsed = spark.read.schema(withCorrupt)
-      .option("mode", "PERMISSIVE")
-      .option("columnNameOfCorruptRecord", "_corrupt_record")
-      .json(path)
-      .persist()
-    val bad = parsed.filter(col("_corrupt_record").isNotNull)
-      .select(col("_corrupt_record").as("raw"))
-    if (!bad.isEmpty)
-      bad.write.mode("append").text(quarantinePath)
-    parsed.filter(col("_corrupt_record").isNull).drop("_corrupt_record")
-  }
-}
-
 /** In-memory source for tests and for pre-built frames. */
 final class FrameSource(df: DataFrame) extends ApiSource {
   def fetch(spark: SparkSession, params: Map[String, String]): DataFrame = df
-}
-
-/** Paged fetch over any per-page source: drains pages 1..N until a page
-  * comes back empty, unioning the page frames. Real report APIs cap the
-  * page size the reference's single GET assumes away; this wrapper adds
-  * the drain loop without touching the page fetcher.
-  *
-  * The loop is driver-orchestrated (one `isEmpty` action per page — the
-  * page COUNT is what bounds it, not the data volume); each page's parse
-  * and all downstream transforms stay distributed, and the final union is
-  * lazy. `maxPages` guards against a server that never returns empty. */
-final class PagedSource(
-    page: (SparkSession, Map[String, String], Int) => DataFrame,
-    maxPages: Int = 10000) extends ApiSource {
-  def fetch(spark: SparkSession, params: Map[String, String]): DataFrame = {
-    var out: Option[DataFrame] = None
-    var i = 1
-    var done = false
-    while (!done && i <= maxPages) {
-      val p = page(spark, params, i)
-      if (p.isEmpty) done = true
-      else { out = Some(out.fold(p)(_.unionByName(p))); i += 1 }
-    }
-    out.getOrElse(
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        page(spark, params, 1).schema))
-  }
-}
-
-/** S1 at backfill scale: window-partitioned parallel fetch. The
-  * reference drains one window at a time on the driver
-  * (rqtradein_etl.py:203-227) — fine for a daily batch, quadratically
-  * sad for a years × locations backfill. Here the WINDOWS are the
-  * parallelism unit: the window list is distributed one-per-task and
-  * `fetchWindow` (a serializable closure — HTTP GET, file read, …) runs
-  * on executors, each yielding that window's records as JSON lines;
-  * the distributed parse with an explicit schema follows. N windows →
-  * N concurrent fetches, no driver loop, no driver data.
-  *
-  * Per-window retry belongs INSIDE `fetchWindow` (compose with
-  * [[Retry.withBackoff]]) so a flaky window retries alone without
-  * failing the stage.
-  *
-  * The returned DataFrame is LAZY: every action re-runs every
-  * `fetchWindow` call (nothing is cached here — a source cannot know the
-  * caller's storage budget). Callers must either materialize immediately
-  * (the pipeline writes straight to a staging table, which is one pass)
-  * or `persist()` the result before multi-action use — a count-then-write
-  * against a live, non-idempotent API would otherwise fetch twice. */
-final class PartitionedWindowSource(
-    windows: Seq[Map[String, String]],
-    fetchWindow: Map[String, String] => Iterator[String],
-    schema: StructType) extends ApiSource {
-  def fetch(spark: SparkSession, params: Map[String, String]): DataFrame = {
-    import spark.implicits._
-    val merged = windows.map(w => params ++ w)
-    // parallelize(n slices) places exactly one window per task — a
-    // round-robin repartition only balances in expectation and can land
-    // two latency-bound fetches on one task while another idles
-    val lines = spark
-      .createDataset(spark.sparkContext.parallelize(merged, merged.size.max(1)))
-      .flatMap(fetchWindow)
-    spark.read.schema(schema).json(lines)
-  }
-}
-
-/** S3 (SURVEY.md §2.1): JDBC-backed source/lookup — the reference's
-  * pyodbc connection (rqtradein_etl.py:199-202) generalized to Spark's
-  * JDBC reader. Connection string comes from the environment exactly as
-  * the reference's `CONNECTION_STRING` env var; partitioning options
-  * (`partitionColumn`/`numPartitions`) make the read parallel at scale.
-  * Integration-tested end-to-end against embedded Apache Derby
-  * (JdbcSourceSpec) — the same `format("jdbc")` code path a SQL-Server
-  * URL + driver jar would exercise in production. */
-final class JdbcSource(
-    table: String,
-    url: String = sys.env.getOrElse("GRAFT_JDBC_URL", ""),
-    options: Map[String, String] = Map.empty) extends ApiSource {
-  def fetch(spark: SparkSession, params: Map[String, String]): DataFrame = {
-    require(url.nonEmpty, "GRAFT_JDBC_URL not set")
-    spark.read.format("jdbc")
-      .option("url", url).option("dbtable", table)
-      .options(options ++ params)
-      .load()
-  }
 }
 
 /** S1: driver-side HTTP GET returning a JSON array of records, parsed
@@ -200,9 +72,9 @@ final class JdbcSource(
   * (mirrors the reference's query-string construction at
   * rqtradein_etl.py:205 without its embedded secrets).
   *
-  * Untested against a live endpoint in this environment (no egress);
-  * the parse path is the same `Dataset[String] → read.json` used by
-  * [[JsonLinesSource]].
+  * A non-2xx status or an I/O error retries through [[Retry.withBackoff]]
+  * with its default 3 attempts and 5 s linear backoff, as the reference
+  * does.
   */
 final class HttpJsonSource(
     urlTemplate: String,

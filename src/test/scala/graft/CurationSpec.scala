@@ -32,31 +32,6 @@ class CurationSpec extends AnyFunSuite {
     assert(out == Set(1L, 3L))
   }
 
-  test("curateTo materializes to parquet and leaves zero stage blocks cached") {
-    import spark.implicits._
-    val proseA = (1 to 40).map(i => s"alpha$i").mkString(" ")
-    val docs = Seq(
-      (1L, proseA), (2L, proseA),
-      (3L, (1 to 40).map(i => s"beta$i").mkString(" ")))
-      .toDF("doc_id", "text")
-    val thresholds = Curation.QualityThresholds(
-      minTokens = 5, minTtr = 0.2, minStopwordRatio = 0.0,
-      maxTopBigramFrac = 0.5, maxRareFrac = 1.0)
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    val dir = java.nio.file.Files.createTempDirectory("curateto")
-      .toString + "/corpus"
-    val out = Curation.curateTo(docs, "text", "doc_id", dir,
-      thresholds = thresholds)
-    // no cached block outlives the call — the leak-by-design of the lazy
-    // curate is exactly what this variant must not have
-    val after = spark.sparkContext.getPersistentRDDs.keySet
-    assert((after -- before).isEmpty,
-      s"curateTo leaked cached stage blocks: ${after -- before}")
-    assert(out.select("doc_id").as[Long].collect().toSet == Set(1L, 3L))
-    // result is durable: a fresh read answers without the chain
-    assert(spark.read.parquet(dir).count() == 2L)
-  }
-
   test("curate with an inert filter keeps every distinct document") {
     import spark.implicits._
     val docs = Seq(

@@ -8,33 +8,6 @@ import graft.operators.Maintenance
 class MaintenanceSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
-  test("compact merges a many-small-file layout, preserving content") {
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("compact").toString + "/t"
-    (1 to 1000).map(i => (i.toLong, s"row$i")).toDF("id", "s")
-      .repartition(20).write.parquet(dir)
-    def parquetFiles = new java.io.File(dir).listFiles()
-      .count(f => f.getName.endsWith(".parquet"))
-    assert(parquetFiles == 20)
-    val before = spark.read.parquet(dir).orderBy("id").collect()
-
-    val n = Maintenance.compact(spark, dir, targetBytes = 1L << 30)
-    assert(n == 1 && parquetFiles == 1)
-    assert(spark.read.parquet(dir).orderBy("id").collect().sameElements(before))
-  }
-
-  test("compact splits at the target size bound") {
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("compact2").toString + "/t"
-    (1 to 5000).map(i => (i.toLong, "x" * 100)).toDF("id", "s")
-      .repartition(10).write.parquet(dir)
-    val total = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .getContentSummary(new org.apache.hadoop.fs.Path(dir)).getLength
-    val n = Maintenance.compact(spark, dir, targetBytes = total / 3)
-    assert(n == 4) // ceil(total / (total/3 rounded down)) = 4
-  }
-
   test("zorderWrite: every clustered dim gets a tight per-file envelope; plain sort does not") {
     import spark.implicits._
     // two independent uniform dims 0..99 — a single-dim sort leaves the

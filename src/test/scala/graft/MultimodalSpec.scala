@@ -48,28 +48,6 @@ class MultimodalSpec extends AnyFunSuite {
     assert(got == Multimodal.MediaMeta(7L, "png", 19, 192, 80, 2.4))
   }
 
-  test("ImageIoCodec decodes a real PNG's pixel dimensions; garbage gives 0x0") {
-    // A genuine 5x3 PNG encoded by the JDK itself — the codec under test
-    // must read the real pixel dimensions back out of the format header.
-    val img = new java.awt.image.BufferedImage(5, 3,
-      java.awt.image.BufferedImage.TYPE_INT_RGB)
-    img.setRGB(2, 1, 0xFF8800)
-    val bos = new java.io.ByteArrayOutputStream()
-    assert(javax.imageio.ImageIO.write(img, "png", bos))
-    val png = bos.toByteArray
-    assert(Multimodal.ImageIoCodec.decode(png) == (5, 3))
-    // unrecognized bytes keep the stage total
-    assert(Multimodal.ImageIoCodec.decode("not an image".getBytes) == (0, 0))
-    assert(Multimodal.ImageIoCodec.decode(png.take(8)) == (0, 0))
-    // the same typed decode stage, real codec swapped in: format sniffs
-    // from the true PNG magic, dims come from ImageIO
-    val df = Seq((9L, png)).toDF("doc_id", "bin")
-    val got = Multimodal.decodeMeta(df, "doc_id", "bin",
-      codec = Multimodal.ImageIoCodec).head()
-    assert(got.doc_id == 9L && got.format == "png" &&
-      got.width == 5 && got.height == 3 && got.byte_size == png.length)
-  }
-
   test("frameSample takes every Nth fixed-size chunk, ragged tail included") {
     import spark.implicits._
     // 10 bytes, frames of 4: frames 0 ([0,4)), 1 ([4,8)), 2 ([8,10)); every 2nd -> 0, 2

@@ -35,52 +35,15 @@ class RetrySpec extends AnyFunSuite {
     assert(calls == 3 && e.getMessage == "boom 3")
   }
 
-  test("PagedSource drains pages until the first empty page, lazily unioned") {
-    import org.apache.spark.sql.functions._
-    val spark = TestSpark.spark
-    import spark.implicits._
+  test("an interrupt propagates after one attempt, without a sleep") {
+    var sleeps = List.empty[Long]
     var calls = 0
-    val src = new graft.sources.PagedSource((s, _, i) => {
-      calls += 1
-      if (i <= 3) Seq.tabulate(2)(j => (i * 10 + j)).toDF("v")
-      else Seq.empty[Int].toDF("v")
-    })
-    val out = src.fetch(spark, Map.empty)
-    assert(out.count() == 6)
-    assert(out.select(min(col("v")), max(col("v"))).as[(Int, Int)].head() == ((10, 31)))
-    assert(calls == 4) // 3 full pages + the terminating empty page only
-  }
-
-  test("PagedSource with an immediately empty page yields an empty frame") {
-    val spark = TestSpark.spark
-    import spark.implicits._
-    val src = new graft.sources.PagedSource((_, _, _) => Seq.empty[Int].toDF("v"))
-    assert(src.fetch(spark, Map.empty).isEmpty)
-  }
-
-  test("QuarantiningJsonSource loads good rows, quarantines raw malformed lines") {
-    val spark = TestSpark.spark
-    import org.apache.spark.sql.types._
-    val dir = java.nio.file.Files.createTempDirectory("quarantine").toString
-    val in = s"$dir/in.jsonl"
-    java.nio.file.Files.write(java.nio.file.Paths.get(in), java.util.Arrays.asList(
-      """{"id": "1", "name": "ok"}""",
-      """{"id": "2", "name": "also ok"}""",
-      """{"id": "3", "name": BROKEN""",        // malformed: unquoted value
-      """not json at all"""))
-    val schema = StructType(Seq(
-      StructField("id", StringType), StructField("name", StringType)))
-    val src = new graft.sources.QuarantiningJsonSource(in, schema, s"$dir/quarantine")
-    val good = src.fetch(spark, Map.empty)
-    assert(good.columns.toSeq == Seq("id", "name"))
-    assert(good.collect().map(_.getString(0)).sorted.toSeq == Seq("1", "2"))
-    // casualties preserved byte-exact for replay after a parser fix
-    val q = spark.read.text(s"$dir/quarantine").collect().map(_.getString(0)).toSet
-    assert(q == Set("""{"id": "3", "name": BROKEN""", "not json at all"))
-    // a second ingest APPENDS its casualties (cumulative quarantine)
-    spark.catalog.clearCache()
-    src.fetch(spark, Map.empty).count()
-    assert(spark.read.text(s"$dir/quarantine").count() == 4L)
-    spark.catalog.clearCache()
+    intercept[InterruptedException] {
+      Retry.withBackoff(maxRetries = 3, backoffMillis = 5, sleep = sleeps :+= _) {
+        calls += 1
+        throw new InterruptedException("stop")
+      }
+    }
+    assert(calls == 1 && sleeps.isEmpty)
   }
 }

@@ -41,40 +41,6 @@ class SimilaritySpec extends AnyFunSuite {
     assert(viaIndex.except(oneShot).isEmpty && oneShot.except(viaIndex).isEmpty)
   }
 
-  test("kmeansCentroids lifts nProbe-bounded recall on a skewed corpus; first-N unchanged") {
-    // Skewed construction: BOTH first-N seeds sit in a small cluster A
-    // near (1, 0, 0), while the mass of the corpus is cluster B near
-    // (0, 0, 1) with a ±y wobble. Under first-N the B points split
-    // across the two A-seed cells by wobble sign, so a 1-probe query
-    // into B sees only one shard of it.
-    val a = Seq(
-      (0L, Seq(1.0, 0.10, 0.0)), (1L, Seq(1.0, -0.10, 0.0)),
-      (2L, Seq(1.0, 0.05, 0.0)), (3L, Seq(1.0, -0.05, 0.0)),
-      (4L, Seq(1.0, 0.07, 0.0)), (5L, Seq(1.0, -0.07, 0.0)))
-    val b = (100L until 120L).map(i =>
-      (i, Seq(0.0, if (i < 115) 0.1 else -0.1, 1.0)))
-    val skew = (a ++ b).toDF("id", "emb")
-    val q = Seq((900L, Seq(0.0, -0.05, 1.0))).toDF("id", "emb")
-    val k = 10
-    def recall(index: Similarity.IvfIndex): Double = {
-      val truth = Similarity.bruteForceTopK(skew, q, "emb", "id", k)
-        .select("neighbor_id").as[Long].collect().toSet
-      val got = Similarity.ivfSearch(index, q, "emb", "id", k, nProbe = 1)
-        .select("neighbor_id").as[Long].collect().toSet
-      (truth & got).size.toDouble / truth.size
-    }
-    val firstN = Similarity.buildIvfIndex(skew, "emb", "id", nlist = 2)
-    val kmeans = Similarity.buildIvfIndex(skew, "emb", "id", nlist = 2,
-      centroids = Some(Similarity.kmeansCentroids(skew, "emb", "id",
-        nlist = 2, iterations = 2, sampleMod = 1)))
-    val (rFirst, rKmeans) = (recall(firstN), recall(kmeans))
-    assert(rKmeans >= rFirst,
-      s"sampled k-means must not lose recall: kmeans=$rKmeans firstN=$rFirst")
-    assert(rKmeans > rFirst,
-      s"on this skew the moved centroids must strictly win: kmeans=$rKmeans firstN=$rFirst")
-    assert(rKmeans == 1.0, s"both B shards must land in one probed cell: $rKmeans")
-  }
-
   test("hardNegatives: near-dup band excluded BEFORE ranking, never after") {
     // corpus: query 0's clones (cosine ~1.0, the near-dup band), a
     // confusable cluster (moderate cosine), and an orthogonal tail.
@@ -95,25 +61,6 @@ class SimilaritySpec extends AnyFunSuite {
     // top-k ANN would return 1,2 (the clones); the band must skip them
     // and rank the confusables first, then the orthogonal boundary hit
     assert(got == Seq((3L, 1), (4L, 2), (5L, 3)), s"got $got")
-  }
-
-  test("kmeansCentroids: plan depth stays flat across iterations (r9 checkpoint)") {
-    // Without the per-step localCheckpoint the plan nested one
-    // join+agg deeper per Lloyd iteration. With it, every iteration
-    // ends at a materialized LogicalRDD, so the returned frame's plan
-    // size is iteration-independent and the centroids stay correct.
-    val skew = ((0L until 6L).map(i => (i, Seq(1.0, 0.0, 0.0))) ++
-      (100L until 120L).map(i => (i, Seq(0.0, 0.1, 1.0)))).toDF("id", "emb")
-    def planSize(iters: Int): (Int, Long) = {
-      val c = Similarity.kmeansCentroids(skew, "emb", "id",
-        nlist = 2, iterations = iters, sampleMod = 1)
-      (c.queryExecution.logical.collect { case n => n }.size, c.count())
-    }
-    val (s1, n1) = planSize(1)
-    val (s5, n5) = planSize(5)
-    assert(n1 == 2 && n5 == 2)
-    assert(s5 == s1, s"plan grew with iterations: $s1 -> $s5 nodes")
-    assert(s1 <= 3, s"checkpointed plan should be a bare scan, got $s1 nodes")
   }
 
   test("lshSearch over a persisted index equals one-shot lshTopK") {

@@ -15,29 +15,6 @@ class TimestampsSpec extends AnyFunSuite {
   private def evalStr(c: org.apache.spark.sql.Column, input: String): String =
     strings("s", Seq(input)).select(c.cast("string")).head().getString(0)
 
-  test("F1 truncate: pads short fractions to 6 digits, preserves Z") {
-    for (d <- 1 to 5) {
-      val frac = "123456789".take(d)
-      val got = evalStr(Timestamps.truncateMicroseconds(col("s")),
-        s"2024-01-02T03:04:05.${frac}Z")
-      assert(got == s"2024-01-02T03:04:05.${(frac + "000000").take(6)}Z")
-    }
-  }
-
-  test("F1 truncate: truncates 7-9 digit fractions to 6") {
-    for (d <- 7 to 9) {
-      val frac = "123456789".take(d)
-      val got = evalStr(Timestamps.truncateMicroseconds(col("s")),
-        s"2024-01-02 03:04:05.$frac")
-      assert(got == "2024-01-02 03:04:05.123456")
-    }
-  }
-
-  test("F1 truncate: strings without a fraction pass through unchanged") {
-    for (s0 <- Seq("2024-01-02T03:04:05Z", "2024-01-02 03:04:05", "garbage", ""))
-      assert(evalStr(Timestamps.truncateMicroseconds(col("s")), s0) == s0)
-  }
-
   test("F2 parse: accepts all four reference formats, with and without Z") {
     val expect6 = "2024-01-02 03:04:05.123456"
     val expect0 = "2024-01-02 03:04:05.000000"

@@ -83,31 +83,16 @@ class TradeInPipelineSpec extends AnyFunSuite {
     assert(staging.select(min(col("TradeInDate"))).head().getString(0).startsWith(d2))
   }
 
-  test("backfill: window-partitioned parallel fetch feeds the pipeline e2e") {
-    import graft.sources.PartitionedWindowSource
+  test("backfill: four day windows in one batch feed the pipeline e2e") {
     val work = java.nio.file.Files.createTempDirectory("tip").toString
     val days = (1 to 4).map(i => f"2024-06-0$i%1d")
-    val schema = StructType(
-      TradeInSchema.rawColumns.map(c => StructField(c, StringType)))
-    // Executor-side fetch: 2 records per day window, each stamped with
-    // the task's partition id in SerialNumber to prove where it ran.
-    val src = new PartitionedWindowSource(days.map(d => Map("StartDate" -> d)),
-      w => {
-        val d = w("StartDate")
-        val pid = org.apache.spark.TaskContext.getPartitionId()
-        (1 to 2).iterator.map(i =>
-          s"""{"SaleInvoiceID":"${d.takeRight(2)}0$i","TradeInDate":"${d}T0$i:00:00Z","TradeInAmount":"$i.00","SerialNumber":"task-$pid"}""")
-      }, schema)
-    val pipeline = new TradeInPipeline(src,
-      stagingPath = s"$work/staging", targetPath = s"$work/target",
-      registerCatalog = false,
-      now = () => lit("2024-06-04 06:00:00").cast("timestamp"))
-    val r = pipeline.run(spark, Map())
+    // 2 records per day window, 8 distinct keys across the 4 days.
+    val batch = rawBatch(for (d <- days; i <- 1 to 2)
+      yield (s"${d.takeRight(2)}0$i", s"${d}T0$i:00:00Z", s"$i.00"))
+    val r = pipelineAt(work, "2024-06-04", batch).run(spark, Map())
     assert((r.inserted, r.updated) == ((8L, 0L)))
     val target = spark.read.parquet(s"$work/target")
     assert(target.count() == 8)
-    // all four windows landed, fetched on four distinct tasks
-    assert(target.select(countDistinct(col("SerialNumber"))).head().getLong(0) == 4)
     // backfill retention: only rows dated the run's "today" survive staging
     val staging = spark.read.parquet(s"$work/staging")
     assert(staging.count() == 2)
@@ -165,24 +150,44 @@ class TradeInPipelineSpec extends AnyFunSuite {
     assert(snapRows.size == 4 && snapRows == partRows)
   }
 
-  test("quarantine splits unparseable TradeInDates; null passes through clean") {
-    val raw = rawBatch(Seq(
-      ("1", "2024-06-01T01:00:00Z", "10.00"),
-      ("2", "not-a-date", "20.00"),
-      ("3", null, "30.00")))
-    val (clean, bad) = TradeInPipeline.quarantine(raw)
-    assert(clean.select("SaleInvoiceID").collect().map(_.getString(0)).sorted
-      .toSeq == Seq("1", "3"))
-    assert(bad.select("SaleInvoiceID").collect().map(_.getString(0)).toSeq == Seq("2"))
-    assert(clean.count() + bad.count() == raw.count())
-  }
-
   test("garbage TradeInDate falls back to run time (F4) and survives merge") {
     val work = java.nio.file.Files.createTempDirectory("tip").toString
     val day = "2024-06-01"
     pipelineAt(work, day, rawBatch(Seq(("9", "garbage", "1.00")))).run(spark, Map())
     val t = spark.read.parquet(s"$work/target").head()
     assert(t.getAs[java.sql.Timestamp]("TradeInDate").toString == s"$day 06:00:00.0")
+  }
+
+  test("run-level deadline: a run past runTimeoutMillis refuses the next " +
+    "stage (host.json:3 functionTimeout analogue)") {
+    val work = java.nio.file.Files.createTempDirectory("tidl").toString
+    val empty = spark.createDataFrame(
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+      StructType(TradeInSchema.rawColumns.map(c => StructField(c, StringType))))
+    // A source that burns past the (tiny) deadline during fetch: the
+    // NEXT stage boundary must refuse to start, naming the budget.
+    val slow = new graft.sources.ApiSource {
+      override def fetch(s: org.apache.spark.sql.SparkSession,
+          params: Map[String, String]): org.apache.spark.sql.DataFrame = {
+        Thread.sleep(30); empty
+      }
+    }
+    val p = new TradeInPipeline(slow,
+      stagingPath = s"$work/staging", targetPath = s"$work/target",
+      registerCatalog = false,
+      now = () => lit("2024-06-01 06:00:00").cast("timestamp"),
+      runTimeoutMillis = 10L)
+    val ex = intercept[java.util.concurrent.TimeoutException] {
+      p.run(spark, Map())
+    }
+    assert(ex.getMessage.contains("runTimeoutMillis=10"))
+    // the default envelope (90 min) never trips a normal run
+    val ok = new TradeInPipeline(new FrameSource(empty),
+      stagingPath = s"$work/staging2", targetPath = s"$work/target2",
+      registerCatalog = false,
+      now = () => lit("2024-06-01 06:00:00").cast("timestamp"))
+      .run(spark, Map())
+    assert(ok.inserted == 0L && ok.metrics.contains("run_ms"))
   }
 
   test("CatalogDdl: ensureTable is idempotent; migrateRename is guarded") {

@@ -52,7 +52,7 @@ fi
 # No global flags in library or query code: an env read or a @volatile
 # var lets a harness run a different plan from the one tests and library
 # callers get. Harness mains may read env; sources/ reads deployment
-# settings (JDBC URL, auth).
+# settings (API auth).
 G=src/main/scala/graft
 if grep -rnE --include='*.scala' 'sys\.env|@volatile' \
     $G/operators $G/pipeline $G/streaming $G/queries $G/functions \
@@ -89,28 +89,35 @@ if [[ -s /tmp/stacked_doc_hits.txt ]]; then
   exit 1
 fi
 
-# No new library def without a library caller: eleven streaming operators
-# and six other defs had piled up whose only callers were their own specs.
-# A public def added under operators/, functions/ or streaming/ must be
-# named on a code line (not a comment, a string or its own def line)
-# somewhere in src/main/scala or perfbench/src. Only added lines are
-# checked, so existing defs need no allowlist.
+# No new library definition without a library caller: eleven streaming
+# operators, six other defs and six whole source classes had piled up
+# whose only callers were their own specs. A public def, class, object or
+# trait added under operators/, functions/, streaming/, sources/,
+# pipeline/, expressions/ or plans/ must be named on a code line (not a
+# comment, a string or its own declaring line; a `${...}` interpolation
+# counts as code) somewhere in src/main/scala or perfbench/src. `def main`
+# is exempt (an entry point has no caller).
+# Only added lines are checked, so existing definitions need no allowlist.
 git diff --cached -U0 -- src/main/scala/graft/operators \
     src/main/scala/graft/functions src/main/scala/graft/streaming \
-  | sed -nE 's/^\+[[:space:]]*(final[[:space:]]+)?def[[:space:]]+([A-Za-z_][A-Za-z0-9_]*).*/\2/p' \
-  | sort -u >/tmp/new_defs.txt
+    src/main/scala/graft/sources src/main/scala/graft/pipeline \
+    src/main/scala/graft/expressions src/main/scala/graft/plans \
+  | sed -nE 's/^\+[[:space:]]*((final|sealed|abstract|case|implicit)[[:space:]]+)*(def|class|object|trait)[[:space:]]+([A-Za-z_][A-Za-z0-9_]*).*/\4/p' \
+  | grep -vx main | sort -u >/tmp/new_defs.txt || true
 : >/tmp/uncalled_def_hits.txt
 while read -r name; do
   refs=$(git grep --cached -h -w -F -e "$name" -- src/main/scala perfbench/src \
       | grep -vE '^[[:space:]]*(\*|//|/\*)' \
-      | grep -vE "(^|[^A-Za-z0-9_])def[[:space:]]+$name([^A-Za-z0-9_]|\$)" \
-      | sed -E 's/"[^"]*"//g' | grep -c -w -F -e "$name" || true)
+      | grep -vE "(^|[^A-Za-z0-9_])(def|class|object|trait)[[:space:]]+$name([^A-Za-z0-9_]|\$)" \
+      | sed -E 's/\$\{([^}]*)\}/" \1 "/g; s/"[^"]*"//g' \
+      | grep -c -w -F -e "$name" || true)
   [[ "$refs" -gt 0 ]] || echo "$name" >>/tmp/uncalled_def_hits.txt
 done </tmp/new_defs.txt
 if [[ -s /tmp/uncalled_def_hits.txt ]]; then
-  echo "[precommit] FAIL: new public def with no caller in src/main/scala or perfbench/src —"
-  echo "[precommit] call it from a product path or a registry query; a test-only"
-  echo "[precommit] reference implementation belongs under src/test:"
+  echo "[precommit] FAIL: new public def/class/object/trait with no caller in"
+  echo "[precommit] src/main/scala or perfbench/src — call it from a product path or"
+  echo "[precommit] a registry query; a test-only reference implementation belongs"
+  echo "[precommit] under src/test:"
   cat /tmp/uncalled_def_hits.txt
   exit 1
 fi
