@@ -1,168 +1,21 @@
 package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Cast, Expression, ExpressionInfo, Literal}
-import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
-import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, StringType}
-import org.apache.spark.unsafe.types.UTF8String
 
-import graft.expressions.{CdcChunks, CountInSet, DotProduct, KMinDistinct, KMinDistinctMerge, MinGramMd5, MisraGries, NfcNormalize, TokenTf, VectorUnscaledSum}
-
-/** Session extension wiring: exposes graft's native Catalyst expressions
-  * as SQL functions, so `spark.sql("SELECT graft_dot(a, b)")` works
-  * anywhere the library is on the classpath — the standard deployment
-  * shape for an engine extension (enable with
-  * `spark.sql.extensions=graft.GraftExtensions`, or
-  * `SparkSession.builder().withExtensions(new GraftExtensions)`).
+/** Session extension wiring: registers the native as-of join's planner
+  * strategy ([[graft.plans.AsofJoinStrategy]]: logical `AsofJoinNode` →
+  * `AsofJoinExec` merge pass), which
+  * [[graft.operators.Relational.asofJoinNative]] needs. Enable with
+  * `spark.sql.extensions=graft.GraftExtensions` (every `Harness` session
+  * does), or `SparkSession.builder().withExtensions(new GraftExtensions)`.
   *
-  * Both functions remain full codegen participants when invoked from SQL:
-  * injection registers the expression builder, not a UDF wrapper, so the
-  * generated plan is identical to the DataFrame-API path
-  * ([[graft.functions.VectorFunctions.dot]] /
-  * [[graft.functions.TextFunctions.winnowFingerprint]]).
+  * graft's custom expressions are not SQL functions: library code builds
+  * each one as a Column through `ColumnBridge.column` (e.g.
+  * [[graft.functions.VectorFunctions.dot]]), so no session needs this
+  * extension to run them.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    // Accelerate the naive HOF dot-product spelling to the native
-    // expression (see DotProductRewrite's contract notes).
-    ext.injectOptimizerRule(_ => graft.plans.DotProductRewrite)
-    // Whole-operator extension: the native as-of join's planner
-    // strategy (logical AsofJoinNode -> AsofJoinExec merge pass).
+  override def apply(ext: SparkSessionExtensions): Unit =
     ext.injectPlannerStrategy(_ => graft.plans.AsofJoinStrategy)
-    ext.injectFunction((
-      FunctionIdentifier("graft_dot"),
-      new ExpressionInfo(classOf[DotProduct].getName, "graft_dot"),
-      (children: Seq[Expression]) => {
-        require(children.length == 2, "graft_dot(arrayA, arrayB)")
-        DotProduct(children.head, children(1))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_min_gram_md5"),
-      new ExpressionInfo(classOf[MinGramMd5].getName, "graft_min_gram_md5"),
-      (children: Seq[Expression]) => {
-        require(children.length == 2, "graft_min_gram_md5(text, gram)")
-        val gram = children(1) match {
-          case Literal(v: Int, IntegerType) => v
-          case other => throw new IllegalArgumentException(
-            s"gram must be an integer literal, got $other")
-        }
-        MinGramMd5(children.head, gram)
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_count_in_set"),
-      new ExpressionInfo(classOf[CountInSet].getName, "graft_count_in_set"),
-      (children: Seq[Expression]) => {
-        require(children.length == 2,
-          "graft_count_in_set(tokens, array('a','b',...))")
-        // The probe set must be a compile-time constant (it becomes the
-        // expression's prebuilt hash set), so the second argument has to
-        // fold — array literals and foldable expressions over them do.
-        val itemsExpr = children(1)
-        require(itemsExpr.foldable &&
-          itemsExpr.dataType.isInstanceOf[ArrayType] &&
-          itemsExpr.dataType.asInstanceOf[ArrayType].elementType == StringType,
-          s"items must be a foldable array<string>, got $itemsExpr")
-        val items = itemsExpr.eval() match {
-          case null => Seq.empty[String]
-          case ad: ArrayData =>
-            ad.toArray[UTF8String](StringType).filter(_ != null).map(_.toString).toSeq
-        }
-        CountInSet(children.head, items)
-      }))
-    // Spark ships codegen'd Bloom-filter expressions (the machinery behind
-    // runtime-filter join pruning) but does not register them as SQL
-    // functions; these two make the build/probe pair callable so the
-    // decontamination pre-filter ([[graft.operators.TextDedup
-    // .contaminatedIdsBloom]]) — and any SQL user — can use the engine's
-    // own sketch instead of a UDF. The aggregate builder returns the
-    // AggregateFunction; the analyzer wraps it in an AggregateExpression.
-    // Round-9 additions: every remaining native expression becomes SQL-
-    // callable with the same expression-builder (not UDF) injection, so
-    // the SQL path codegens identically to the Column-API path.
-    def intLit(e: Expression, what: String): Int = e match {
-      case Literal(v: Int, IntegerType) => v
-      case other => throw new IllegalArgumentException(
-        s"$what must be an integer literal, got $other")
-    }
-    ext.injectFunction((
-      FunctionIdentifier("graft_token_tf"),
-      new ExpressionInfo(classOf[TokenTf].getName, "graft_token_tf"),
-      (children: Seq[Expression]) => {
-        require(children.length == 1, "graft_token_tf(text)")
-        TokenTf(children.head)
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_nfc"),
-      new ExpressionInfo(classOf[NfcNormalize].getName, "graft_nfc"),
-      (children: Seq[Expression]) => {
-        require(children.length == 1, "graft_nfc(text)")
-        NfcNormalize(children.head)
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_cdc_chunks"),
-      new ExpressionInfo(classOf[CdcChunks].getName, "graft_cdc_chunks"),
-      (children: Seq[Expression]) => {
-        require(children.length == 3,
-          "graft_cdc_chunks(text, window, maskHexZeros)")
-        CdcChunks(children.head, intLit(children(1), "window"),
-          intLit(children(2), "maskHexZeros"))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_kmv"),
-      new ExpressionInfo(classOf[KMinDistinct].getName, "graft_kmv"),
-      (children: Seq[Expression]) => {
-        require(children.length == 2, "graft_kmv(x, k)")
-        KMinDistinct(children.head, intLit(children(1), "k"))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_kmv_merge"),
-      new ExpressionInfo(classOf[KMinDistinctMerge].getName, "graft_kmv_merge"),
-      (children: Seq[Expression]) => {
-        require(children.length == 2, "graft_kmv_merge(mins, k)")
-        KMinDistinctMerge(children.head, intLit(children(1), "k"))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_vector_unscaled_sum"),
-      new ExpressionInfo(classOf[VectorUnscaledSum].getName,
-        "graft_vector_unscaled_sum"),
-      (children: Seq[Expression]) => {
-        require(children.length == 3,
-          "graft_vector_unscaled_sum(vec, dim, scale)")
-        // Cast to array<double> like the Scala API (VectorFunctions
-        // .asDouble): the aggregate reads the buffer via
-        // ArrayData.getDouble, so an uncast array<float>/array<int>
-        // child from SQL would read garbage silently instead of
-        // erroring. An un-castable child fails analysis loudly.
-        VectorUnscaledSum(Cast(children.head, ArrayType(DoubleType)),
-          intLit(children(1), "dim"), intLit(children(2), "scale"))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_misra_gries"),
-      new ExpressionInfo(classOf[MisraGries].getName, "graft_misra_gries"),
-      (children: Seq[Expression]) => {
-        require(children.length == 2, "graft_misra_gries(x, k)")
-        MisraGries(children.head, intLit(children(1), "k"))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_bloom_agg"),
-      new ExpressionInfo(classOf[BloomFilterAggregate].getName, "graft_bloom_agg"),
-      (children: Seq[Expression]) => children match {
-        case Seq(c) => new BloomFilterAggregate(c)
-        case Seq(c, est) => new BloomFilterAggregate(c, est)
-        case Seq(c, est, bits) => new BloomFilterAggregate(c, est, bits)
-        case _ => throw new IllegalArgumentException(
-          "graft_bloom_agg(xxhash64(x)[, estimatedItems[, numBits]])")
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_might_contain"),
-      new ExpressionInfo(classOf[BloomFilterMightContain].getName, "graft_might_contain"),
-      (children: Seq[Expression]) => {
-        require(children.length == 2,
-          "graft_might_contain(bloomBinary, xxhash64(x))")
-        BloomFilterMightContain(children.head, children(1))
-      }))
-  }
 }

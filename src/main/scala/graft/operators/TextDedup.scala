@@ -284,20 +284,24 @@ object TextDedup {
     * false-positive) rows instead of every train shingle.
     *
     * Build and probe use Spark's OWN runtime-filter expressions
-    * (`BloomFilterAggregate` / `BloomFilterMightContain`, exposed as SQL
-    * functions by [[graft.GraftExtensions]]), so the probe is codegen'd
-    * and the sketch layout is the engine's. Like the engine's runtime
-    * filter — whose injected scalar subquery materializes at the driver
-    * before broadcast — the one-row sketch (numBits/8 bytes, bounded by
-    * the `maxNumBits` conf) is collected eagerly and re-enters the plan
-    * as a foldable literal (`BloomFilterMightContain` requires a
-    * constant or scalar-subquery filter operand). The exact-verify join
+    * (`BloomFilterAggregate` / `BloomFilterMightContain`, built as
+    * Columns through `ColumnBridge`, so they need no session extension):
+    * the probe is codegen'd and the sketch layout is the engine's. Like
+    * the engine's runtime filter — whose injected scalar subquery
+    * materializes at the driver before broadcast — the one-row sketch
+    * (numBits/8 bytes, bounded by the `maxNumBits` conf) is collected
+    * eagerly and re-enters the plan as a foldable literal
+    * (`BloomFilterMightContain` requires a constant or scalar-subquery
+    * filter operand). The exact-verify join
     * deliberately does NOT broadcast: at eval sizes where this operator
     * is the right choice the exact set is too big for that; AQE still
     * broadcasts it at small scale. */
   def contaminatedIdsBloom(train: DataFrame, evalSet: DataFrame,
       textCol: String, idCol: String, shingleSize: Int,
       minOverlap: Long = 1L, expectedEvalShingles: Long = 1000000L): DataFrame = {
+    import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
+    import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
+    import org.apache.spark.sql.graft.ColumnBridge
     require(expectedEvalShingles > 0, "expectedEvalShingles must be positive")
     val numBits = math.max(64L, expectedEvalShingles * 10L)
     // The eval shingle set has two consumers (sketch build, exact-verify
@@ -307,12 +311,15 @@ object TextDedup {
     // [[Curation.curate]]: clearCache between unrelated runs.
     val evalShingles = tokenShingled(evalSet, textCol, Seq.empty, shingleSize)
       .distinct().persist()
+    val hashed = ColumnBridge.expression(xxhash64(col("__g")))
     val sketch = evalShingles
-      .agg(expr(s"graft_bloom_agg(xxhash64(__g), ${expectedEvalShingles}L, ${numBits}L)")
+      .agg(ColumnBridge.column(new BloomFilterAggregate(hashed,
+          Literal(expectedEvalShingles), Literal(numBits)).toAggregateExpression())
         .as("__bloom"))
       .head().getAs[Array[Byte]](0)
     tokenShingled(train, textCol, Seq(col(idCol)), shingleSize)
-      .where(call_function("graft_might_contain", lit(sketch), xxhash64(col("__g"))))
+      .where(ColumnBridge.column(
+        BloomFilterMightContain(Literal(sketch), hashed)))
       .join(evalShingles, "__g")
       .groupBy(col(idCol))
       .agg(count(lit(1)).as("n_overlap"))

@@ -193,27 +193,26 @@ final class TradeInPipeline(
   import TradeInPipeline._
   import TradeInSchema._
 
-  private def readOrEmpty(spark: SparkSession, path: String,
-      schema: org.apache.spark.sql.types.StructType): DataFrame = {
+  private def exists(spark: SparkSession, path: String): Boolean = {
     val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) spark.read.schema(schema).parquet(path)
-    else spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
+
+  /** A missing path reads as an empty local relation, which Catalyst
+    * prunes: a union with it plans no scan and no `Union`. */
+  private def readOrEmpty(spark: SparkSession, path: String,
+      schema: org.apache.spark.sql.types.StructType): DataFrame =
+    if (exists(spark, path)) spark.read.schema(schema).parquet(path)
+    else spark.createDataFrame(java.util.List.of[org.apache.spark.sql.Row](), schema)
 
   /** Target rows in `targetSchema` shape regardless of layout: the
     * partitioned layout re-derives `TradeInDay` from directories, which
     * this drops (an explicit-schema read would reject the extra column). */
-  private def readTarget(spark: SparkSession): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(targetPath)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p))
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], targetSchema)
-    else if (partitionedTarget)
+  private def readTarget(spark: SparkSession): DataFrame =
+    if (partitionedTarget && exists(spark, targetPath))
       spark.read.parquet(targetPath)
         .select(targetSchema.fieldNames.map(org.apache.spark.sql.functions.col).toSeq: _*)
-    else spark.read.schema(targetSchema).parquet(targetPath)
-  }
+    else readOrEmpty(spark, targetPath, targetSchema)
 
   /** One daily run: fetch → stage/append → merge → counts → retention.
     * Returns the reference's inserted/updated counts plus the run's

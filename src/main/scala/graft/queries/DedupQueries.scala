@@ -358,7 +358,7 @@ private[graft] object DedupQueries {
 
     // q73's Bloom-prefiltered form: SAME fixture, SAME oracle, SAME
     // answer — the sketch (built and probed with Spark's own
-    // runtime-filter expressions via graft_bloom_agg/graft_might_contain)
+    // runtime-filter expressions, BloomFilterAggregate/BloomFilterMightContain)
     // only pre-filters the train shingles before the exact-verify join,
     // so correctness is pinned to the exact oracle while the plan is the
     // one that survives an eval set too big to broadcast.

@@ -9,8 +9,8 @@ object TestSpark {
     val warehouse = java.nio.file.Files.createTempDirectory("graft-wh").toString
     val s = SparkSession.builder()
       .master("local[4]")
-      // The production wiring under test in GraftExtensionsSpec — every
-      // suite shares the extension-enabled session.
+      // The production wiring: every suite shares the extension-enabled
+      // session, so the native as-of join's planner strategy is registered.
       .config("spark.sql.extensions", "graft.GraftExtensions")
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")

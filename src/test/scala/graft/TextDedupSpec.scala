@@ -154,6 +154,10 @@ class TextDedupSpec extends AnyFunSuite {
       expectedEvalShingles = 1000L)
     assert(bloom.exceptAll(exact).isEmpty && exact.exceptAll(bloom).isEmpty)
     assert(bloom.count() == 10L) // the i % 4 == 0 docs
+    // sketch and probe are Columns: the answer needs no SQL function,
+    // even in this session that carries GraftExtensions
+    assert(!spark.catalog.functionExists("graft_bloom_agg"))
+    assert(!spark.catalog.functionExists("graft_might_contain"))
   }
 
   test("editDistanceOnPairs: identity pair 0/1.0, known single-edit pair, prefix cap") {

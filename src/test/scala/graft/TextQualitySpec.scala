@@ -72,6 +72,27 @@ class TextQualitySpec extends AnyFunSuite {
     assert(hof == got)
   }
 
+  test("countInSet rejects a non-string array at analysis") {
+    // Without the type gate an array<int> reached execution, where
+    // UnsafeArrayData.getUTF8String reinterpreted int slots as garbage.
+    val ints = spark.range(1).select(array(lit(1), lit(2), lit(3)).as("a"))
+    val e = intercept[org.apache.spark.sql.AnalysisException] {
+      ints.select(TextFunctions.countInSet(col("a"), Seq("the", "and"))).collect()
+    }
+    assert(e.getMessage.contains("requires array<string> input"), e.getMessage)
+  }
+
+  test("winnowFingerprint is md5 of the minimum gram; a shorter text hashes whole") {
+    // 'abcd', gram 3 -> grams {abc, bcd}; gram 16 -> one truncated gram
+    val r = TestSpark.strings("t", Seq("abcd"))
+      .select(TextFunctions.winnowFingerprint(col("t"), 3),
+        least(md5(lit("abc")), md5(lit("bcd"))),
+        TextFunctions.winnowFingerprint(col("t"), 16), md5(col("t")))
+      .collect().head
+    assert(r.getString(0) == r.getString(1))
+    assert(r.getString(2) == r.getString(3))
+  }
+
   test("rareTokenStats: rarity is corpus-relative (c·V < T), exact on integers") {
     import spark.implicits._
     // Corpus: "the" appears 6×, "cat"/"dog" 1× each → T=8, V=3, mean 8/3.

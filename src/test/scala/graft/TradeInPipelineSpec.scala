@@ -100,6 +100,53 @@ class TradeInPipelineSpec extends AnyFunSuite {
       .getString(0).startsWith("2024-06-04"))
   }
 
+  test("first run: the staging write plans no empty-RDD scan and no union") {
+    import org.apache.spark.sql.execution.{QueryExecution, RDDScanExec, SparkPlan, UnionExec}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.command.DataWritingCommandExec
+    import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+    import org.apache.spark.sql.util.QueryExecutionListener
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case s: QueryStageExec => nodes(s.plan)
+      case _ => p.children.flatMap(nodes)
+    })
+    val work = java.nio.file.Files.createTempDirectory("tipe").toString
+    // a local batch, so an RDD scan can only come from the missing staging
+    val day = "2024-06-01"
+    val batch = spark.createDataFrame(java.util.List.of(
+        Row.fromSeq(TradeInSchema.rawColumns.map {
+          case "SaleInvoiceID" => "1"
+          case "TradeInDate"   => s"${day}T01:00:00Z"
+          case "TradeInAmount" => "10.00"
+          case _               => null
+        })),
+      StructType(TradeInSchema.rawColumns.map(c => StructField(c, StringType))))
+    val stagingWrites = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (nodes(qe.executedPlan).exists {
+          case DataWritingCommandExec(c: InsertIntoHadoopFsRelationCommand, _) =>
+            c.outputPath.toString.endsWith(s"$work/staging.__tmp__")
+          case _ => false
+        }) stagingWrites.add(qe.executedPlan)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val r = pipelineAt(work, day, batch).run(spark, Map())
+      assert((r.inserted, r.updated) == ((1L, 0L)))
+      // load and retention both write staging; events may arrive late
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (stagingWrites.size < 2 && System.nanoTime() < deadline) Thread.sleep(20)
+    } finally spark.listenerManager.unregister(listener)
+    assert(stagingWrites.size == 2, s"${stagingWrites.size} staging writes captured")
+    stagingWrites.forEach { plan =>
+      assert(!nodes(plan).exists(n =>
+        n.isInstanceOf[RDDScanExec] || n.isInstanceOf[UnionExec]), plan)
+    }
+  }
+
   test("partitioned target: a daily run leaves untouched TradeInDay partitions byte-identical") {
     val work = java.nio.file.Files.createTempDirectory("tipp").toString
     val d0 = "2024-05-30"

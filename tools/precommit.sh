@@ -95,17 +95,35 @@ fi
 # trait added under operators/, functions/, streaming/, sources/,
 # pipeline/, expressions/ or plans/ must be named on a code line (not a
 # comment, a string or its own declaring line; a `${...}` interpolation
-# counts as code) somewhere in src/main/scala or perfbench/src. `def main`
-# is exempt (an entry point has no caller).
+# counts as code) somewhere in src/main/scala or perfbench/src. Entry
+# points are exempt (nothing calls them): `def main`, and an object whose
+# staged body declares `def main` as a member.
 # Only added lines are checked, so existing definitions need no allowlist.
 git diff --cached -U0 -- src/main/scala/graft/operators \
     src/main/scala/graft/functions src/main/scala/graft/streaming \
     src/main/scala/graft/sources src/main/scala/graft/pipeline \
     src/main/scala/graft/expressions src/main/scala/graft/plans \
-  | sed -nE 's/^\+[[:space:]]*((final|sealed|abstract|case|implicit)[[:space:]]+)*(def|class|object|trait)[[:space:]]+([A-Za-z_][A-Za-z0-9_]*).*/\4/p' \
-  | grep -vx main | sort -u >/tmp/new_defs.txt || true
+  | sed -nE 's/^\+[[:space:]]*((final|sealed|abstract|case|implicit)[[:space:]]+)*(def|class|object|trait)[[:space:]]+([A-Za-z_][A-Za-z0-9_]*).*/\3 \4/p' \
+  | grep -vx 'def main' | sort -u >/tmp/new_defs.txt || true
+# Prints the name if a staged `object <name>` declares `def main` at its
+# own brace depth.
+entry_point() {
+  git grep --cached -l -E "(^|[[:space:]])object[[:space:]]+$1([^A-Za-z0-9_]|\$)" -- src/main/scala \
+    | while read -r f; do
+        git show ":$f" | awk -v n="$1" '
+          !inobj && $0 ~ ("(^|[ \t])object[ \t]+" n "([^A-Za-z0-9_]|$)") { inobj = 1; depth = 0; opened = 0 }
+          inobj {
+            if (depth == 1 && $0 ~ /^[ \t]*((override|final)[ \t]+)*def[ \t]+main[^A-Za-z0-9_]/) { print n; exit }
+            line = $0
+            depth += gsub(/\{/, "", line); if (depth > 0) opened = 1
+            depth -= gsub(/\}/, "", line)
+            if (opened && depth <= 0) inobj = 0
+          }'
+      done | head -n 1
+}
 : >/tmp/uncalled_def_hits.txt
-while read -r name; do
+while read -r kind name; do
+  [[ "$kind" == object && -n "$(entry_point "$name")" ]] && continue
   refs=$(git grep --cached -h -w -F -e "$name" -- src/main/scala perfbench/src \
       | grep -vE '^[[:space:]]*(\*|//|/\*)' \
       | grep -vE "(^|[^A-Za-z0-9_])(def|class|object|trait)[[:space:]]+$name([^A-Za-z0-9_]|\$)" \
@@ -118,7 +136,34 @@ if [[ -s /tmp/uncalled_def_hits.txt ]]; then
   echo "[precommit] src/main/scala or perfbench/src — call it from a product path or"
   echo "[precommit] a registry query; a test-only reference implementation belongs"
   echo "[precommit] under src/test:"
-  cat /tmp/uncalled_def_hits.txt
+  sort -u /tmp/uncalled_def_hits.txt
+  exit 1
+fi
+
+# No SQL function without a SQL caller: twelve session-injected functions
+# once had no caller but their own spec, because library code builds each
+# expression as a Column and a name inside a string is invisible to the
+# gate above. An added `FunctionIdentifier("name")` anywhere under
+# src/main/scala must be named in a string passed to `expr(`,
+# `call_function(` or `.sql(` in src/main/scala or perfbench/src.
+git diff --cached -U0 -- src/main/scala | grep -E '^\+' | grep -vE '^\+\+\+' \
+  | grep -oE 'FunctionIdentifier\("[^"]+"' | sed -E 's/^FunctionIdentifier\("//; s/"$//' \
+  | sort -u >/tmp/new_sql_fns.txt || true
+: >/tmp/uncalled_sql_fn_hits.txt
+if [[ -s /tmp/new_sql_fns.txt ]]; then
+  git grep --cached -l -E '(expr|call_function|\.sql)\(' -- src/main/scala perfbench/src \
+    | while read -r f; do
+        git show ":$f" | perl -0777 -ne 'while (/(?:\bexpr|\bcall_function|\.sql)\(\s*[sf]?(?:"""(.*?)"""|"((?:[^"\\\n]|\\.)*)")/gs) { print((defined $1 ? $1 : $2), "\n") }'
+      done >/tmp/sql_call_strings.txt
+  while read -r fn; do
+    grep -q -w -F -e "$fn" /tmp/sql_call_strings.txt || echo "$fn" >>/tmp/uncalled_sql_fn_hits.txt
+  done </tmp/new_sql_fns.txt
+fi
+if [[ -s /tmp/uncalled_sql_fn_hits.txt ]]; then
+  echo "[precommit] FAIL: new SQL function with no caller — name it in a string"
+  echo "[precommit] passed to expr(, call_function( or .sql( in src/main/scala or"
+  echo "[precommit] perfbench/src, or build the expression as a Column instead:"
+  cat /tmp/uncalled_sql_fn_hits.txt
   exit 1
 fi
 
