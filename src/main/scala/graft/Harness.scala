@@ -18,7 +18,6 @@ object Harness {
   val base: Map[String, String] = Map(
     // timestamp queries hash-differ from the DuckDB oracle in any other zone
     "spark.sql.session.timeZone" -> "UTC",
-    "spark.sql.extensions" -> "graft.GraftExtensions",
     "spark.ui.enabled" -> "false",
     // The 300 s default killed 11 refinement runs in one contended
     // session (cold pass 1030 s): a broadcast that takes >300 s wall

@@ -207,19 +207,19 @@ object Relational {
     *      ORDER BY time, side ROWS UNBOUNDED PRECEDING..CURRENT)` carries
     *      the latest right values forward into each left row.
     *
-    * Cost: exactly one shuffle of |left| + |right| and one sort — the
-    * same plan a native as-of operator would produce. Right rows sort
-    * before left rows at equal times (side 0 < 1), so a same-instant
-    * right row IS visible to the left row, matching `<=` semantics.
+    * Cost: exactly one shuffle of |left| + |right| and one sort. Right
+    * rows sort before left rows at equal times (side 0 < 1), so a
+    * same-instant right row IS visible to the left row, matching `<=`
+    * semantics.
     *
     * `rightCols` are the right-side payload columns to carry (must not
     * collide with left column names). `tieBreak` orders right rows
     * sharing (key, time) — the LAST row in that order wins (pass the
     * right id ascending so the max id is deterministic).
     *
-    * NULL contract (shared with [[asofJoinNative]], pinned in
-    * RelationalSpec): NULL keys never match on either side; right rows
-    * with a NULL `rightTime` never match (they are filtered here —
+    * NULL contract (pinned in RelationalSpec and GraftProps): NULL keys
+    * never match on either side; right rows with a NULL `rightTime`
+    * never match (they are filtered here —
     * without the filter a NULLS-FIRST null-time row heads its key group
     * and `last(ignoreNulls)` would carry its PAYLOAD to every left
     * row); left rows with a NULL `leftTime` emit the NULL-padded row
@@ -510,57 +510,5 @@ object Relational {
     }.collect()
     finally b.destroy()
     (got.toMap, total)
-  }
-
-  /** Native as-of join — same result contract as [[asofJoin]] (latest
-    * right row with `rightTime ≤ leftTime` per key, NULLs when none),
-    * executed by the custom [[graft.plans.AsofJoinExec]] merge operator
-    * instead of the union + per-column window composition: each side
-    * shuffles once on its own key and a single forward pass emits the
-    * matches (see the operator scaladoc for the cost comparison). The
-    * session must carry [[graft.GraftExtensions]] (the repo-wide
-    * default) so the planner strategy is registered.
-    *
-    * The right side is re-projected through fresh aliases so self-join
-    * shapes (left and right derived from the same frame) cannot collide
-    * on attribute ids. `rightCols` must not collide with left column
-    * names. */
-  def asofJoinNative(left: DataFrame, right: DataFrame, key: String,
-      leftTime: String, rightTime: String,
-      rightCols: Seq[String]): DataFrame = {
-    require(rightCols.nonEmpty, "asofJoinNative needs carried right cols")
-    require(!rightCols.exists(left.columns.contains),
-      s"carried right columns collide with left: " +
-        rightCols.filter(left.columns.contains).mkString(", "))
-    // the physical merge builds its orderings from the LEFT types only;
-    // a date-vs-timestamp or int-vs-long pair would plan fine and fail
-    // mid-job (ClassCastException in the interpreted ordering) or
-    // miscompare — reject at construction instead
-    require(left.schema(key).dataType == right.schema(key).dataType,
-      s"asofJoinNative: key type mismatch — left $key: " +
-        s"${left.schema(key).dataType} vs right $key: " +
-        s"${right.schema(key).dataType}")
-    require(left.schema(leftTime).dataType == right.schema(rightTime).dataType,
-      s"asofJoinNative: time type mismatch — left $leftTime: " +
-        s"${left.schema(leftTime).dataType} vs right $rightTime: " +
-        s"${right.schema(rightTime).dataType}")
-    val spark = left.sparkSession
-    // fresh exprIds for every right attribute (Alias always re-ids)
-    val rPrep = right.select(
-      (Seq(key, rightTime) ++ rightCols).distinct.map(c =>
-        col(c).as(c)): _*)
-    val lPlan = left.queryExecution.analyzed
-    val rPlan = rPrep.queryExecution.analyzed
-    def attr(p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-        n: String) = p.output.find(_.name == n).getOrElse(
-      throw new IllegalArgumentException(s"no column $n"))
-    val rVals = rightCols.map(attr(rPlan, _))
-    val outRight = rVals.map(a =>
-      org.apache.spark.sql.catalyst.expressions.AttributeReference(
-        a.name, a.dataType, nullable = true)())
-    org.apache.spark.sql.graft.ColumnBridge.ofRows(spark,
-      graft.plans.AsofJoinNode(lPlan, rPlan,
-        attr(lPlan, key), attr(rPlan, key),
-        attr(lPlan, leftTime), attr(rPlan, rightTime), rVals, outRight))
   }
 }

@@ -665,10 +665,11 @@ private[graft] object RelationalQueries {
     }),
 
 
-    // Native as-of join (custom LogicalPlan -> Strategy -> merge-pass
-    // SparkPlan): every click annotated with the user's latest
-    // at-or-before purchase value. The right side pre-collapses to one
-    // row per (user, ts) so exact-tie winners are deterministic.
+    // As-of join checked against DuckDB's native ASOF LEFT JOIN, a second
+    // oracle for Relational.asofJoin next to q43's LATERAL ... LIMIT 1:
+    // every click annotated with the user's latest at-or-before purchase
+    // value. The right side pre-collapses to one row per (user, ts), so
+    // exact ties need no tieBreak.
     "q222_asof_native" -> ((s, d) => {
       val e = load(s, d, "events")
       val clicks = e.filter(col("event_type") === "click")
@@ -677,8 +678,9 @@ private[graft] object RelationalQueries {
         .groupBy(col("user_id"), col("ts"))
         .agg(max(col("value")).as("purchase_value"))
         .withColumnRenamed("ts", "pts")
-      Relational.asofJoinNative(clicks, purchases, "user_id", "ts", "pts",
+      Relational.asofJoin(clicks, purchases, "user_id", "ts", "pts",
           Seq("purchase_value"))
+        .select("user_id", "ts", "event_id", "purchase_value")
         .transform(ordered1(_, col("user_id"), col("ts"), col("event_id")))
     }),
 
@@ -1302,7 +1304,7 @@ private[graft] object RelationalQueries {
 
 
     // DuckDB's own ASOF LEFT JOIN is the oracle — the semantics the
-    // custom operator must reproduce exactly.
+    // composed as-of join must reproduce exactly.
     "q222_asof_native" ->
       """WITH clicks AS (SELECT user_id, ts, event_id FROM events
         |  WHERE event_type = 'click'),

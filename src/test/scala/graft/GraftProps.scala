@@ -897,20 +897,19 @@ object GraftProps extends Properties("graft") {
         got == expect
     }
 
-  // NULL-bearing as-of equivalence: the native merge-pass operator and
-  // the composed union+window form implement ONE contract, including
-  // NULL keys (never match), NULL right times (never match, never
-  // stall the merge), and NULL left times (NULL-padded row). Random
-  // tables with ~25% NULLs in every role keep all three branches hot —
-  // the round-10 ADVICE stall was exactly a case a fixed fixture
-  // missed.
+  // NULL-bearing as-of join vs a driver replay of its contract: the
+  // latest right row with rt <= lt among the left row's key, where NULL
+  // keys never match, NULL right times never match, and NULL left times
+  // give the NULL-padded row. Random tables with ~25% NULLs in every
+  // role keep all three branches hot — a NULL-time right row heading
+  // its key group is exactly a case a fixed fixture once missed.
   private val genAsofRow: Gen[(Option[Int], Option[Int], Int)] = for {
     k <- Gen.option(Gen.choose(0, 3))
     t <- Gen.option(Gen.choose(0, 5))
     v <- Gen.choose(0, 100)
   } yield (k, t, v)
 
-  property("asofJoinNative equals composed asofJoin under random NULLs") =
+  property("asofJoin equals a driver replay under random NULLs") =
     forAll(Gen.listOfN(10, genAsofRow), Gen.listOfN(10, genAsofRow)) {
       (l0, r0) =>
         import spark.implicits._
@@ -921,24 +920,27 @@ object GraftProps extends Properties("graft") {
           .toDF("k", "lt", "lid")
           .select(col("k").cast("long").as("k"), col("lt"), col("lid"))
         // one right row per (k, rt) so exact-tie winners are
-        // deterministic in BOTH forms (the q222 fixture discipline)
+        // deterministic (the q222 fixture discipline)
         val right = r0.map { case (k, t, v) =>
           (k.map(_.toLong), ts(t), v.toDouble) }
           .toDF("k", "rt", "price")
           .select(col("k").cast("long").as("k"), col("rt"), col("price"))
           .groupBy("k", "rt").agg(max(col("price")).as("price"))
-        val native = Relational.asofJoinNative(
+        val got = Relational.asofJoin(
             left, right, "k", "lt", "rt", Seq("price"))
           .select("lid", "price").collect()
           .map(r => r.getLong(0) ->
             (if (r.isNullAt(1)) Double.NaN else r.getDouble(1))).toMap
-        val composed = Relational.asofJoin(
-            left, right, "k", "lt", "rt", Seq("price"))
-          .select("lid", "price").collect()
-          .map(r => r.getLong(0) ->
-            (if (r.isNullAt(1)) Double.NaN else r.getDouble(1))).toMap
-        (native.keySet == composed.keySet) && native.keySet.forall { id =>
-          val (a, b) = (native(id), composed(id))
+        val rightRows = r0.collect { case (Some(k), Some(t), v) => (k, t, v) }
+          .groupBy { case (k, t, _) => (k, t) }.values.map(_.maxBy(_._3))
+        val expect = l0.zipWithIndex.map { case ((lk, lt, _), i) =>
+          val hits = for (k <- lk.toSeq; t <- lt.toSeq;
+              (rk, rt, v) <- rightRows if rk == k && rt <= t) yield (rt, v)
+          i.toLong -> (if (hits.isEmpty) Double.NaN
+            else hits.maxBy(_._1)._2.toDouble)
+        }.toMap
+        (got.keySet == expect.keySet) && got.keySet.forall { id =>
+          val (a, b) = (got(id), expect(id))
           (a.isNaN && b.isNaN) || a == b
         }
     }

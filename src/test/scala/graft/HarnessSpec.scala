@@ -25,10 +25,9 @@ class HarnessSpec extends AnyFunSuite {
     assert(Harness.auditConf == Map("spark.sql.shuffle.partitions" -> "32"))
   }
 
-  test("shared base: UTC, graft extensions, UI off, 3600 s broadcast timeout") {
+  test("shared base: UTC, UI off, 3600 s broadcast timeout") {
     assert(Harness.base == Map(
       "spark.sql.session.timeZone" -> "UTC",
-      "spark.sql.extensions" -> "graft.GraftExtensions",
       "spark.ui.enabled" -> "false",
       "spark.sql.broadcastTimeout" -> "3600"))
     // a caller's conf never overrides a base key

@@ -18,6 +18,7 @@ class RelationalSpec extends AnyFunSuite {
     val left = Seq(
       (1L, t("2024-01-01 10:00:00"), "e1"),  // after both quotes
       (1L, t("2024-01-01 09:00:00"), "e2"),  // same instant as quote b
+      (1L, t("2024-01-01 07:00:00"), "e4"),  // before every quote of key 1
       (2L, t("2024-01-01 10:00:00"), "e3"))  // key with no quotes
       .toDF("k", "ts", "ev")
     val right = Seq(
@@ -29,8 +30,9 @@ class RelationalSpec extends AnyFunSuite {
         tieBreak = Seq(col("q").asc))
       .select("ev", "q").as[(String, String)].collect().toMap
     // Tie at 09:00 resolved to the LAST by ascending q => "qc"; the
-    // same-instant event sees it (<=); key 2 carries null.
-    assert(got == Map("e1" -> "qc", "e2" -> "qc", "e3" -> null))
+    // same-instant event sees it (<=); an event before every quote of
+    // its key and key 2 carry null.
+    assert(got == Map("e1" -> "qc", "e2" -> "qc", "e4" -> null, "e3" -> null))
   }
 
   test("intervalJoin matches the naive BETWEEN theta-join") {
@@ -203,60 +205,7 @@ class RelationalSpec extends AnyFunSuite {
     assert(out.toList == List(("g", 3L, 4L, 0.166667), ("h", 2L, 4L, 0.0)))
   }
 
-  test("asofJoinNative equals the composed asofJoin and plans AsofJoinExec") {
-    import java.sql.Timestamp
-    def ts(x: String) = Timestamp.valueOf(x)
-    val left = Seq(
-      (1L, ts("2024-01-01 10:00:00"), "l1"),
-      (1L, ts("2024-01-01 11:00:00"), "l2"),
-      (2L, ts("2024-01-01 09:00:00"), "l3"), // before any right row
-      (3L, ts("2024-01-01 12:00:00"), "l4")  // key with no right rows
-    ).toDF("k", "lt", "payload")
-    val right = Seq(
-      (1L, ts("2024-01-01 09:30:00"), 10.0),
-      (1L, ts("2024-01-01 10:30:00"), 20.0),
-      (1L, ts("2024-01-01 11:00:00"), 30.0), // exact tie: matches l2
-      (2L, ts("2024-01-01 09:30:00"), 40.0)
-    ).toDF("k", "rt", "price")
-    val native = Relational.asofJoinNative(left, right, "k", "lt", "rt",
-      Seq("price"))
-    val got = native.orderBy("k", "lt").collect()
-      .map(r => (r.getLong(0), r.getString(2),
-        if (r.isNullAt(3)) -1.0 else r.getDouble(3)))
-    assert(got.toSeq == Seq((1L, "l1", 10.0), (1L, "l2", 30.0),
-      (2L, "l3", -1.0), (3L, "l4", -1.0)))
-    // the custom physical operator actually planned
-    assert(native.queryExecution.executedPlan.toString
-      .contains("AsofJoin"))
-    // equivalence with the composed union+window form
-    val composed = Relational.asofJoin(left, right, "k", "lt", "rt",
-      Seq("price"))
-    val a = native.select("k", "lt", "payload", "price").collect()
-      .map(_.toString).sorted
-    val b = composed.select("k", "lt", "payload", "price").collect()
-      .map(_.toString).sorted
-    assert(a.toSeq == b.toSeq)
-    // self-join shape: both sides derived from one frame (fresh ids)
-    val ev = Seq((1L, ts("2024-01-01 10:00:00"), "click", 1.0),
-      (1L, ts("2024-01-01 09:00:00"), "buy", 9.0))
-      .toDF("k", "t", "typ", "v")
-    val selfj = Relational.asofJoinNative(
-      ev.filter(col("typ") === "click").select("k", "t"),
-      ev.filter(col("typ") === "buy")
-        .select(col("k"), col("t").as("rt"), col("v").as("buy_v")),
-      "k", "t", "rt", Seq("buy_v"))
-    assert(selfj.collect().head.getDouble(2) == 9.0)
-    // NULL left key emits the padded row, never a match
-    val lNull = Seq((Option.empty[java.lang.Long],
-      ts("2024-01-01 10:00:00"))).toDF("k", "lt")
-    val nn = Relational.asofJoinNative(
-      lNull.select(col("k").cast("long").as("k"), col("lt")),
-      right, "k", "lt", "rt", Seq("price")).collect()
-    assert(nn.length == 1 && nn.head.isNullAt(2))
-  }
-
-  test("asofJoin NULL contract: native and composed agree on null " +
-    "keys and timestamps") {
+  test("asofJoin NULL contract: null keys and timestamps") {
     import java.sql.Timestamp
     def ts(x: String): Timestamp = Timestamp.valueOf(x)
     def tsOpt(x: String): Option[Timestamp] = Some(Timestamp.valueOf(x))
@@ -267,45 +216,19 @@ class RelationalSpec extends AnyFunSuite {
       (Option.empty[Long], tsOpt("2024-01-01 10:00:00"), "null_lk"))
       .toDF("k", "lt", "tag")
     // right: a NULL-time row HEADS key 1's sort group (NULLS FIRST) —
-    // the regression shape: pre-fix the native merge stalled on it and
-    // NULL-padded every valid match behind it; pre-fix the composed
-    // form carried its PAYLOAD (99.0) forward instead. Plus a NULL-key
-    // right row that must never match anything.
+    // the regression shape: pre-fix the composed form carried its
+    // PAYLOAD (99.0) forward. Plus a NULL-key right row that must never
+    // match anything.
     val right = Seq(
       (Option(1L), Option.empty[Timestamp], 99.0),
       (Option(1L), tsOpt("2024-01-01 09:00:00"), 10.0),
       (Option.empty[Long], tsOpt("2024-01-01 09:00:00"), 50.0))
       .toDF("k", "rt", "price")
     val expect = Map("ok" -> 10.0, "null_lt" -> -1.0, "null_lk" -> -1.0)
-    for ((name, df) <- Seq(
-      "native" -> Relational.asofJoinNative(left, right, "k", "lt", "rt",
-        Seq("price")),
-      "composed" -> Relational.asofJoin(left, right, "k", "lt", "rt",
-        Seq("price")))) {
-      val got = df.select("tag", "price").collect()
-        .map(r => r.getString(0) ->
-          (if (r.isNullAt(1)) -1.0 else r.getDouble(1))).toMap
-      assert(got == expect, s"$name diverges from the shared NULL contract")
-    }
-  }
-
-  test("asofJoinNative rejects mismatched key/time types at construction") {
-    import java.sql.Timestamp
-    val left = Seq((1L, Timestamp.valueOf("2024-01-01 10:00:00")))
-      .toDF("k", "lt")
-    val rightIntKey = Seq((1, Timestamp.valueOf("2024-01-01 09:00:00"), 1.0))
-      .toDF("k", "rt", "price")
-    val e1 = intercept[IllegalArgumentException] {
-      Relational.asofJoinNative(left, rightIntKey, "k", "lt", "rt",
-        Seq("price"))
-    }
-    assert(e1.getMessage.contains("key type mismatch"))
-    val rightDateTime = Seq((1L, java.sql.Date.valueOf("2024-01-01"), 1.0))
-      .toDF("k", "rt", "price")
-    val e2 = intercept[IllegalArgumentException] {
-      Relational.asofJoinNative(left, rightDateTime, "k", "lt", "rt",
-        Seq("price"))
-    }
-    assert(e2.getMessage.contains("time type mismatch"))
+    val got = Relational.asofJoin(left, right, "k", "lt", "rt", Seq("price"))
+      .select("tag", "price").collect()
+      .map(r => r.getString(0) ->
+        (if (r.isNullAt(1)) -1.0 else r.getDouble(1))).toMap
+    assert(got == expect)
   }
 }

@@ -9,9 +9,6 @@ object TestSpark {
     val warehouse = java.nio.file.Files.createTempDirectory("graft-wh").toString
     val s = SparkSession.builder()
       .master("local[4]")
-      // The production wiring: every suite shares the extension-enabled
-      // session, so the native as-of join's planner strategy is registered.
-      .config("spark.sql.extensions", "graft.GraftExtensions")
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.warehouse.dir", warehouse)

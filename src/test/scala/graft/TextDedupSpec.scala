@@ -154,8 +154,7 @@ class TextDedupSpec extends AnyFunSuite {
       expectedEvalShingles = 1000L)
     assert(bloom.exceptAll(exact).isEmpty && exact.exceptAll(bloom).isEmpty)
     assert(bloom.count() == 10L) // the i % 4 == 0 docs
-    // sketch and probe are Columns: the answer needs no SQL function,
-    // even in this session that carries GraftExtensions
+    // sketch and probe are Columns: the answer needs no SQL function
     assert(!spark.catalog.functionExists("graft_bloom_agg"))
     assert(!spark.catalog.functionExists("graft_might_contain"))
   }

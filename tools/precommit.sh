@@ -56,7 +56,7 @@ fi
 G=src/main/scala/graft
 if grep -rnE --include='*.scala' 'sys\.env|@volatile' \
     $G/operators $G/pipeline $G/streaming $G/queries $G/functions \
-    $G/expressions $G/plans $G/QuerySupport.scala $G/SparkEntry.scala \
+    $G/expressions $G/QuerySupport.scala $G/SparkEntry.scala \
     $G/TradeInQueries.scala $G/MediaQueries.scala \
     | grep -vE '^[^:]+:[0-9]+:[[:space:]]*(\*|//|/\*)' >/tmp/flag_hits.txt \
     && [[ -s /tmp/flag_hits.txt ]]; then
